@@ -44,6 +44,11 @@ def main() -> None:
                          "unbackfilled segments contribute no evidence)")
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
+    # clamp paging the way QueryEngine.search does: every path below
+    # asks its scorer for (page + 1) * page_size rows
+    args.page = max(args.page, 0)
+    if args.page_size <= 0:
+        args.page_size = 10
 
     from nadry_spark.plans.query import QueryEngine
     from nadry_spark.session import get_spark

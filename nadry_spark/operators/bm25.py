@@ -1,34 +1,52 @@
-"""BM25 top-k over compressed segments: distributed block-max WAND.
+"""BM25 top-k over compressed segments: one scoring core, distributed
+block-max WAND.
 
 north_star: "multi-term conjunctive/disjunctive top-k via posting-list
 intersection with block-max WAND pruning and a bounded min-heap".
 
-Architecture: shards partition the doc space, so per-shard scoring is
-exact and independent; the global top-k is the k-way merge (orderBy +
-limit k on <= n_shards * k rows). Two shard scorers, identical output:
+Every top-k entry point is a thin wrapper over one core, ``_topk``,
+that ranks a QUERYSET (query_id -> index terms) over a segment FAMILY:
+the (segment, tombstoned doc_nos) pairs of a MultiSegmentIndex, or
+``[(index, ())]`` for a SegmentIndex. A single query is Q=1;
+``bmw_block_stats`` shares the term resolution. The core:
 
-* ``taat`` — term-at-a-time, numpy-vectorized dense accumulator.
-  No per-posting Python; usually fastest when shard posting lists fit
-  the accumulator (they do by construction: accumulator = shard_size
-  floats).
-* ``bmw`` — document-at-a-time block-max WAND with a bounded min-heap.
-  Skips whole blocks without decoding when the sum of current block
-  max scores can't beat the heap threshold. Wins when k is small and
-  query terms have very long lists with selective score distribution.
+1. resolves terms (``_resolve``): live df (minus ``df_corrections``),
+   missing-term and conjunctive drops, idf from the family's ``meta``;
+   a queryset with nothing left returns its empty frame without a job;
+2. scores (``_score``) each segment's term-pruned blocks per shard —
+   shards partition the doc space, so per-shard top-k is exact — with
+   one of two scorers of identical output:
+   * ``taat`` — term-at-a-time numpy accumulators; each block of the
+     term union is decoded once per shard for every query using it;
+   * ``bmw`` — document-at-a-time block-max WAND with a bounded
+     min-heap, Q=1 only; skips whole blocks without decoding when the
+     block maxima can't beat the heap threshold (wins for small k and
+     long, selective lists);
+3. finishes: if ``warm()`` pinned every segment's docmap, the
+   ``(query_id, _seg, doc_no, score)`` frame collects in ONE job and
+   merges and enriches on the driver; otherwise a distributed
+   per-query top-k and a broadcast docmap join.
 
-Both support disjunctive (OR) and conjunctive (AND) modes. idf is the
-Lucene/Robertson BM25+ form ln(1 + (N - df + 0.5)/(df + 0.5)) — always
-positive, monotone in rarity.
+Ties break on ``doc_no`` ascending for one segment (``bm25_topk``,
+``bm25_queryset_topk``) and on ``doc_id`` ascending for a family
+(``bm25_topk_multi``, ``bm25_queryset_topk_multi``). The queryset
+entry points are TAAT-only and always return the lazy distributed
+frame: jobs/batch_rank.py writes it out, and its plan shows the
+term-pruned scan.
+
+idf is the Lucene/Robertson BM25+ form ln(1 + (N - df + 0.5)/(df +
+0.5)) — always positive, monotone in rarity.
 """
-
 from __future__ import annotations
 
 import heapq
+import itertools
 import math
+from functools import reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nadry_spark.functions.tokenizer import tokenize
@@ -37,20 +55,42 @@ from nadry_spark.operators.codecs import bm25_tfnorm, decode_posting_block
 from nadry_spark.sources.segments import SegmentIndex
 
 TOPK_SCHEMA = "doc_no long, score double"
+QSET_SCHEMA = "query_id long, doc_no long, score double"
+_COL_TYPES = {
+    "query_id": "long", "doc_id": "string", "url": "string",
+    "doc_no": "long", "score": "double",
+}
 
 
 def bm25_idf(n_docs: int, df: int) -> float:
     return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
-def _shard_taat(k: int, k1: float, b: float, avgdl: float, shard_size: int,
-                idf_map: dict[str, float], n_query_terms: int, conjunctive: bool,
-                exclude: frozenset = frozenset(), codec: str = "varint"):
+def _shard_taat(
+    k: int, k1: float, b: float, avgdl: float, shard_size: int,
+    q_ids: list[int], q_terms: list[list[str]], idf_map: dict[str, float],
+    conjunctive: bool, exclude: frozenset = frozenset(), codec: str = "varint",
+):
+    """Term-at-a-time shard scorer for a queryset: every posting block
+    of the queryset's TERM UNION is decoded exactly ONCE per shard, its
+    idf*tfnorm contribution accumulated into each query that uses the
+    term. Memory is O(n_queries x shard_size) accumulator floats;
+    shard_size is docs-per-shard (bounded by construction at any corpus
+    size), so batch the queryset if Q is huge."""
+    term_to_qs: dict[str, list[int]] = {}
+    for qi, ts in enumerate(q_terms):
+        for t in ts:
+            term_to_qs.setdefault(t, []).append(qi)
+    nq = len(q_terms)
+    need = np.array([len(ts) for ts in q_terms], dtype=np.int32)
+
     def score(key, pdf: pd.DataFrame):
         base = int(key[0]) * shard_size
-        scores = np.zeros(shard_size, dtype=np.float64)
-        seen_terms = np.zeros(shard_size, dtype=np.int32)
+        scores = np.zeros((nq, shard_size), dtype=np.float64)
+        seen = np.zeros((nq, shard_size), dtype=np.int32)
         for term, tpdf in pdf.groupby("term"):
+            contrib = np.zeros(shard_size, dtype=np.float64)
+            present = np.zeros(shard_size, dtype=np.int32)
             idf = idf_map[term]
             for docs_bin, tfs_bin, dls_bin in zip(
                 tpdf["docs_bin"], tpdf["tfs_bin"], tpdf["dls_bin"]
@@ -59,35 +99,46 @@ def _shard_taat(k: int, k1: float, b: float, avgdl: float, shard_size: int,
                     docs_bin, tfs_bin, dls_bin, codec
                 )
                 idx = (doc_nos - np.uint64(base)).astype(np.int64)
-                scores[idx] += idf * bm25_tfnorm(tfs, dls, avgdl, k1, b)
-                seen_terms[idx] += 1
-        if conjunctive:
-            mask = seen_terms == n_query_terms
-        else:
-            mask = seen_terms > 0
-        cand = np.nonzero(mask)[0]
-        if exclude and cand.size:
-            # tombstoned doc_nos (re-crawls superseded by a newer
-            # segment) drop BEFORE top-k selection so the k slots fill
-            # with live docs
-            cand = cand[~np.isin(cand + base, np.fromiter(exclude, dtype=np.int64))]
-        if cand.size == 0:
-            return pd.DataFrame({"doc_no": [], "score": []}).astype(
-                {"doc_no": "int64", "score": "float64"}
-            )
-        topn = min(k, cand.size)
-        # top-k by (score desc, doc_no asc). Full lexsort, NOT
-        # argpartition: argpartition picks an ARBITRARY member of a
-        # score tie straddling the k boundary, so the doc_no tie-break
-        # only applied to whichever members survived the partition
-        # (found by the tests/test_bmw_fuzz.py property fuzz — BMW's
-        # heap honored the tie rule, TAAT didn't). cand is bounded by
-        # shard_size, so the exact sort is O(shard_size log) — noise.
-        order = np.lexsort((cand, -scores[cand]))
-        sel = cand[order[:topn]]
-        return pd.DataFrame(
-            {"doc_no": (sel + base).astype("int64"), "score": scores[sel]}
+                contrib[idx] += idf * bm25_tfnorm(tfs, dls, avgdl, k1, b)
+                present[idx] = 1
+            for qi in term_to_qs.get(term, ()):
+                scores[qi] += contrib
+                seen[qi] += present
+        excl_arr = (
+            np.fromiter(exclude, dtype=np.int64) if exclude else None
         )
+        outs = []
+        for qi in range(nq):
+            mask = (seen[qi] == need[qi]) if conjunctive else (seen[qi] > 0)
+            cand = np.nonzero(mask)[0]
+            if excl_arr is not None and cand.size:
+                # tombstoned doc_nos (re-crawls superseded by a newer
+                # segment) drop BEFORE top-k selection so the k slots
+                # fill with live docs
+                cand = cand[~np.isin(cand + base, excl_arr)]
+            topn = min(k, cand.size)
+            if topn < 1:
+                continue
+            # top-k by (score desc, doc_no asc). Full lexsort, NOT
+            # argpartition: argpartition picks an ARBITRARY member of a
+            # score tie straddling the k boundary, so the doc_no
+            # tie-break would only apply to whichever members survived
+            # the partition (found by the tests/test_bmw_fuzz.py
+            # property fuzz — BMW's heap honored the tie rule, TAAT
+            # didn't). cand is bounded by shard_size, so the exact sort
+            # is O(shard_size log) — noise.
+            order = np.lexsort((cand, -scores[qi][cand]))
+            sel = cand[order[:topn]]
+            outs.append(pd.DataFrame({
+                "query_id": np.full(topn, q_ids[qi], dtype=np.int64),
+                "doc_no": (sel + base).astype("int64"),
+                "score": scores[qi][sel],
+            }))
+        if not outs:
+            return pd.DataFrame(
+                {"query_id": [], "doc_no": [], "score": []}
+            ).astype({"query_id": "int64", "doc_no": "int64", "score": "float64"})
+        return pd.concat(outs, ignore_index=True)
 
     return score
 
@@ -214,7 +265,7 @@ def _shard_bmw(k: int, k1: float, b: float, avgdl: float,
                 heapq.heappush(heap, item)
                 if len(heap) == k:
                     threshold = heap[0][0]
-            elif item > heap[0]:
+            elif heap and item > heap[0]:  # heap stays empty when k < 1
                 heapq.heapreplace(heap, item)
                 threshold = heap[0][0]
 
@@ -284,6 +335,135 @@ def _shard_bmw(k: int, k1: float, b: float, avgdl: float,
     return score
 
 
+def _resolve(index, queries: dict[int, list[str]], conjunctive: bool):
+    """Term resolution of a queryset against a family: returns
+    ``(q_ids, q_terms, idf_map)`` for the queries left to score.
+
+    Tokens are index terms. A term with no live posting in the family
+    drops out; a conjunctive query that lost a term can never match and
+    drops out whole; a query with no term left drops out."""
+    distinct = {qid: sorted(set(ts)) for qid, ts in queries.items()}
+    union = sorted({t for ts in distinct.values() for t in ts})
+    if not union:
+        return [], [], {}
+    stats = index.term_stats(union)
+    present = [t for t in union if t in stats]
+    # df correction: superseded docs still sit in their segment's terms
+    # table; subtract the tombstoned docs that actually contain each
+    # term (cached on the handle — one batched probe per unseen term,
+    # nothing per query on the steady-state serving path)
+    corr = index.df_corrections(present) if hasattr(index, "segments") else {}
+    live_df = {t: stats[t]["df"] - corr.get(t, 0) for t in present}
+    q_ids, q_terms = [], []
+    for qid, ts in distinct.items():
+        terms = [t for t in ts if live_df.get(t, 0) > 0]
+        if terms and not (conjunctive and len(terms) < len(ts)):
+            q_ids.append(qid)
+            q_terms.append(terms)
+    n_docs = index.meta["n_docs"]
+    idf_map = {t: bm25_idf(n_docs, live_df[t]) for ts in q_terms for t in ts}
+    return q_ids, q_terms, idf_map
+
+
+def _score(family, meta: dict, q_ids: list[int], q_terms: list[list[str]],
+           idf_map: dict[str, float], k: int, mode: str,
+           conjunctive: bool) -> list[DataFrame]:
+    """Per segment, the (query_id, doc_no, score) per-shard top-k frame."""
+    terms = sorted(idf_map)
+    frames = []
+    for seg, excl in family:
+        # codec and shard size are per-SEGMENT properties (segments of
+        # one family may be built with different codecs across
+        # compactions); k1/b/avgdl are the family's global statistics
+        args = dict(
+            k=k, k1=meta["k1"], b=meta["b"], avgdl=meta["avgdl"],
+            idf_map=idf_map, conjunctive=conjunctive,
+            exclude=frozenset(int(x) for x in excl),
+            codec=seg.meta.get("codec", "varint"),
+        )
+        shards = seg.blocks.where(F.col("term").isin(terms)).groupBy("shard")
+        if mode == "taat":
+            scorer = _shard_taat(shard_size=seg.meta["shard_size"],
+                                 q_ids=q_ids, q_terms=q_terms, **args)
+            frames.append(shards.applyInPandas(scorer, QSET_SCHEMA))
+        else:
+            scorer = _shard_bmw(
+                n_query_terms=len(q_terms[0]),
+                bound_inflation=max(1.0, meta["avgdl"] / seg.meta["avgdl"]),
+                **args,
+            )
+            frames.append(
+                shards.applyInPandas(scorer, TOPK_SCHEMA).select(
+                    F.lit(q_ids[0]).cast("long").alias("query_id"), "doc_no", "score"
+                )
+            )
+    return frames
+
+
+def _top(df: DataFrame, k: int, order: list, fn=F.row_number) -> DataFrame:
+    w = Window.partitionBy("query_id").orderBy(*order)
+    return df.withColumn("_rn", fn().over(w)).where(F.col("_rn") <= k).drop("_rn")
+
+
+def _topk(index, queries: dict[int, list[str]], k: int, mode: str,
+          conjunctive: bool, cols: tuple[str, ...],
+          lazy: bool = False) -> DataFrame:
+    """The scoring core behind every entry point: ``queries`` (query_id
+    -> index terms) ranked over ``index``'s segment family, <= k rows
+    per query in (query_id, score desc, tie asc) order, projected to
+    ``cols``. ``lazy`` keeps the distributed finish even when warm."""
+    spark = index.spark
+    ddl = ", ".join(f"{c} {_COL_TYPES[c]}" for c in cols)
+    multi = hasattr(index, "segments")
+    family = list(zip(index.segments, index.excluded)) if multi else [(index, ())]
+    tie = "doc_id" if multi else "doc_no"
+    if k < 1:
+        return empty_df(spark, ddl)
+    q_ids, q_terms, idf_map = _resolve(index, queries, conjunctive)
+    if not q_ids:
+        return empty_df(spark, ddl)
+    frames = _score(family, index.meta, q_ids, q_terms, idf_map, k, mode, conjunctive)
+
+    if not lazy and all(s._docmap_dict is not None for s, _ in family):
+        # serving fast path (docmaps pinned in the driver at warm()):
+        # ONE Spark job collects the per-shard top-ks (<= n_segments *
+        # n_shards * k rows per query), then the k-way merge and the
+        # enrichment run driver-side — the join formulation costs a
+        # broadcast materialization job per segment per query. The
+        # rows come back as a LocalRelation (local_rows_df), so the
+        # caller's collect() runs no second job.
+        merged = reduce(DataFrame.unionByName,
+                        [f.withColumn("_seg", F.lit(i)) for i, f in enumerate(frames)])
+        rows = []
+        for r in merged.collect():
+            row = r.asDict()
+            row["doc_id"], row["url"] = family[row["_seg"]][0]._docmap_dict[row["doc_no"]]
+            rows.append(row)
+        rows.sort(key=lambda x: (x["query_id"], -x["score"], x[tie]))
+        top = [
+            tuple(row[c] for c in cols)
+            for _, g in itertools.groupby(rows, key=lambda x: x["query_id"])
+            for row in itertools.islice(g, k)
+        ]
+        return local_rows_df(spark, ddl, top)
+
+    # distributed finish: a per-query top-k per segment BEFORE its
+    # docmap broadcast bounds the broadcast near Q*k rows (the raw
+    # frame holds up to n_shards*Q*k). In a family, rank() over the
+    # score keeps every row tied with the segment's k-th score, so the
+    # doc_id tie-break of the merge sees whole ties.
+    seg_order = [F.desc("score")] + ([] if multi else [F.asc("doc_no")])
+    parts = [
+        seg.docmap.join(F.broadcast(_top(f, k, seg_order, F.rank)), "doc_no")
+        .select("query_id", "doc_id", "url", "doc_no", "score")
+        for (seg, _), f in zip(family, frames)
+    ]
+    out = reduce(DataFrame.unionByName, parts)
+    if multi:
+        out = _top(out, k, [F.desc("score"), F.asc("doc_id")])
+    return out.orderBy("query_id", F.desc("score"), F.asc(tie)).select(*cols)
+
+
 def bm25_topk(
     index: SegmentIndex,
     query: str,
@@ -292,7 +472,7 @@ def bm25_topk(
     conjunctive: bool = False,
     tokens: list[str] | None = None,
 ) -> DataFrame:
-    """Tokenize -> prune blocks by term -> per-shard top-k -> global top-k.
+    """BM25 top-k of one query over one segment.
 
     Returns (doc_id, url, doc_no, score) ordered by (score desc, doc_no).
 
@@ -302,57 +482,9 @@ def bm25_topk(
     restem ('happili'->'happi'), and special tokens shred ('num:2024'
     -> 'num','_num_') — which also falsely empties conjunctive mode.
     """
-    spark = index.spark
-    tokens = tokenize(query) if tokens is None else list(tokens)
-    distinct = sorted(set(tokens))
-    ddl = "doc_id string, url string, doc_no long, score double"
-    if not distinct:
-        return empty_df(spark, ddl)
-    stats = index.term_stats(distinct)
-    terms = [t for t in distinct if t in stats]
-    if not terms:
-        return empty_df(spark, ddl)
-    if conjunctive and len(terms) < len(distinct):
-        return empty_df(spark, ddl)  # a missing term can never match conjunctively
-    n_docs = index.meta["n_docs"]
-    idf_map = {t: bm25_idf(n_docs, stats[t]["df"]) for t in terms}
-
-    blocks = index.blocks.where(F.col("term").isin(terms))
-    meta = index.meta
-    args = dict(
-        k=k, k1=meta["k1"], b=meta["b"], avgdl=meta["avgdl"],
-        idf_map=idf_map, n_query_terms=len(terms), conjunctive=conjunctive,
-        codec=meta.get("codec", "varint"),
-    )
-    if mode == "taat":
-        scorer = _shard_taat(shard_size=meta["shard_size"], **args)
-    else:
-        scorer = _shard_bmw(**args)
-
-    per_shard = blocks.groupBy("shard").applyInPandas(scorer, TOPK_SCHEMA)
-    topk = per_shard.orderBy(F.desc("score"), F.asc("doc_no")).limit(k)
-    dm = getattr(index, "_docmap_dict", None)
-    if dm is not None:
-        # serving fast path (docmap pinned in the driver at warm()):
-        # ONE Spark job — the per-shard scoring — then the <=k winners
-        # enrich from the driver dict; the broadcast join below costs a
-        # second materialization job per query for the same rows. Same
-        # rows, same (score desc, doc_no) order. local_rows_df returns
-        # them as a LocalRelation, so the caller's collect() runs no
-        # second job (createDataFrame parallelized into a full task
-        # set — ~250 ms per call on the bench box).
-        rows = topk.collect()
-        if all(r["doc_no"] in dm for r in rows):
-            data = [
-                (dm[r["doc_no"]][0], dm[r["doc_no"]][1], r["doc_no"], r["score"])
-                for r in rows
-            ]
-            return local_rows_df(spark, ddl, data)
-    return (
-        index.docmap.join(F.broadcast(topk), "doc_no")
-        .select("doc_id", "url", "doc_no", "score")
-        .orderBy(F.desc("score"), F.asc("doc_no"))
-    )
+    toks = tokenize(query) if tokens is None else list(tokens)
+    return _topk(index, {0: toks}, k, mode, conjunctive,
+                 ("doc_id", "url", "doc_no", "score"))
 
 
 def bm25_topk_multi(
@@ -369,9 +501,8 @@ def bm25_topk_multi(
 
     Global statistics are tombstone-exact: N/avgdl come from the
     index's live-doc meta, and per-term df subtracts superseded docs
-    containing the term (msi.df_corrections — probed once per term and
-    cached on the handle, NOT per query), so SCORES are identical to a
-    fresh single-segment rebuild of the latest corpus. BMW mode
+    containing the term (msi.df_corrections), so SCORES are identical
+    to a fresh single-segment rebuild of the latest corpus. BMW mode
     inflates each segment's stored block maxima by
     max(1, avgdl_global/avgdl_segment) to stay admissible under the
     global length normalization (see _TermCursor.bound_scale).
@@ -387,83 +518,8 @@ def bm25_topk_multi(
     corpora, and exact-mode scoring (the reference-parity path) has
     the cluster-size-independent tie order.
     """
-    spark = msi.spark
     toks = tokenize(query) if tokens is None else list(tokens)
-    distinct = sorted(set(toks))
-    ddl = "doc_id string, url string, score double"
-    if not distinct:
-        return empty_df(spark, ddl)
-    stats = msi.term_stats(distinct)
-    terms = [t for t in distinct if t in stats]
-    if not terms:
-        return empty_df(spark, ddl)
-    # df correction: superseded docs still sit in their segment's terms
-    # table; subtract the excluded docs that actually contain each term
-    # (cached on the handle — one batched probe per previously-unseen
-    # term, nothing per query on the steady-state serving path)
-    df_corr = msi.df_corrections(terms)
-    live_df = {t: stats[t]["df"] - df_corr.get(t, 0) for t in terms}
-    terms = [t for t in terms if live_df[t] > 0]
-    if not terms:
-        return empty_df(spark, ddl)
-    if conjunctive and len(terms) < len(distinct):
-        return empty_df(spark, ddl)
-
-    meta = msi.meta
-    idf_map = {t: bm25_idf(meta["n_docs"], live_df[t]) for t in terms}
-    args = dict(
-        k=k, k1=meta["k1"], b=meta["b"], avgdl=meta["avgdl"],
-        idf_map=idf_map, n_query_terms=len(terms), conjunctive=conjunctive,
-    )
-    dicts_ok = all(
-        getattr(s, "_docmap_dict", None) is not None for s in msi.segments
-    )
-    parts = []
-    for i, (seg, excl) in enumerate(zip(msi.segments, msi.excluded)):
-        # codec is a per-SEGMENT property (segments of one family may
-        # be built with different codecs across compactions)
-        seg_args = dict(
-            args,
-            exclude=frozenset(int(x) for x in excl),
-            codec=seg.meta.get("codec", "varint"),
-        )
-        if mode == "taat":
-            scorer = _shard_taat(shard_size=seg.meta["shard_size"], **seg_args)
-        else:
-            scorer = _shard_bmw(
-                bound_inflation=max(1.0, meta["avgdl"] / seg.meta["avgdl"]),
-                **seg_args,
-            )
-        per_shard = (
-            seg.blocks.where(F.col("term").isin(terms))
-            .groupBy("shard")
-            .applyInPandas(scorer, TOPK_SCHEMA)
-        )
-        if dicts_ok:
-            parts.append(per_shard.withColumn("_seg", F.lit(i)))
-        else:
-            parts.append(
-                seg.docmap.join(F.broadcast(per_shard), "doc_no")
-                .select("doc_id", "url", "score")
-            )
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    if dicts_ok:
-        # serving fast path (per-segment docmaps pinned at warm()): the
-        # per-segment shard top-ks (<= n_shards*k rows each) collect in
-        # ONE job and the k-way merge + enrichment run driver-side —
-        # the join formulation costs one broadcast materialization per
-        # segment per query. Same rows and the same (score desc,
-        # doc_id asc) merge order.
-        rows = merged.collect()
-        enriched = []
-        for r in rows:
-            doc_id, url = msi.segments[r["_seg"]]._docmap_dict[r["doc_no"]]
-            enriched.append((doc_id, url, r["score"]))
-        enriched.sort(key=lambda x: (-x[2], x[0]))
-        return local_rows_df(spark, ddl, enriched[:k])
-    return merged.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _topk(msi, {0: toks}, k, mode, conjunctive, ("doc_id", "url", "score"))
 
 
 BMW_STATS_SCHEMA = "shard int, n_blocks long, n_decoded long"
@@ -481,24 +537,24 @@ def bmw_block_stats(
     blocks existed vs how many the cursors actually DECODED (seek()
     skips whole blocks by max_doc_no without decoding; the block-max
     threshold check skips scoring). Returns
-    ``{"n_blocks", "n_decoded", "skip_rate"}`` totals.
+    ``{"n_blocks", "n_decoded", "skip_rate"}`` totals — all zero for a
+    query that is never scored (no term left, or a conjunctive query
+    missing a term).
     """
-    spark = index.spark
     toks = tokenize(query) if tokens is None else list(tokens)
-    terms = sorted(set(toks))
-    stats = index.term_stats(terms)
-    terms = [t for t in terms if t in stats]
-    if not terms:
+    q_ids, q_terms, idf_map = (
+        _resolve(index, {0: toks}, conjunctive) if k >= 1 else ([], [], {})
+    )
+    if not q_ids:
         return {"n_blocks": 0, "n_decoded": 0, "skip_rate": 0.0}
     meta = index.meta
-    idf_map = {t: bm25_idf(meta["n_docs"], stats[t]["df"]) for t in terms}
     scorer = _shard_bmw(
         k=k, k1=meta["k1"], b=meta["b"], avgdl=meta["avgdl"],
-        idf_map=idf_map, n_query_terms=len(terms), conjunctive=conjunctive,
+        idf_map=idf_map, n_query_terms=len(q_terms[0]), conjunctive=conjunctive,
         stats_mode=True, codec=meta.get("codec", "varint"),
     )
     rows = (
-        index.blocks.where(F.col("term").isin(terms))
+        index.blocks.where(F.col("term").isin(q_terms[0]))
         .groupBy("shard")
         .applyInPandas(scorer, BMW_STATS_SCHEMA)
         .collect()
@@ -512,80 +568,6 @@ def bmw_block_stats(
     }
 
 
-QSET_SCHEMA = "query_id long, doc_no long, score double"
-
-
-def _shard_taat_queryset(
-    k: int, k1: float, b: float, avgdl: float, shard_size: int,
-    q_ids: list[int], q_terms: list[list[str]], idf_map: dict[str, float],
-    conjunctive: bool, codec: str = "varint", exclude: frozenset = frozenset(),
-):
-    """Multi-query TAAT shard scorer: every posting block of the
-    queryset's TERM UNION is decoded exactly ONCE per shard, its
-    idf*tfnorm contribution accumulated into each query that uses the
-    term — Q queries cost one pass over the union's postings instead
-    of Q passes.  Memory is O(n_queries x shard_size) accumulator
-    floats; shard_size is docs-per-shard (bounded by construction at
-    any corpus size), so batch the queryset if Q is huge."""
-    term_to_qs: dict[str, list[int]] = {}
-    for qi, ts in enumerate(q_terms):
-        for t in ts:
-            term_to_qs.setdefault(t, []).append(qi)
-    nq = len(q_terms)
-    need = np.array([len(ts) for ts in q_terms], dtype=np.int32)
-
-    def score(key, pdf: pd.DataFrame):
-        base = int(key[0]) * shard_size
-        scores = np.zeros((nq, shard_size), dtype=np.float64)
-        seen = np.zeros((nq, shard_size), dtype=np.int32)
-        for term, tpdf in pdf.groupby("term"):
-            contrib = np.zeros(shard_size, dtype=np.float64)
-            present = np.zeros(shard_size, dtype=np.int32)
-            idf = idf_map[term]
-            for docs_bin, tfs_bin, dls_bin in zip(
-                tpdf["docs_bin"], tpdf["tfs_bin"], tpdf["dls_bin"]
-            ):
-                doc_nos, tfs, dls = decode_posting_block(
-                    docs_bin, tfs_bin, dls_bin, codec
-                )
-                idx = (doc_nos - np.uint64(base)).astype(np.int64)
-                contrib[idx] += idf * bm25_tfnorm(tfs, dls, avgdl, k1, b)
-                present[idx] = 1
-            for qi in term_to_qs.get(term, ()):
-                scores[qi] += contrib
-                seen[qi] += present
-        excl_arr = (
-            np.fromiter(exclude, dtype=np.int64) if exclude else None
-        )
-        outs = []
-        for qi in range(nq):
-            mask = (seen[qi] == need[qi]) if conjunctive else (seen[qi] > 0)
-            cand = np.nonzero(mask)[0]
-            if excl_arr is not None and cand.size:
-                # tombstoned doc_nos drop BEFORE top-k selection, same
-                # as _shard_taat
-                cand = cand[~np.isin(cand + base, excl_arr)]
-            if cand.size == 0:
-                continue
-            topn = min(k, cand.size)
-            # exact (score desc, doc_no asc) like _shard_taat — see its
-            # argpartition-tie note
-            order = np.lexsort((cand, -scores[qi][cand]))
-            sel = cand[order[:topn]]
-            outs.append(pd.DataFrame({
-                "query_id": np.full(topn, q_ids[qi], dtype=np.int64),
-                "doc_no": (sel + base).astype("int64"),
-                "score": scores[qi][sel],
-            }))
-        if not outs:
-            return pd.DataFrame(
-                {"query_id": [], "doc_no": [], "score": []}
-            ).astype({"query_id": "int64", "doc_no": "int64", "score": "float64"})
-        return pd.concat(outs, ignore_index=True)
-
-    return score
-
-
 def bm25_queryset_topk(
     index: SegmentIndex,
     queries: dict[int, str],
@@ -594,69 +576,20 @@ def bm25_queryset_topk(
 ) -> DataFrame:
     """Segment-native BATCH serving: a whole QUERYSET ranked in one
     Spark job — the LTR-training / eval-harness / hard-negative-mining
-    shape over the real compressed index.  One blocks scan pruned to
-    the UNION of all query terms, each block decoded once per shard
-    (`_shard_taat_queryset`), per-query global top-k as a window.
-    Q serving calls cost Q jobs + Q scans; this costs one of each.
+    shape over the real compressed index. One blocks scan pruned to the
+    UNION of all query terms, each block decoded once per shard, per-
+    query global top-k as a window. Q serving calls cost Q jobs + Q
+    scans; this costs one of each.
 
-    Per-query semantics are EXACTLY bm25_topk(mode="taat")'s
-    (tokenize -> distinct terms -> drop terms missing from the index;
-    conjunctive queries with a missing term return no rows; same
-    idf/tfnorm/tie rules) — asserted row-identical per query in
+    Per-query semantics are EXACTLY bm25_topk(mode="taat")'s (same
+    core) — asserted row-identical per query in
     tests/test_bm25_queryset.py.
 
     Returns (query_id, doc_id, url, doc_no, score) with per-query rank
     order (score desc, doc_no asc), <= k rows per query."""
-    from pyspark.sql import Window
-
-    spark = index.spark
-    ddl = "query_id long, doc_id string, url string, doc_no long, score double"
-    q_ids, q_terms = [], []
-    union_terms: set[str] = set()
-    all_distinct: dict[int, list[str]] = {}
-    for qid, q in queries.items():
-        all_distinct[qid] = sorted(set(tokenize(q)))
-        union_terms.update(all_distinct[qid])
-    if not union_terms:
-        return empty_df(spark, ddl)
-    stats = index.term_stats(sorted(union_terms))
-    for qid, distinct in all_distinct.items():
-        terms = [t for t in distinct if t in stats]
-        if not terms:
-            continue
-        if conjunctive and len(terms) < len(distinct):
-            continue  # bm25_topk: a missing term can never match conjunctively
-        q_ids.append(qid)
-        q_terms.append(terms)
-    if not q_ids:
-        return empty_df(spark, ddl)
-    live_terms = sorted({t for ts in q_terms for t in ts})
-    n_docs = index.meta["n_docs"]
-    idf_map = {t: bm25_idf(n_docs, stats[t]["df"]) for t in live_terms}
-
-    meta = index.meta
-    scorer = _shard_taat_queryset(
-        k=k, k1=meta["k1"], b=meta["b"], avgdl=meta["avgdl"],
-        shard_size=meta["shard_size"], q_ids=q_ids, q_terms=q_terms,
-        idf_map=idf_map, conjunctive=conjunctive,
-        codec=meta.get("codec", "varint"),
-    )
-    per_shard = (
-        index.blocks.where(F.col("term").isin(live_terms))
-        .groupBy("shard")
-        .applyInPandas(scorer, QSET_SCHEMA)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_no"))
-    topk = (
-        per_shard.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-    return (
-        index.docmap.join(F.broadcast(topk), "doc_no")
-        .select("query_id", "doc_id", "url", "doc_no", "score")
-        .orderBy("query_id", F.desc("score"), F.asc("doc_no"))
-    )
+    toks = {qid: tokenize(q) for qid, q in queries.items()}
+    return _topk(index, toks, k, "taat", conjunctive,
+                 ("query_id", "doc_id", "url", "doc_no", "score"), lazy=True)
 
 
 def bm25_queryset_topk_multi(
@@ -667,88 +600,12 @@ def bm25_queryset_topk_multi(
 ) -> DataFrame:
     """Batch queryset serving over a MultiSegmentIndex — the
     incremental-family counterpart of :func:`bm25_queryset_topk`: one
-    job ranks the whole queryset across every live segment with GLOBAL
-    statistics (tombstone-exact df corrections, global N/avgdl, BMW-
-    style per-segment codec dispatch), per-segment scoring via the
-    shared `_shard_taat_queryset` kernel (term-union blocks scan, each
-    block decoded once per shard, tombstones dropped pre-top-k), then
-    a per-query k-way merge with doc_id-asc ties — the same
-    per-query semantics as :func:`bm25_topk_multi` (asserted
+    job ranks the whole queryset across every live segment with the
+    per-query semantics of :func:`bm25_topk_multi` (same core; asserted
     row-identical in tests/test_bm25_queryset.py).
 
     Returns (query_id, doc_id, url, score), <= k rows per query,
     ordered (query_id, score desc, doc_id asc)."""
-    from pyspark.sql import Window
-
-    spark = msi.spark
-    ddl = "query_id long, doc_id string, url string, score double"
-    all_distinct = {qid: sorted(set(tokenize(q))) for qid, q in queries.items()}
-    union_terms = sorted({t for ts in all_distinct.values() for t in ts})
-    if not union_terms:
-        return empty_df(spark, ddl)
-    stats = msi.term_stats(union_terms)
-    present = [t for t in union_terms if t in stats]
-    df_corr = msi.df_corrections(present)
-    live_df = {t: stats[t]["df"] - df_corr.get(t, 0) for t in present}
-    live = {t for t in present if live_df[t] > 0}
-
-    q_ids, q_terms = [], []
-    for qid, distinct in all_distinct.items():
-        terms = [t for t in distinct if t in live]
-        if not terms:
-            continue
-        if conjunctive and len(terms) < len(distinct):
-            continue
-        q_ids.append(qid)
-        q_terms.append(terms)
-    if not q_ids:
-        return empty_df(spark, ddl)
-    live_terms = sorted({t for ts in q_terms for t in ts})
-    meta = msi.meta
-    idf_map = {t: bm25_idf(meta["n_docs"], live_df[t]) for t in live_terms}
-
-    parts = []
-    for seg, excl in zip(msi.segments, msi.excluded):
-        scorer = _shard_taat_queryset(
-            k=k, k1=meta["k1"], b=meta["b"], avgdl=meta["avgdl"],
-            shard_size=seg.meta["shard_size"], q_ids=q_ids, q_terms=q_terms,
-            idf_map=idf_map, conjunctive=conjunctive,
-            codec=seg.meta.get("codec", "varint"),
-            exclude=frozenset(int(x) for x in excl),
-        )
-        per_shard = (
-            seg.blocks.where(F.col("term").isin(live_terms))
-            .groupBy("shard")
-            .applyInPandas(scorer, QSET_SCHEMA)
-        )
-        # reduce to a per-query top-k BEFORE the docmap broadcast: the
-        # raw per-shard frame holds up to n_shards*Q*k rows, so for a
-        # corpus-sized queryset (the LTR/eval shape) the forced
-        # broadcast would grow with Q unbounded; after the window it is
-        # <= Q*k rows per segment — the same bound the single-segment
-        # path has. Tie caveat: this prunes on the shard-local
-        # (score desc, doc_no) order like every per-shard top-k here
-        # (exact fp score ties at the k boundary — measure-zero — may
-        # surface a different tied member than the unpruned merge).
-        wseg = Window.partitionBy("query_id").orderBy(
-            F.desc("score"), F.asc("doc_no")
-        )
-        per_shard = (
-            per_shard.withColumn("_rn", F.row_number().over(wseg))
-            .where(F.col("_rn") <= k)
-            .drop("_rn")
-        )
-        parts.append(
-            seg.docmap.join(F.broadcast(per_shard), "doc_no")
-            .select("query_id", "doc_id", "url", "score")
-        )
-    merged = parts[0]
-    for p in parts[1:]:
-        merged = merged.unionByName(p)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        merged.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
-        .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
-    )
+    toks = {qid: tokenize(q) for qid, q in queries.items()}
+    return _topk(msi, toks, k, "taat", conjunctive,
+                 ("query_id", "doc_id", "url", "score"), lazy=True)

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import numpy as np
 
-BLOCK_SIZE = 128
 _MAX_VARINT_BYTES = 10
 
 

@@ -47,11 +47,6 @@ from nadry_spark.localrows import empty_df, local_rows_df
 from nadry_spark.functions.tokenizer import tokenize
 
 
-def tokenize_query(query: str) -> list[str]:
-    """Query uses the same Tokenizer as indexing (SearchWrapper.java:126)."""
-    return tokenize(query)
-
-
 def candidates_for_terms(postings: DataFrame, query_tokens: list[str]) -> DataFrame:
     """J1: (doc_id, url, term, tf) for docs containing >=1 query term.
 
@@ -216,7 +211,7 @@ def search(
     Pagination is offset/limit AFTER full ranking (SearchWrapper.java:
     649-666). Empty token list -> empty result (:128-130).
     """
-    tokens = tokenize_query(query)
+    tokens = tokenize(query)  # the indexing Tokenizer (SearchWrapper.java:126)
     if not tokens:
         return empty_df(
             spark,

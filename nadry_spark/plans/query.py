@@ -39,14 +39,6 @@ from nadry_spark.operators.phrase import (
     extract_quoted_phrases,
     phrase_ranked,
 )
-from nadry_spark.sources.segments import SegmentIndex
-
-
-def decode_tf_for_terms(index: SegmentIndex, terms: list[str]):
-    """(term, doc_no, tf) long form decoded from the compressed blocks
-    of the given terms — the exact-mode candidate probe (J1/S7).
-    Thin alias over SegmentIndex.decoded_tf (kept for callers/tests)."""
-    return index.decoded_tf(terms)
 
 
 class QueryEngine:

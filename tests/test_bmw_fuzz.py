@@ -4,7 +4,9 @@ The two shard scorers are plain (key, pdf) functions, so the WAND
 cursor machinery (block skipping, seek, pivot selection, heap ties,
 tombstone exclusion, bound inflation) fuzzes WITHOUT a Spark session:
 random per-term posting lists are block-encoded exactly like the
-segment writer does, and both scorers must agree on the top-k.
+segment writer does, and both scorers must agree on the top-k. The
+TAAT scorer scores a queryset; the fuzzed query shares its shard with
+a second random query, and its rows must equal its solo run.
 
 Float caveat handled explicitly: TAAT accumulates per term, BMW per
 document — different addition ORDER, so scores can differ at ~1e-16.
@@ -66,13 +68,14 @@ postings_strategy = st.dictionaries(
 
 @given(
     tp=postings_strategy,
-    k=st.integers(min_value=1, max_value=12),
+    k=st.integers(min_value=0, max_value=12),
     conjunctive=st.booleans(),
     n_excl=st.integers(min_value=0, max_value=4),
     inflation=st.sampled_from([1.0, 1.37]),
+    other=st.lists(st.sampled_from(["alpha", "beta", "gamma"]), min_size=1, max_size=3),
 )
 @settings(max_examples=300, deadline=None)
-def test_bmw_matches_taat(tp, k, conjunctive, n_excl, inflation):
+def test_bmw_matches_taat(tp, k, conjunctive, n_excl, inflation, other):
     # dl must be consistent per doc across terms (it is a doc property)
     dl_by_doc: dict[int, int] = {}
     for term in tp:
@@ -88,17 +91,29 @@ def test_bmw_matches_taat(tp, k, conjunctive, n_excl, inflation):
     pdf = _blocks_pdf(tp)
     args = dict(
         k=k, k1=K1, b=B, avgdl=AVGDL, idf_map=idf_map,
-        n_query_terms=len(terms), conjunctive=conjunctive, exclude=exclude,
+        conjunctive=conjunctive, exclude=exclude,
     )
-    taat = _shard_taat(shard_size=SHARD_SIZE, **args)((0,), pdf)
-    bmw = _shard_bmw(bound_inflation=inflation, **args)((0,), pdf)
+    # the second query: the drawn terms the shard holds (all if none)
+    q2 = sorted(set(other) & set(terms)) or terms
+
+    def taat_run(q_terms):
+        return _shard_taat(shard_size=SHARD_SIZE, q_ids=list(range(len(q_terms))),
+                           q_terms=q_terms, **args)((0,), pdf)
+
+    taat = taat_run([terms])
+    both = taat_run([terms, q2])
+    for qi, solo in enumerate((taat, taat_run([q2]))):
+        # shared decode across queries leaves each query's rows unchanged
+        got = both[both["query_id"] == qi].reset_index(drop=True)
+        pd.testing.assert_frame_equal(got, solo.assign(query_id=qi))
+    bmw = _shard_bmw(bound_inflation=inflation, n_query_terms=len(terms), **args)((0,), pdf)
 
     t_scores = [round(s, 9) for s in taat["score"]]
     b_scores = [round(s, 9) for s in bmw["score"]]
     assert b_scores == t_scores  # same ranked score sequence
     # membership is exact unless the k boundary ties on the grid
     boundary_tied = (
-        len(t_scores) == k and t_scores.count(t_scores[-1]) > 1
+        0 < len(t_scores) == k and t_scores.count(t_scores[-1]) > 1
     )
     if not boundary_tied:
         assert list(bmw["doc_no"]) == list(taat["doc_no"])

@@ -67,7 +67,6 @@ def test_reference_queryset_rank_identity(spark, ranked_engine):
     from pyspark.sql import functions as F
 
     from nadry_spark.operators.ranker import rank_exact
-    from nadry_spark.plans.query import decode_tf_for_terms
 
     idx, docmap_pr, o_postings, o_docs_pr = ranked_engine
     for qid, query in _queryset(o_postings):
@@ -75,7 +74,7 @@ def test_reference_queryset_rank_identity(spark, ranked_engine):
         want = oracle_rank(tokens, o_postings, o_docs_pr) if tokens else []
         if not tokens:
             continue
-        tf = decode_tf_for_terms(idx, sorted(set(tokens)))
+        tf = idx.decoded_tf(sorted(set(tokens)))
         cand = tf.join(docmap_pr.select("doc_no", "doc_id", "url"), "doc_no").select(
             "term", "doc_id", "url", "tf"
         )

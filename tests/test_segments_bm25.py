@@ -76,6 +76,10 @@ def test_bmw_block_stats_counts_decodes(spark, seg):
     assert bmw_block_stats(idx, "zzznotaterm") == {
         "n_blocks": 0, "n_decoded": 0, "skip_rate": 0.0
     }
+    # a conjunctive query missing a term is never scored
+    assert bmw_block_stats(idx, "news zzznotaterm", conjunctive=True) == {
+        "n_blocks": 0, "n_decoded": 0, "skip_rate": 0.0
+    }
 
 
 def test_positions_vs_oracle(seg):
@@ -156,6 +160,31 @@ def test_unknown_and_stopword_queries(seg):
     assert bm25_topk(idx, "zzzznotaterm").collect() == []
     assert bm25_topk(idx, "the and of").collect() == []
     assert bm25_topk(idx, "zzzznotaterm", conjunctive=True).collect() == []
+
+
+def test_k_below_one_is_empty_without_a_job(spark, seg):
+    """k < 1 (e.g. a CLI page size of 0) returns the empty frame at
+    every entry point without running a Spark job — BMW's heap would
+    otherwise be read while empty."""
+    from nadry_spark.operators.bm25 import (
+        bm25_queryset_topk, bm25_topk, bmw_block_stats,
+    )
+
+    idx, _, _ = seg
+    sc = spark.sparkContext
+    sc.setJobGroup("bm25-k-below-one", "k < 1 entry points")
+    try:
+        for k in (0, -1):
+            for mode in ("taat", "bmw"):
+                for conjunctive in (False, True):
+                    assert bm25_topk(idx, "news report", k=k, mode=mode,
+                                     conjunctive=conjunctive).collect() == []
+            assert bm25_queryset_topk(idx, {1: "news report"}, k=k).collect() == []
+            assert bmw_block_stats(idx, "news report", k=k)["n_decoded"] == 0
+        assert list(sc.statusTracker().getJobIdsForGroup("bm25-k-below-one")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_resume_rebuilds_only_missing_shards(spark, tiny_pages_path, seg):
