@@ -1,4 +1,6 @@
-"""Resumable index-build job.
+"""Resumable index-build job: pages -> one segment directory (docmap,
+per-field positions, delta-gap + varint posting blocks of --block-size
+docs with per-block max-score, terms dictionary, per-shard manifest).
 
     spark-submit --py-files nadry_spark.zip jobs/build_index.py \
         --pages /data/pages_parquet --out /data/segments \
@@ -39,11 +41,7 @@ def main() -> None:
     ap.add_argument("--block-size", type=int, default=128)
     ap.add_argument("--k1", type=float, default=1.2)
     ap.add_argument("--b", type=float, default=0.75)
-    ap.add_argument("--codec", choices=["varint", "pfor"], default="varint",
-                    help="posting block codec: LEB128 varint (default) or "
-                         "PForDelta bit packing (~2-4x smaller blocks)")
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--no-positions", action="store_true")
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
@@ -64,8 +62,6 @@ def main() -> None:
         k1=args.k1,
         b=args.b,
         resume=not args.no_resume,
-        with_positions=not args.no_positions,
-        codec=args.codec,
     )
     elapsed = time.time() - t0
     manifest = read_manifest(args.out)

@@ -69,7 +69,7 @@ def bm25_idf(n_docs: int, df: int) -> float:
 def _shard_taat(
     k: int, k1: float, b: float, avgdl: float, shard_size: int,
     q_ids: list[int], q_terms: list[list[str]], idf_map: dict[str, float],
-    conjunctive: bool, exclude: frozenset = frozenset(), codec: str = "varint",
+    conjunctive: bool, exclude: frozenset = frozenset(),
 ):
     """Term-at-a-time shard scorer for a queryset: every posting block
     of the queryset's TERM UNION is decoded exactly ONCE per shard, its
@@ -95,9 +95,7 @@ def _shard_taat(
             for docs_bin, tfs_bin, dls_bin in zip(
                 tpdf["docs_bin"], tpdf["tfs_bin"], tpdf["dls_bin"]
             ):
-                doc_nos, tfs, dls = decode_posting_block(
-                    docs_bin, tfs_bin, dls_bin, codec
-                )
+                doc_nos, tfs, dls = decode_posting_block(docs_bin, tfs_bin, dls_bin)
                 idx = (doc_nos - np.uint64(base)).astype(np.int64)
                 contrib[idx] += idf * bm25_tfnorm(tfs, dls, avgdl, k1, b)
                 present[idx] = 1
@@ -147,12 +145,10 @@ class _TermCursor:
     """Cursor over one term's blocks within a shard (lazy block decode)."""
 
     __slots__ = ("idf", "blocks", "bi", "pi", "doc_nos", "tfnorms", "max_score", "cur",
-                 "_k1b", "_decodes", "_bscale", "_codec")
+                 "_k1b", "_decodes", "_bscale")
 
     def __init__(self, idf: float, blocks: list[dict], k1: float, b: float, avgdl: float,
-                 decodes: list | None = None, bound_scale: float = 1.0,
-                 codec: str = "varint"):
-        self._codec = codec
+                 decodes: list | None = None, bound_scale: float = 1.0):
         self.idf = idf
         # blocks sorted by min_doc_no: list of dicts w/ bins + max_tfnorm
         self.blocks = blocks
@@ -179,7 +175,7 @@ class _TermCursor:
         if self._decodes is not None:
             self._decodes[0] += 1
         doc_nos, tfs, dls = decode_posting_block(
-            blk["docs_bin"], blk["tfs_bin"], blk["dls_bin"], self._codec
+            blk["docs_bin"], blk["tfs_bin"], blk["dls_bin"]
         )
         self.doc_nos = doc_nos.astype(np.int64)
         self.tfnorms = bm25_tfnorm(tfs, dls, avgdl, k1, b)
@@ -230,7 +226,7 @@ class _TermCursor:
 def _shard_bmw(k: int, k1: float, b: float, avgdl: float,
                idf_map: dict[str, float], n_query_terms: int, conjunctive: bool,
                stats_mode: bool = False, exclude: frozenset = frozenset(),
-               bound_inflation: float = 1.0, codec: str = "varint"):
+               bound_inflation: float = 1.0):
     def score(key, pdf: pd.DataFrame):
         decodes = [0]
         cursors: list[_TermCursor] = []
@@ -243,7 +239,7 @@ def _shard_bmw(k: int, k1: float, b: float, avgdl: float,
             )
             cursors.append(
                 _TermCursor(idf_map[term], blocks, k1, b, avgdl, decodes=decodes,
-                            bound_scale=bound_inflation, codec=codec)
+                            bound_scale=bound_inflation)
             )
         if conjunctive and len(cursors) < n_query_terms:
             if stats_mode:
@@ -372,14 +368,12 @@ def _score(family, meta: dict, q_ids: list[int], q_terms: list[list[str]],
     terms = sorted(idf_map)
     frames = []
     for seg, excl in family:
-        # codec and shard size are per-SEGMENT properties (segments of
-        # one family may be built with different codecs across
-        # compactions); k1/b/avgdl are the family's global statistics
+        # shard size is a per-SEGMENT property; k1/b/avgdl are the
+        # family's global statistics
         args = dict(
             k=k, k1=meta["k1"], b=meta["b"], avgdl=meta["avgdl"],
             idf_map=idf_map, conjunctive=conjunctive,
             exclude=frozenset(int(x) for x in excl),
-            codec=seg.meta.get("codec", "varint"),
         )
         shards = seg.blocks.where(F.col("term").isin(terms)).groupBy("shard")
         if mode == "taat":
@@ -551,7 +545,7 @@ def bmw_block_stats(
     scorer = _shard_bmw(
         k=k, k1=meta["k1"], b=meta["b"], avgdl=meta["avgdl"],
         idf_map=idf_map, n_query_terms=len(q_terms[0]), conjunctive=conjunctive,
-        stats_mode=True, codec=meta.get("codec", "varint"),
+        stats_mode=True,
     )
     rows = (
         index.blocks.where(F.col("term").isin(q_terms[0]))

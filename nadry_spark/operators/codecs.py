@@ -1,11 +1,15 @@
-"""Posting-list block compression: delta-gap + varint (PForDelta-style
-blocks of 128) with per-block max-score metadata.
+"""Posting-list block compression: the segment's one block format,
+delta-gap + LEB128 varint blocks of 128 with per-block max-score
+metadata, plus the same delta-varint coding for per-field position
+lists.
 
 The reference stores postings as uncompressed BSON arrays
 (indexer/MongoDBIndexStore.java:230-324); the rebuild's segment format
-compresses doc ids as delta gaps + LEB128 varints per block, the
-north_star's "sorted, delta-gap + varint (PForDelta-style block)
-compressed postings with per-block max-score metadata".
+compresses doc ids as delta gaps + varints per block, the north_star's
+"sorted, delta-gap + varint (PForDelta-style block) compressed postings
+with per-block max-score metadata". Varint is the only posting codec:
+segments record ``"codec": "varint"`` in meta.json and readers reject
+any other value.
 
 Both encoder and decoder are numpy-vectorized (no per-value Python in
 the hot path) so they run cheaply inside Arrow-batched pandas UDFs on
@@ -142,181 +146,27 @@ def decode_position_lists(buffers, counts) -> np.ndarray:
     return total - np.repeat(seg_off, nz)
 
 
-# ---------------------------------------------------------------------------
-# PForDelta (patched frame-of-reference) block codec
-# ---------------------------------------------------------------------------
-#
-# The north_star names "PForDelta-style block" compression; this is the
-# real thing (Zukowski et al., ICDE'06 "Super-Scalar RAM-CPU Cache
-# Compression"; the NewPFD/OptPFD variants of Yan, Ding & Suel,
-# WWW'09): pick a bit width b covering most values, bit-pack every
-# value's low b bits, and patch the few larger "exceptions" via a
-# separate (position, high-bits) list. For delta-gapped doc ids whose
-# gaps are mostly 1-3, b lands at 1-2 bits/value vs varint's hard
-# 8-bit floor — a 2-4x size win on dense postings. Encoder and decoder
-# stay numpy-vectorized (packbits/unpackbits + shifts).
-#
-# Buffer layout (little-endian):
-#   byte 0   mode tag: 0 = PFor payload, 1 = varint fallback (chosen
-#            per buffer when varint is smaller — tiny tail blocks of a
-#            few values cannot amortize the PFor header; the
-#            pick-the-cheaper-representation move of OptPFD)
-# PFor payload (tag 0):
-#   byte 1   bit width b (0..64)
-#   2:4      n values (uint16 — block sizes are at most a few thousand)
-#   4:6      n exceptions (uint16)
-#   6:8      byte length of the exception-position varint stream
-#   8:..     ceil(n*b/8) packed low-bit bytes (bitorder='little')
-#   ..       exception positions, delta-gapped + varint
-#   ..       exception high parts (value >> b), varint
-
-_PFOR_HEADER = 8
-
-
-def _bit_lengths(v: np.ndarray) -> np.ndarray:
-    """Vectorized bit_length for uint64 values < 2**53 (posting gaps,
-    tfs and doc lengths always are; exact in float64)."""
-    v = v.astype(np.float64)
-    out = np.zeros(v.shape, dtype=np.int64)
-    nz = v > 0
-    out[nz] = np.floor(np.log2(v[nz])).astype(np.int64) + 1
-    return out
-
-
-def pfor_encode(values: np.ndarray) -> bytes:
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    n = v.size
-    if n > 0xFFFF:
-        raise ValueError("PFor blocks are capped at 65535 values")
-    if n == 0:
-        return bytes(8)
-    bl = _bit_lengths(v)
-    # pick b minimizing packed + patched size (<=65 candidates, each a
-    # vector op over <=block_size values)
-    best_b, best_cost = 0, None
-    for b in sorted(set(bl.tolist()) | {0}):
-        exc = bl > b
-        cost = (
-            (n * b + 7) // 8
-            + int(exc.sum())  # ~1 byte per delta-gapped position
-            + int(np.ceil((bl[exc] - b) / 7.0).sum())
-        )
-        if best_cost is None or cost < best_cost:
-            best_b, best_cost = int(b), cost
-    b = best_b
-    mask = (np.uint64(1) << np.uint64(b)) - np.uint64(1) if b else np.uint64(0)
-    low = v & mask
-    if b:
-        bits = (
-            (low[:, None] >> np.arange(b, dtype=np.uint64)[None, :])
-            & np.uint64(1)
-        ).astype(np.uint8)
-        packed = np.packbits(bits.reshape(-1), bitorder="little").tobytes()
-    else:
-        packed = b""
-    exc_idx = np.nonzero(bl > b)[0]
-    pos_bin = delta_encode(exc_idx.astype(np.uint64)) if exc_idx.size else b""
-    high = (v[exc_idx] >> np.uint64(b)) if exc_idx.size else None
-    high_bin = varint_encode(high) if exc_idx.size else b""
-    out = (
-        bytes([0, b])
-        + n.to_bytes(2, "little")
-        + int(exc_idx.size).to_bytes(2, "little")
-        + len(pos_bin).to_bytes(2, "little")
-        + packed
-        + pos_bin
-        + high_bin
-    )
-    vb = varint_encode(v)
-    if len(vb) + 1 < len(out):  # tiny blocks: varint wins, keep it
-        return bytes([1]) + vb
-    return out
-
-
-def pfor_decode(buf: bytes) -> np.ndarray:
-    if len(buf) < 1:
-        raise ValueError("empty PFor buffer")
-    if buf[0] == 1:  # varint fallback
-        return varint_decode(buf[1:])
-    if len(buf) < _PFOR_HEADER:
-        raise ValueError("truncated PFor buffer")
-    b = buf[1]
-    n = int.from_bytes(buf[2:4], "little")
-    n_exc = int.from_bytes(buf[4:6], "little")
-    pos_len = int.from_bytes(buf[6:8], "little")
-    if n == 0:
-        return np.zeros(0, dtype=np.uint64)
-    packed_len = (n * b + 7) // 8
-    at = _PFOR_HEADER
-    if b:
-        raw = np.frombuffer(buf, np.uint8, count=packed_len, offset=at)
-        bits = np.unpackbits(raw, bitorder="little")[: n * b].reshape(n, b)
-        v = (
-            bits.astype(np.uint64) << np.arange(b, dtype=np.uint64)[None, :]
-        ).sum(axis=1, dtype=np.uint64)
-    else:
-        v = np.zeros(n, dtype=np.uint64)
-    at += packed_len
-    if n_exc:
-        pos = delta_decode(buf[at : at + pos_len]).astype(np.int64)
-        high = varint_decode(buf[at + pos_len :])
-        if pos.size != n_exc or high.size != n_exc:
-            raise ValueError("corrupt PFor exception lists")
-        v[pos] |= high.astype(np.uint64) << np.uint64(b)
-    return v
-
-
-def delta_pfor_encode(sorted_values: np.ndarray) -> bytes:
-    """First value + delta gaps, PFor-packed (the doc-id layout)."""
-    v = np.ascontiguousarray(sorted_values, dtype=np.uint64)
-    if v.size == 0:
-        return pfor_encode(v)
-    gaps = np.empty_like(v)
-    gaps[0] = v[0]
-    np.subtract(v[1:], v[:-1], out=gaps[1:])
-    return pfor_encode(gaps)
-
-
-def delta_pfor_decode(buf: bytes) -> np.ndarray:
-    gaps = pfor_decode(buf)
-    return np.cumsum(gaps, dtype=np.uint64)
-
-
-POSTING_CODECS = ("varint", "pfor")
-
-
-def encode_posting_block(
-    doc_nos: np.ndarray, tfs: np.ndarray, dls: np.ndarray, codec: str = "varint"
-) -> dict:
-    """One block: doc ids delta-gapped, tfs/doc-lengths raw — packed
-    with the chosen codec ('varint' LEB128 or 'pfor' patched
-    frame-of-reference bit packing; see POSTING_CODECS)."""
-    if codec == "pfor":
-        docs_bin, enc = delta_pfor_encode(doc_nos), pfor_encode
-    elif codec == "varint":
-        docs_bin, enc = delta_encode(doc_nos), varint_encode
-    else:
-        raise ValueError(f"unknown posting codec {codec!r}")
+def encode_posting_block(doc_nos: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> dict:
+    """One block: doc ids delta-gapped, tfs/doc-lengths raw, each
+    LEB128 varint-packed."""
     return {
         "n": int(len(doc_nos)),
         "min_doc_no": int(doc_nos[0]),
         "max_doc_no": int(doc_nos[-1]),
-        "docs_bin": docs_bin,
-        "tfs_bin": enc(tfs),
-        "dls_bin": enc(dls),
+        "docs_bin": delta_encode(doc_nos),
+        "tfs_bin": varint_encode(tfs),
+        "dls_bin": varint_encode(dls),
     }
 
 
 def decode_posting_block(
     docs_bin: bytes, tfs_bin: bytes, dls_bin: bytes, codec: str = "varint"
 ):
-    """-> (doc_nos, tfs, dls) as numpy arrays."""
-    if codec == "pfor":
-        return (
-            delta_pfor_decode(docs_bin),
-            pfor_decode(tfs_bin),
-            pfor_decode(dls_bin),
-        )
+    """-> (doc_nos, tfs, dls) as numpy arrays. ``codec`` names the block
+    format and must be ``"varint"``, the only one; any other value
+    raises instead of decoding foreign bytes as varints."""
+    if codec != "varint":
+        raise ValueError(f"unknown posting codec {codec!r}; blocks are varint")
     return (
         delta_decode(docs_bin),
         varint_decode(tfs_bin),
@@ -331,7 +181,7 @@ def bm25_tfnorm(tfs: np.ndarray, dls: np.ndarray, avgdl: float, k1: float, b: fl
     return tfs * (k1 + 1.0) / (tfs + k1 * (1.0 - b + b * dls / avgdl))
 
 
-def explode_tf_batches(batches, with_term: bool = True, codec: str = "varint"):
+def explode_tf_batches(batches, with_term: bool = True):
     """mapInPandas body: block rows -> long-form (term?, doc_no, tf).
 
     Fully vectorized per Arrow batch: one decode per block row, then a
@@ -347,7 +197,7 @@ def explode_tf_batches(batches, with_term: bool = True, codec: str = "varint"):
         for docs_bin, tfs_bin, dls_bin in zip(
             pdf["docs_bin"], pdf["tfs_bin"], pdf["dls_bin"]
         ):
-            d, t, _ = decode_posting_block(docs_bin, tfs_bin, dls_bin, codec)
+            d, t, _ = decode_posting_block(docs_bin, tfs_bin, dls_bin)
             doc_parts.append(d)
             tf_parts.append(t)
             lens.append(len(d))

@@ -16,8 +16,17 @@ term-sorted, block-compressed Parquet layout:
                                position lists as delta-gap varint
                                binary (decode: codecs.decode_position_lists)
       terms/                  (term, df, n_blocks)  — the dictionary
-      meta.json               n_docs, avgdl, k1, b, block_size, ...
+      meta.json               n_docs, avgdl, k1, b, block_size,
+                              codec ("varint", the only block format)
       manifest/shard_K.json   per-shard lineage + metrics rows
+      docs_tokens/shard=S/    per-doc token arrays (batch build only)
+
+One writer: ``build_segments`` (batch, resumable per shard group) and
+``segments_from_postings`` (streaming finalize and compaction) differ
+only in how they build stage 0 and the positions frame; both hand that
+frame to one shard writer (positions -> blocks derived from the written
+positions -> postings -> manifest rows) and share the terms-dictionary
+and meta.json writers, so the two produce the same layout.
 
 Design decisions (scale rationale):
 
@@ -32,7 +41,8 @@ Design decisions (scale rationale):
   driver collect of data rows) — delta gaps stay small and blocks
   compress to ~1 byte/doc.
 * **Block compression**: delta-gap + varint blocks of 128 with
-  per-block max_tfnorm (BM25 upper bound) for block-max pruning.
+  per-block max_tfnorm (BM25 upper bound) for block-max pruning. One
+  block format: readers reject a meta.json naming any other codec.
 * **Resumable build**: shards build in groups; each group commit
   appends per-shard manifest rows (atomic rename). Resume anti-joins
   pending shards against the manifest (north_rule checkpoint/lineage).
@@ -174,7 +184,6 @@ def write_manifest_entry(out_dir: str, entry: dict) -> None:
 
 def _encode_partition_frame(
     pdf: pd.DataFrame, avgdl: float, k1: float, b: float, block_size: int,
-    codec: str = "varint",
 ) -> pd.DataFrame:
     """Vectorized block encoding of a (shard, term, doc_no)-sorted frame.
 
@@ -182,16 +191,8 @@ def _encode_partition_frame(
     block starts, ONE varint encode for the whole frame, per-block byte
     slices from the value offsets, per-block maxima via reduceat — no
     per-posting Python, ~O(n_blocks) cheap slice ops only.
-
-    codec='pfor' swaps the per-block buffers for PForDelta bit packing
-    (codecs.pfor_encode): ~2-4x smaller blocks at ~2x encode cost (the
-    per-block width search) — the gaps/boundary machinery is shared
-    and only the final byte packing differs.
     """
-    from nadry_spark.operators.codecs import (
-        pfor_encode,
-        varint_encode_with_offsets,
-    )
+    from nadry_spark.operators.codecs import varint_encode_with_offsets
 
     n = len(pdf)
     if n == 0:
@@ -225,27 +226,11 @@ def _encode_partition_frame(
     tfn = bm25_tfnorm(tf, dl, avgdl, k1, b)
     max_tfn = np.maximum.reduceat(tfn, block_start)
 
-    if codec == "pfor":
-        tfu = tf.astype(np.uint64)
-        dlu = dl.astype(np.uint64)
-        docs_bufs, tf_bufs, dl_bufs = [], [], []
-        for s0, e0 in zip(block_start, block_end):
-            docs_bufs.append(pfor_encode(gaps[s0:e0]))
-            tf_bufs.append(pfor_encode(tfu[s0:e0]))
-            dl_bufs.append(pfor_encode(dlu[s0:e0]))
-    else:
-        gap_buf, gap_off = varint_encode_with_offsets(gaps)
-        tf_buf, tf_off = varint_encode_with_offsets(tf.astype(np.uint64))
-        dl_buf, dl_off = varint_encode_with_offsets(dl.astype(np.uint64))
-
-        def slices(buf, off):
-            starts = np.where(block_start > 0, off[block_start - 1], 0)
-            ends = off[block_end - 1]
-            return [buf[s:e] for s, e in zip(starts, ends)]
-
-        docs_bufs = slices(gap_buf, gap_off)
-        tf_bufs = slices(tf_buf, tf_off)
-        dl_bufs = slices(dl_buf, dl_off)
+    def slices(values):
+        buf, off = varint_encode_with_offsets(values)
+        starts = np.where(block_start > 0, off[block_start - 1], 0)
+        ends = off[block_end - 1]
+        return [buf[s:e] for s, e in zip(starts, ends)]
 
     return pd.DataFrame(
         {
@@ -254,9 +239,9 @@ def _encode_partition_frame(
             "min_doc_no": doc[block_start],
             "max_doc_no": doc[block_end - 1],
             "n_docs": (block_end - block_start).astype(np.int32),
-            "docs_bin": docs_bufs,
-            "tfs_bin": tf_bufs,
-            "dls_bin": dl_bufs,
+            "docs_bin": slices(gaps),
+            "tfs_bin": slices(tf.astype(np.uint64)),
+            "dls_bin": slices(dl.astype(np.uint64)),
             "max_tfnorm": max_tfn,
         }
     )
@@ -281,12 +266,12 @@ _POS_FIELDS = (
 _FIELD_COLS = (("tokens_title", 0), ("tokens_desc", 1), ("tokens_body", 2))
 
 
-def _shard_postings_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-shard LOCAL posting build (no Spark shuffle): one shard's
-    docs (token arrays) -> one row per (term, doc_no) with per-field
-    position lists encoded delta-gap+varint (n_* counts + *_bin
-    buffers), tf and dl. pandas C groupby does the heavy lifting;
-    per-shard input is bounded by shard_size docs by construction.
+def _positions_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    """Per-shard LOCAL posting build (applyInPandas, no Spark shuffle):
+    one shard's docs (token arrays) -> its POSITIONS_SCHEMA rows, one
+    per (term, doc_no) in that order, with per-field position lists
+    encoded delta-gap+varint (n_* counts + *_bin buffers) and dl.
+    Per-shard input is bounded by shard_size docs by construction.
     """
     from nadry_spark.operators.codecs import encode_position_lists
 
@@ -302,9 +287,8 @@ def _shard_postings_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
             pos_parts.append(np.arange(n, dtype=np.int32))
     if not term_parts:
         return pd.DataFrame(
-            columns=["term", "doc_no", "n_title", "n_desc", "n_body",
-                     "pos_title_bin", "pos_desc_bin", "pos_body_bin",
-                     "tf", "dl"]
+            columns=["shard", "term", "doc_no", "n_title", "n_desc", "n_body",
+                     "pos_title_bin", "pos_desc_bin", "pos_body_bin", "dl"]
         )
     terms = np.concatenate(term_parts)
     doc_nos = np.concatenate(doc_parts)
@@ -342,7 +326,6 @@ def _shard_postings_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
         if mask.any():
             c[mask] = pd.Series([empty] * int(mask.sum()), dtype=object).values
 
-    tf = np.bincount(posting_id, minlength=n_postings).astype(np.int32)
     out_doc_nos = dn[posting_start]
     # dl lookup: doc_no -> total_words via a dict (docs per shard bounded)
     dl_map = dict(zip(pdf["doc_no"].to_numpy(), pdf["total_words"].to_numpy()))
@@ -350,6 +333,7 @@ def _shard_postings_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
 
     # compress per-field position lists: one delta+varint pass per field
     out = {
+        "shard": np.full(n_postings, key[0], dtype=np.int32),
         "term": uniq_terms[tc[posting_start]],
         "doc_no": out_doc_nos,
     }
@@ -357,15 +341,8 @@ def _shard_postings_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
         bufs, counts = encode_position_lists(c)
         out[ncol] = counts.astype(np.int32)
         out[bcol] = bufs
-    out["tf"] = tf
     out["dl"] = dl
     return pd.DataFrame(out)
-
-
-def _positions_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-    out = _shard_postings_pdf(pdf).drop(columns=["tf"])  # derived column
-    out.insert(0, "shard", np.int32(key[0]))
-    return out
 
 
 def _encode_positions_stream(batches):
@@ -389,29 +366,7 @@ def _encode_positions_stream(batches):
         yield pd.DataFrame(out)
 
 
-def _blocks_fn_factory(avgdl: float, k1: float, b: float, block_size: int, codec: str = "varint"):
-    def blocks_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        postings = _shard_postings_pdf(pdf)
-        if not len(postings):
-            return pd.DataFrame(
-                columns=["shard", "term", "min_doc_no", "max_doc_no", "n_docs",
-                         "docs_bin", "tfs_bin", "dls_bin", "max_tfnorm"]
-            )
-        frame = pd.DataFrame(
-            {
-                "shard": np.full(len(postings), key[0], dtype=np.int32),
-                "term": postings["term"],
-                "doc_no": postings["doc_no"],
-                "tf": postings["tf"],
-                "dl": postings["dl"],
-            }
-        )
-        return _encode_partition_frame(frame, avgdl, k1, b, block_size, codec)
-
-    return blocks_fn
-
-
-def _encode_blocks_stream(avgdl: float, k1: float, b: float, block_size: int, codec: str = "varint"):
+def _encode_blocks_stream(avgdl: float, k1: float, b: float, block_size: int):
     """mapInPandas encoder over (shard, term, doc_no)-sorted partitions.
 
     Carries the trailing (shard, term) run across Arrow batch boundaries
@@ -439,9 +394,9 @@ def _encode_blocks_stream(avgdl: float, k1: float, b: float, block_size: int, co
             head = pdf.iloc[: len(pdf) - run_len]
             carry = pdf.iloc[len(pdf) - run_len :]
             if len(head):
-                yield _encode_partition_frame(head, avgdl, k1, b, block_size, codec)
+                yield _encode_partition_frame(head, avgdl, k1, b, block_size)
         if carry is not None and len(carry):
-            yield _encode_partition_frame(carry, avgdl, k1, b, block_size, codec)
+            yield _encode_partition_frame(carry, avgdl, k1, b, block_size)
 
     return encode
 
@@ -488,6 +443,135 @@ def derive_n_shards(n_docs: int, parallelism: int) -> int:
     return max(parallelism, math.ceil(n_docs / MAX_DOCS_PER_SHARD))
 
 
+def _segment_meta(
+    spark: SparkSession, numbered: DataFrame, n_shards: int | None,
+    block_size: int, k1: float, b: float,
+) -> dict:
+    """meta.json of a segment over a numbered doc frame: n_docs and
+    avgdl (one job), the shard count (derived when None) and size, the
+    scoring parameters and the block format."""
+    stats = numbered.agg(
+        F.count("*").alias("n_docs"), F.avg("total_words").alias("avgdl")
+    ).collect()[0]
+    n_docs = int(stats["n_docs"])
+    if n_shards is None:
+        n_shards = derive_n_shards(n_docs, spark.sparkContext.defaultParallelism)
+    return {
+        "n_docs": n_docs,
+        "avgdl": float(stats["avgdl"] or 1.0) or 1.0,
+        "n_shards": n_shards,
+        "shard_size": max(1, math.ceil(n_docs / n_shards)),
+        "block_size": block_size,
+        "k1": k1,
+        "b": b,
+        "codec": "varint",
+    }
+
+
+def _write_meta(out_dir: str, meta: dict) -> None:
+    """Commit stage 0: meta.json, then its (shard -1) manifest row."""
+    with open(os.path.join(out_dir, "meta.json"), "w") as f:
+        json.dump(meta, f)
+    write_manifest_entry(
+        out_dir,
+        {"shard": -1, "status": "done", "stage": "docmap",
+         "n_docs": meta["n_docs"], "wrote_at": time.time()},
+    )
+
+
+def _write_shards(
+    spark: SparkSession, positions: DataFrame, out_dir: str,
+    shards: list[int], meta: dict, timings: dict | None = None,
+) -> None:
+    """The shard writer both builds share. ``positions`` is a
+    POSITIONS_SCHEMA frame holding ``shards``, each shard written by
+    one task and sorted by (term, doc_no).
+
+    Writes positions, then derives the posting blocks from the table
+    just written: a column-pruned read (shard/term/doc_no/tf/dl — the
+    position buffers are skipped by parquet) into the streaming block
+    encoder, so the token->postings build runs once per shard. The
+    encoder carries (shard, term) runs across batch boundaries; a run
+    split across read partitions just yields more (still disjoint,
+    still sorted) blocks for that term. Writes postings and commits
+    one manifest row per shard. ``timings`` accumulates the positions
+    and postings wall seconds.
+    """
+    pos_dir = os.path.join(out_dir, "positions")
+    post_dir = os.path.join(out_dir, "postings")
+
+    def timed(key: str, t0: float) -> None:
+        if timings is not None:
+            timings[key] = timings.get(key, 0.0) + round(time.time() - t0, 2)
+
+    t0 = time.time()
+    (
+        positions.write.mode("overwrite")
+        .option("compression", "zstd")
+        .partitionBy("shard")
+        .parquet(pos_dir)
+    )
+    timed("positions", t0)
+    t0 = time.time()
+    encode = _encode_blocks_stream(meta["avgdl"], meta["k1"], meta["b"], meta["block_size"])
+    (
+        spark.read.parquet(pos_dir)
+        .where(F.col("shard").isin(shards))
+        .select(
+            "shard", "term", "doc_no",
+            (F.col("n_title") + F.col("n_desc") + F.col("n_body")).alias("tf"),
+            "dl",
+        )
+        .mapInPandas(encode, BLOCKS_SCHEMA)
+        .write.mode("overwrite")
+        .option("compression", "zstd")
+        .partitionBy("shard")
+        .parquet(post_dir)
+    )
+    timed("postings", t0)
+    # per-shard metrics -> manifest (lineage + metrics per north_rule)
+    stats = (
+        spark.read.parquet(post_dir)
+        .where(F.col("shard").isin(shards))
+        .groupBy("shard")
+        .agg(
+            F.sum("n_docs").alias("n_postings"),
+            F.count("*").alias("n_blocks"),
+            F.countDistinct("term").alias("n_terms"),
+        )
+        .collect()
+    )
+    by_shard = {r["shard"]: r for r in stats}
+    for s in shards:
+        r = by_shard.get(s)
+        write_manifest_entry(
+            out_dir,
+            {
+                "shard": s,
+                "status": "done",
+                "stage": "postings",
+                "n_postings": int(r["n_postings"]) if r else 0,
+                "n_blocks": int(r["n_blocks"]) if r else 0,
+                "n_terms": int(r["n_terms"]) if r else 0,
+                "wrote_at": time.time(),
+            },
+        )
+
+
+def _write_terms(spark: SparkSession, out_dir: str) -> None:
+    """The terms dictionary (term, df, n_blocks) over all postings."""
+    (
+        spark.read.parquet(os.path.join(out_dir, "postings"))
+        .groupBy("term")
+        .agg(F.sum("n_docs").alias("df"), F.count("*").alias("n_blocks"))
+        .repartitionByRange(4, "term")
+        .sortWithinPartitions("term")
+        .write.mode("overwrite")
+        .option("compression", "zstd")
+        .parquet(os.path.join(out_dir, "terms"))
+    )
+
+
 def build_segments(
     spark: SparkSession,
     pages: DataFrame,
@@ -499,16 +583,19 @@ def build_segments(
     k1: float = DEFAULT_K1,
     b: float = DEFAULT_B,
     resume: bool = True,
-    with_positions: bool = True,
     timings: dict | None = None,
-    codec: str = "varint",
 ) -> dict:
     """Full resumable index build: pages -> segments at out_dir.
 
-    Returns the meta dict. Stage 0 (extract + docmap) is one atomic
-    unit; shard groups commit independently with manifest rows.
-    Pass a dict as `timings` to get per-stage wall seconds back
-    (extract_number, stage0_writes, positions, postings, terms_dict).
+    Returns the meta dict. Stage 0 (extract, number, and the docmap,
+    docs_content and per-shard docs_tokens tables) is one atomic unit.
+    Then groups of ``shards_per_job`` shards build their positions
+    locally, one applyInPandas task per shard over docs_tokens, and go
+    through the shard writer shared with segments_from_postings; each
+    group commits its own manifest rows, so a rerun resumes at the
+    first unfinished shard. Pass a dict as `timings` to get per-stage
+    wall seconds back (extract_number, stage0_writes, positions,
+    postings, terms_dict).
     """
     from nadry_spark.operators.index_build import extract_documents
     from nadry_spark.session import ship_package
@@ -532,19 +619,13 @@ def build_segments(
         # frame is already deterministically partitioned — number in
         # place instead of reshuffling the (fatter) extracted corpus
         numbered, persisted = assign_doc_numbers(documents, assume_partitioned=True)
-        stats = numbered.agg(
-            F.count("*").alias("n_docs"), F.avg("total_words").alias("avgdl")
-        ).collect()[0]
-        n_docs = int(stats["n_docs"])
-        avgdl = float(stats["avgdl"] or 1.0) or 1.0
-        if n_shards is None:
-            n_shards = derive_n_shards(n_docs, spark.sparkContext.defaultParallelism)
-        shard_size = max(1, math.ceil(n_docs / n_shards))
+        meta = _segment_meta(spark, numbered, n_shards, block_size, k1, b)
+        n_shards = meta["n_shards"]
         if timings is not None:
             timings["extract_number"] = round(time.time() - _t, 2)
             _t = time.time()
         numbered = numbered.withColumn(
-            "shard", (F.col("doc_no") / F.lit(shard_size)).cast("int")
+            "shard", (F.col("doc_no") / F.lit(meta["shard_size"])).cast("int")
         )
 
         # The three stage-0 tables are independent projections of the
@@ -602,135 +683,28 @@ def build_segments(
             persisted.unpersist()  # docmap/docs_tokens written; release cache
         if timings is not None:
             timings["stage0_writes"] = round(time.time() - _t, 2)
-        meta = {
-            "n_docs": n_docs,
-            "avgdl": avgdl,
-            "n_shards": n_shards,
-            "shard_size": shard_size,
-            "block_size": block_size,
-            "k1": k1,
-            "b": b,
-            "codec": codec,
-        }
-        with open(meta_path, "w") as f:
-            json.dump(meta, f)
-        write_manifest_entry(
-            out_dir,
-            {"shard": -1, "status": "done", "stage": "docmap", "n_docs": n_docs,
-             "wrote_at": time.time()},
-        )
+        _write_meta(out_dir, meta)
         manifest = read_manifest(out_dir)
 
-    n_shards = meta["n_shards"]
     docs_tokens = spark.read.parquet(os.path.join(out_dir, "docs_tokens"))
 
     # ---- shard groups (resumable unit) ----
     # The index build is SHUFFLE-FREE per shard: docs are already
     # partitioned by shard on disk; one applyInPandas task per shard
-    # builds its postings locally (the Lucene-segment model). Global
+    # builds its positions locally (the Lucene-segment model). Global
     # merge is unnecessary because shards partition the doc space.
-    pending = [s for s in range(n_shards) if manifest.get(s, {}).get("status") != "done"]
-    blocks_fn = _blocks_fn_factory(
-        meta["avgdl"], meta["k1"], meta["b"], meta["block_size"],
-        meta.get("codec", "varint"),
-    )
-
+    pending = [s for s in range(meta["n_shards"]) if manifest.get(s, {}).get("status") != "done"]
     for g in range(0, len(pending), shards_per_job):
         group = pending[g : g + shards_per_job]
-        group_docs = docs_tokens.where(F.col("shard").isin(group))
-        grouped = group_docs.groupBy("shard")
-        if with_positions:
-            _t = time.time()
-            (
-                grouped.applyInPandas(_positions_fn, POSITIONS_SCHEMA)
-                .write.mode("overwrite")
-                .option("compression", "zstd")
-                .partitionBy("shard")
-                .parquet(os.path.join(out_dir, "positions"))
-            )
-            if timings is not None:
-                timings["positions"] = timings.get("positions", 0.0) + round(time.time() - _t, 2)
-        _t = time.time()
-        if with_positions:
-            # blocks derive from the positions table just written: a
-            # column-pruned read (term/doc_no/tf/dl — the position
-            # arrays are skipped by parquet) into the streaming block
-            # encoder. This halves the dominant per-shard cost: the
-            # token->postings build (_shard_postings_pdf) runs ONCE per
-            # shard instead of once for positions and once for blocks.
-            # Each shard is one file written by one task, sorted by
-            # (term, doc_no); the stream encoder carries (shard, term)
-            # runs across batch/split boundaries, and a run split across
-            # partitions just yields more (still disjoint, still sorted)
-            # blocks for that term.
-            pos_cols = (
-                spark.read.parquet(os.path.join(out_dir, "positions"))
-                .where(F.col("shard").isin(group))
-                .select(
-                    "shard", "term", "doc_no",
-                    (F.col("n_title") + F.col("n_desc") + F.col("n_body")).alias("tf"),
-                    "dl",
-                )
-            )
-            blocks_df = pos_cols.mapInPandas(
-                _encode_blocks_stream(
-                    meta["avgdl"], meta["k1"], meta["b"], meta["block_size"],
-                    meta.get("codec", "varint"),
-                ),
-                BLOCKS_SCHEMA,
-            )
-        else:
-            blocks_df = grouped.applyInPandas(blocks_fn, BLOCKS_SCHEMA)
-        (
-            blocks_df
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            .partitionBy("shard")
-            .parquet(os.path.join(out_dir, "postings"))
+        positions = (
+            docs_tokens.where(F.col("shard").isin(group))
+            .groupBy("shard")
+            .applyInPandas(_positions_fn, POSITIONS_SCHEMA)
         )
-        if timings is not None:
-            timings["postings"] = timings.get("postings", 0.0) + round(time.time() - _t, 2)
-        # per-shard metrics -> manifest (lineage + metrics per north_rule)
-        written = spark.read.parquet(os.path.join(out_dir, "postings")).where(
-            F.col("shard").isin(group)
-        )
-        stats = (
-            written.groupBy("shard")
-            .agg(
-                F.sum("n_docs").alias("n_postings"),
-                F.count("*").alias("n_blocks"),
-                F.countDistinct("term").alias("n_terms"),
-            )
-            .collect()
-        )
-        by_shard = {r["shard"]: r for r in stats}
-        for s in group:
-            r = by_shard.get(s)
-            write_manifest_entry(
-                out_dir,
-                {
-                    "shard": s,
-                    "status": "done",
-                    "stage": "postings",
-                    "n_postings": int(r["n_postings"]) if r else 0,
-                    "n_blocks": int(r["n_blocks"]) if r else 0,
-                    "n_terms": int(r["n_terms"]) if r else 0,
-                    "wrote_at": time.time(),
-                },
-            )
+        _write_shards(spark, positions, out_dir, group, meta, timings)
 
-    # ---- terms dictionary ----
     _t = time.time()
-    blocks_all = spark.read.parquet(os.path.join(out_dir, "postings"))
-    (
-        blocks_all.groupBy("term")
-        .agg(F.sum("n_docs").alias("df"), F.count("*").alias("n_blocks"))
-        .repartitionByRange(4, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .parquet(os.path.join(out_dir, "terms"))
-    )
+    _write_terms(spark, out_dir)
     if timings is not None:
         timings["terms_dict"] = round(time.time() - _t, 2)
     return meta
@@ -748,25 +722,25 @@ def segments_from_postings(
     b: float = DEFAULT_B,
 ) -> dict:
     """Build a queryable segment dir from long-form postings
-    (term, doc_id, positions_*, tf) + doc stats — the bridge from
-    streaming delta segments (or any external postings source) to the
-    serving layout. One pass: number docs, shard, encode blocks, write
-    positions/docmap/terms/meta/manifests.
+    (term, doc_id, positions_title/desc/body; tf is the position count)
+    + doc stats — the bridge from streaming delta segments (or any
+    external postings source) to the serving layout, used by the
+    streaming finalize and compaction.
+
+    Numbers and shards the docs, writes docmap and docs_content, then
+    encodes the postings' position arrays, all shards in one pass, and
+    hands that frame to the shard writer build_segments uses: the same
+    positions, blocks, manifest rows, terms dictionary and meta.json
+    as a batch build of the same corpus. No docs_tokens cache is
+    written. Returns the meta dict.
     """
     os.makedirs(out_dir, exist_ok=True)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     numbered, inner_persisted = assign_doc_numbers(docs)
-    stats = numbered.agg(
-        F.count("*").alias("n_docs"), F.avg("total_words").alias("avgdl")
-    ).collect()[0]
-    n_docs = int(stats["n_docs"])
-    avgdl = float(stats["avgdl"] or 1.0) or 1.0
-    if n_shards is None:
-        n_shards = derive_n_shards(n_docs, spark.sparkContext.defaultParallelism)
-    shard_size = max(1, math.ceil(n_docs / n_shards))
+    meta = _segment_meta(spark, numbered, n_shards, block_size, k1, b)
     numbered = numbered.withColumn(
-        "shard", (F.col("doc_no") / F.lit(shard_size)).cast("int")
+        "shard", (F.col("doc_no") / F.lit(meta["shard_size"])).cast("int")
     ).persist()
 
     (
@@ -786,81 +760,26 @@ def segments_from_postings(
         .parquet(os.path.join(out_dir, "docs_content"))
     )
 
-    keyed = postings.join(
-        numbered.select("doc_id", "doc_no", "shard", F.col("total_words").alias("dl")),
-        "doc_id",
-    ).persist()
-    (
-        keyed.select(
+    positions = (
+        postings.join(
+            numbered.select(
+                "doc_id", "doc_no", "shard", F.col("total_words").cast("int").alias("dl")
+            ),
+            "doc_id",
+        )
+        .select(
             "shard", "term", "doc_no",
-            "positions_title", "positions_desc", "positions_body",
-            F.col("dl").cast("int").alias("dl"),
+            "positions_title", "positions_desc", "positions_body", "dl",
         )
         .repartition("shard")
-        .sortWithinPartitions("term", "doc_no")
-        # arrays -> delta-varint binary (mapInPandas preserves the
-        # within-partition sort, so blocks derived from this table stay
-        # (term, doc_no)-ordered)
-        .mapInPandas(_encode_positions_stream, POSITIONS_SCHEMA)
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy("shard")
-        .parquet(os.path.join(out_dir, "positions"))
-    )
-    encode = _encode_blocks_stream(avgdl, k1, b, block_size)
-    blocks = (
-        keyed.select("shard", "term", "doc_no", "tf", "dl")
-        .repartition(max(n_shards, spark.sparkContext.defaultParallelism), "shard", "term")
         .sortWithinPartitions("shard", "term", "doc_no")
-        .mapInPandas(encode, BLOCKS_SCHEMA)
+        # arrays -> delta-varint binary (mapInPandas keeps the order)
+        .mapInPandas(_encode_positions_stream, POSITIONS_SCHEMA)
     )
-    (
-        blocks.sortWithinPartitions("term", "min_doc_no")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .partitionBy("shard")
-        .parquet(os.path.join(out_dir, "postings"))
-    )
-
-    written = spark.read.parquet(os.path.join(out_dir, "postings"))
-    (
-        written.groupBy("term")
-        .agg(F.sum("n_docs").alias("df"), F.count("*").alias("n_blocks"))
-        .repartitionByRange(4, "term")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .option("compression", "zstd")
-        .parquet(os.path.join(out_dir, "terms"))
-    )
-    meta = {
-        "n_docs": n_docs, "avgdl": avgdl, "n_shards": n_shards,
-        "shard_size": shard_size, "block_size": block_size, "k1": k1, "b": b,
-    }
-    with open(os.path.join(out_dir, "meta.json"), "w") as f:
-        json.dump(meta, f)
-    write_manifest_entry(
-        out_dir, {"shard": -1, "status": "done", "stage": "docmap",
-                  "n_docs": n_docs, "wrote_at": time.time()}
-    )
-    per_shard = {
-        r["shard"]: r
-        for r in written.groupBy("shard").agg(
-            F.sum("n_docs").alias("n_postings"), F.count("*").alias("n_blocks"),
-            F.countDistinct("term").alias("n_terms"),
-        ).collect()
-    }
-    for s in range(n_shards):
-        r = per_shard.get(s)
-        write_manifest_entry(
-            out_dir,
-            {"shard": s, "status": "done", "stage": "postings",
-             "n_postings": int(r["n_postings"]) if r else 0,
-             "n_blocks": int(r["n_blocks"]) if r else 0,
-             "n_terms": int(r["n_terms"]) if r else 0,
-             "wrote_at": time.time()},
-        )
+    _write_shards(spark, positions, out_dir, list(range(meta["n_shards"])), meta)
+    _write_terms(spark, out_dir)
+    _write_meta(out_dir, meta)
     numbered.unpersist()
-    keyed.unpersist()
     if inner_persisted is not None:
         inner_persisted.unpersist()
     return meta
@@ -890,6 +809,12 @@ class SegmentIndex:
         self.path = path
         with open(os.path.join(path, "meta.json")) as f:
             self.meta = json.load(f)
+        codec = self.meta.get("codec", "varint")
+        if codec != "varint":
+            raise ValueError(
+                f"segment {path} has posting codec {codec!r}; only 'varint' "
+                "blocks can be read — rebuild the segment"
+            )
         self._cached: dict[str, DataFrame] = {}
         self._terms_dict: dict | None = None
         self._docmap_dict: dict | None = None
@@ -1016,9 +941,8 @@ class SegmentIndex:
         from nadry_spark.operators.codecs import explode_tf_batches
 
         blocks = self.blocks.where(F.col("term").isin(sorted(set(terms))))
-        codec = self.meta.get("codec", "varint")
         return blocks.mapInPandas(
-            lambda it: explode_tf_batches(it, with_term=True, codec=codec),
+            lambda it: explode_tf_batches(it, with_term=True),
             "term string, doc_no long, tf int",
         )
 

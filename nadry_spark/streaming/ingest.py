@@ -30,10 +30,11 @@ streaming-native equivalent for continuous corpus growth:
 
 from __future__ import annotations
 
+import json
 import os
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -114,20 +115,31 @@ def _read_l1_state(out_dir: str) -> dict | None:
     path = os.path.join(out_dir, _L1_STATE)
     if not os.path.exists(path):
         return None
-    import json
-
     with open(path) as f:
         return json.load(f)
 
 
-def _write_l1_state(out_dir: str, state: dict) -> None:
-    import json
-
-    path = os.path.join(out_dir, _L1_STATE)
+def _write_state(path: str, state: dict) -> None:
+    """Replace a JSON state file atomically (write tmp + rename):
+    readers see the old state or the new one, never a partial file."""
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
         json.dump(state, f)
     os.replace(tmp, path)
+
+
+def _latest_per_doc(postings: DataFrame, docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Latest batch wins per doc_id: keep each doc_id's newest-batch
+    doc row and only the postings of that (doc_id, batch_id); older
+    rows of a re-crawled url drop out. Both keep batch_id."""
+    w = Window.partitionBy("doc_id").orderBy(F.desc("batch_id"))
+    latest_docs = (
+        docs.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
+    )
+    latest_post = postings.join(
+        latest_docs.select("doc_id", "batch_id"), ["doc_id", "batch_id"], "left_semi"
+    )
+    return latest_post, latest_docs
 
 
 def _l1_dirs(out_dir: str, version: int) -> tuple[str, str]:
@@ -150,8 +162,6 @@ def promote_deltas(spark: SparkSession, out_dir: str) -> dict:
     """
     import shutil
 
-    from pyspark.sql import Window
-
     state = _read_l1_state(out_dir)
     folded = state["folded_through"] if state else -1
     version = state["version"] if state else 0
@@ -173,19 +183,14 @@ def promote_deltas(spark: SparkSession, out_dir: str) -> dict:
         post = spark.read.parquet(l1_post_dir).unionByName(post)
         docs = spark.read.parquet(l1_docs_dir).unionByName(docs)
 
-    w = Window.partitionBy("doc_id").orderBy(F.desc("batch_id"))
-    latest_docs = (
-        docs.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
-    )
-    latest_keys = latest_docs.select("doc_id", "batch_id")
-    latest_post = post.join(latest_keys, ["doc_id", "batch_id"], "left_semi")
+    latest_post, latest_docs = _latest_per_doc(post, docs)
 
     new_version = version + 1
     new_post_dir, new_docs_dir = _l1_dirs(out_dir, new_version)
     latest_post.write.mode("overwrite").parquet(new_post_dir)
     latest_docs.write.mode("overwrite").parquet(new_docs_dir)
     new_state = {"version": new_version, "folded_through": new_watermark}
-    _write_l1_state(out_dir, new_state)
+    _write_state(os.path.join(out_dir, _L1_STATE), new_state)
     if state is not None:  # old version unreferenced now; best-effort GC
         shutil.rmtree(os.path.join(out_dir, "l1", f"v{version}"), ignore_errors=True)
     return new_state
@@ -208,8 +213,6 @@ def compact_deltas(
     (parquet listings are pinned at read time, so max_batch_id here can
     never include a batch ingested after the fold started — a fresh
     re-scan could, and would mark unfolded data as finalized)."""
-    from pyspark.sql import Window
-
     state = _read_l1_state(out_dir)
     folded = state["folded_through"] if state else -1
 
@@ -234,13 +237,8 @@ def compact_deltas(
         row = docs.agg(F.max("batch_id").alias("mb")).collect()[0]
         stats["max_batch_id"] = -1 if row["mb"] is None else int(row["mb"])
 
-    w = Window.partitionBy("doc_id").orderBy(F.desc("batch_id"))
-    latest_docs = (
-        docs.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
-    )
-    latest_keys = latest_docs.select("doc_id", "batch_id")
-    postings = deltas.join(latest_keys, ["doc_id", "batch_id"], "left_semi").drop("batch_id")
-    return postings, latest_docs.drop("batch_id")
+    postings, latest_docs = _latest_per_doc(deltas, docs)
+    return postings.drop("batch_id"), latest_docs.drop("batch_id")
 
 
 def finalize_stream_index(
@@ -279,17 +277,13 @@ def finalize_incremental(
     state serving and the next call re-folds the same batches into a
     fresh segment name. Returns the new state dict.
     """
-    import json as _json
-
-    from pyspark.sql import Window
-
     from nadry_spark.sources.segments import SegmentIndex, segments_from_postings
 
     os.makedirs(segments_root, exist_ok=True)
     state_path = os.path.join(segments_root, _SERVING_STATE)
     if os.path.exists(state_path):
         with open(state_path) as f:
-            state = _json.load(f)
+            state = json.load(f)
     else:
         state = {"finalized_through": -1, "segments": []}
     ft = state["finalized_through"]
@@ -302,14 +296,11 @@ def finalize_incremental(
         return state
     hi = int(max_row["mb"])
 
-    w = Window.partitionBy("doc_id").orderBy(F.desc("batch_id"))
-    latest_docs = (
-        docs.withColumn("_rn", F.row_number().over(w)).where(F.col("_rn") == 1).drop("_rn")
-    )
-    postings = (
-        spark.read.parquet(os.path.join(stream_out_dir, "delta_postings"))
-        .where(F.col("batch_id") > ft)
-        .join(latest_docs.select("doc_id", "batch_id"), ["doc_id", "batch_id"], "left_semi")
+    postings, latest_docs = _latest_per_doc(
+        spark.read.parquet(os.path.join(stream_out_dir, "delta_postings")).where(
+            F.col("batch_id") > ft
+        ),
+        docs,
     )
 
     seg_name = f"seg_{ft + 1}_{hi}"
@@ -341,16 +332,13 @@ def finalize_incremental(
             supersedes.setdefault(r["_seg"], []).append(int(r["doc_no"]))
         supersedes = {k: sorted(v) for k, v in supersedes.items()}
     with open(os.path.join(seg_dir, "supersedes.json"), "w") as f:
-        _json.dump(supersedes, f)
+        json.dump(supersedes, f)
 
     new_state = {
         "finalized_through": hi,
         "segments": state["segments"] + [seg_name],
     }
-    tmp = state_path + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(new_state, f)
-    os.replace(tmp, state_path)
+    _write_state(state_path, new_state)
     return new_state
 
 
@@ -365,27 +353,37 @@ def compact_serving(
     compact_deltas, so with an up-to-date L1 tier the input is
     O(L1)+O(new), and the state swap is atomic: a crash leaves the old
     family serving. Old segment dirs are GC'd after the swap unless a
-    snapshot (:mod:`nadry_spark.streaming.snapshots`) still pins them."""
-    import json as _json
+    snapshot (:mod:`nadry_spark.streaming.snapshots`) still pins them.
+    A family that already is the one compacted segment of the latest
+    batch is returned unchanged, without touching any directory."""
     import shutil
 
     from nadry_spark.sources.segments import segments_from_postings
 
     state_path = os.path.join(segments_root, _SERVING_STATE)
-    old_segments: list[str] = []
+    state: dict = {"segments": []}
     if os.path.exists(state_path):
         with open(state_path) as f:
-            old_segments = _json.load(f)["segments"]
+            state = json.load(f)
+    old_segments: list[str] = state["segments"]
 
     fold_stats: dict = {}
     postings, docs = compact_deltas(spark, stream_out_dir, stats=fold_stats)
+    # watermark from the SAME file-listing snapshot compact_deltas
+    # folded — a fresh delta_docs scan here could see a batch ingested
+    # after the fold started and mark it finalized without ever folding
+    # it into any segment
+    hi = fold_stats["max_batch_id"]
+    seg_name = f"seg_compacted_{hi}"
+    if old_segments == [seg_name]:
+        # nothing new since the last compaction: rebuilding would
+        # delete the live (possibly snapshot-pinned) segment it reads
+        return state
     # carry backfilled PageRank popularity through the merge: delta
     # doc_stats hardcode popularity 0.0, so without this a forced merge
     # silently reset every doc's popularity (and with it exact-mode
     # blended rankings) until jobs/pagerank.py re-ran
     if old_segments:
-        from pyspark.sql import functions as _F
-
         pop = None
         for name in old_segments:
             dm = spark.read.parquet(
@@ -396,29 +394,20 @@ def compact_serving(
         # keep the max (backfills write the same global score to every
         # copy, so this is a dedup, not a choice)
         pop = pop.groupBy("doc_id").agg(
-            _F.max("popularity_score").alias("_pop")
+            F.max("popularity_score").alias("_pop")
         )
         docs = (
             docs.drop("popularity_score")
             .join(pop, "doc_id", "left")
-            .withColumn("popularity_score", _F.coalesce(_F.col("_pop"), _F.lit(0.0)))
+            .withColumn("popularity_score", F.coalesce(F.col("_pop"), F.lit(0.0)))
             .drop("_pop")
         )
-    # watermark from the SAME file-listing snapshot compact_deltas
-    # folded — a fresh delta_docs scan here could see a batch ingested
-    # after the fold started and mark it finalized without ever folding
-    # it into any segment
-    hi = fold_stats["max_batch_id"]
-    seg_name = f"seg_compacted_{hi}"
     seg_dir = os.path.join(segments_root, seg_name)
     shutil.rmtree(seg_dir, ignore_errors=True)
     segments_from_postings(spark, postings, docs, seg_dir, **kwargs)
 
     new_state = {"finalized_through": hi, "segments": [seg_name]}
-    tmp = state_path + ".tmp"
-    with open(tmp, "w") as f:
-        _json.dump(new_state, f)
-    os.replace(tmp, state_path)
+    _write_state(state_path, new_state)
     # snapshot-aware GC: a pinned snapshot may still reference the old
     # segments — keep those; only unreferenced dirs are removed
     from nadry_spark.streaming.snapshots import live_segment_names
@@ -433,12 +422,10 @@ def compact_serving(
 def open_serving_index(spark: SparkSession, segments_root: str):
     """MultiSegmentIndex over the incremental serving family recorded
     in serving_state.json (query with bm25.bm25_topk_multi)."""
-    import json as _json
-
     from nadry_spark.sources.segments import MultiSegmentIndex
 
     with open(os.path.join(segments_root, _SERVING_STATE)) as f:
-        state = _json.load(f)
+        state = json.load(f)
     return MultiSegmentIndex(
         spark, [os.path.join(segments_root, n) for n in state["segments"]]
     )

@@ -212,6 +212,17 @@ def test_incremental_finalize_with_recrawl(spark, tiny_pages_path, tmp_path_fact
     for did, p in pops.items():
         assert p == (0.25 if did in seg0_ids else 0.0), did
 
+    # a second compaction with no new batches changes nothing: the
+    # state, the live segment's files and the answers all stay
+    seg_meta = os.path.join(root, state2["segments"][0], "meta.json")
+    inode = os.stat(seg_meta).st_ino
+    before = {q: _topk_multi(msi2, q, k=10) for q in QUERIES}
+    assert compact_serving(spark, out_dir, root, n_shards=4) == state2
+    assert os.stat(seg_meta).st_ino == inode
+    msi3 = open_serving_index(spark, root)
+    for q in QUERIES:
+        assert _topk_multi(msi3, q, k=10) == before[q], q
+
 
 def test_df_corrections_colliding_doc_nos(spark, halves):
     """Per-segment doc_no spaces all start at 0: tombstoned docs in

@@ -213,3 +213,35 @@ def test_finalize_stream_index_matches_batch_segments(spark, stream_dirs, seg, t
         assert [(r["doc_id"], round(r["score"], 10)) for r in a] == [
             (r["doc_id"], round(r["score"], 10)) for r in b
         ], q
+
+    # both writers share one shard writer: the same index content,
+    # keyed by doc_id (doc numbering may differ between the two)
+    from nadry_spark.operators.codecs import decode_position_lists
+
+    def terms(idx):
+        return sorted((r["term"], r["df"]) for r in idx.terms.collect())
+
+    def postings(idx):
+        return sorted(
+            tuple(r)
+            for r in idx.decoded_tf([t for t, _ in terms(idx)])
+            .join(idx.docmap.select("doc_no", "doc_id"), "doc_no")
+            .select("term", "doc_id", "tf")
+            .collect()
+        )
+
+    def positions(idx):
+        ids = {r["doc_no"]: r["doc_id"] for r in idx.docmap.collect()}
+        return {
+            (r["term"], ids[r["doc_no"]]): tuple(
+                decode_position_lists([r[f"pos_{f}_bin"] or b""], [r[f"n_{f}"]]).tolist()
+                for f in ("title", "desc", "body")
+            )
+            for r in idx.positions.collect()
+        }
+
+    assert terms(idx_stream) == terms(idx_batch)
+    assert postings(idx_stream) == postings(idx_batch)
+    assert positions(idx_stream) == positions(idx_batch)
+    for key in ("n_docs", "avgdl"):
+        assert idx_stream.meta[key] == idx_batch.meta[key], key
