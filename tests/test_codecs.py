@@ -74,7 +74,11 @@ def test_block_roundtrip():
     assert L.tolist() == dls.tolist()
     assert blk["min_doc_no"] == 3 and blk["max_doc_no"] == 100000 and blk["n"] == 5
 
-    # a dense full block of 128 docs far from doc_no 0
+
+def test_pfor_block_roundtrip_and_size():
+    # the dense, far-from-zero full block a patched-frame codec would
+    # target: the varint block format must round-trip it and keep the
+    # doc ids at varint's floor of one byte per small gap
     rng = np.random.default_rng(5)
     docs = (np.cumsum(rng.integers(1, 4, 128)) + 5_000_000).astype(np.uint64)
     tfs = rng.integers(1, 9, 128).astype(np.uint64)
@@ -82,7 +86,18 @@ def test_block_roundtrip():
     blk = encode_posting_block(docs, tfs, dls)
     d, t, L = decode_posting_block(blk["docs_bin"], blk["tfs_bin"], blk["dls_bin"], "varint")
     assert (d == docs).all() and (t == tfs).all() and (L == dls).all()
-    assert blk["min_doc_no"] == int(docs[0]) and blk["n"] == 128
+    assert blk["min_doc_no"] == int(docs[0]) and blk["max_doc_no"] == int(docs[-1])
+    assert blk["n"] == 128
+    # first id (< 2**28) takes 4 bytes, each of the 127 gaps (1..3) one byte
+    assert len(blk["docs_bin"]) == 4 + 127
+    assert len(blk["tfs_bin"]) == 128
+    # outlier-heavy values still round-trip through the same varints
+    spiky = np.where(
+        rng.random(128) < 0.06,
+        rng.integers(0, 2**45, 128),
+        rng.integers(0, 4, 128),
+    ).astype(np.uint64)
+    assert (varint_decode(varint_encode(spiky)) == spiky).all()
 
 
 def test_decode_rejects_other_codec():
