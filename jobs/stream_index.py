@@ -1,19 +1,18 @@
 """Streaming index job — ingest new page files and keep a serving
 family of segments current (the continuous-corpus story):
 
-    # one cycle: ingest whatever is new, add one segment for it
+    # one cycle: ingest whatever is new, publish one segment per batch
     python jobs/stream_index.py --input /data/pages --work /data/stream \\
         --serve /data/serving
-
-    # periodically: fold delta history into the L1 tier
-    python jobs/stream_index.py ... --promote
 
     # when the family has grown long: forced-merge to one segment
     python jobs/stream_index.py ... --compact
 
-Each invocation runs ONE availableNow ingest cycle (exactly-once per
-batch via the stream checkpoint under --work), then the chosen
-finalize. Query the result with
+Each invocation runs ONE availableNow ingest cycle — every micro-batch
+is built as a staged segment under --work (exactly-once per batch via
+the stream checkpoint there) — then publishes the staged segments into
+the --serve family (a directory rename: keep --work and --serve on one
+filesystem), or merges the family with --compact. Query the result with
 ``python jobs/query_cli.py --segments <serve-dir> "..."`` — the CLI
 auto-detects the multi-segment serving root.
 
@@ -41,10 +40,9 @@ def main() -> None:
         help="directory of page parquet files, or warc:<dir> (wet:<dir>) to watch "
         "a directory of Common-Crawl WARC archives",
     )
-    ap.add_argument("--work", required=True, help="stream work dir (deltas + checkpoint)")
+    ap.add_argument("--work", required=True,
+                    help="stream work dir (staged batch segments + checkpoint)")
     ap.add_argument("--serve", required=True, help="serving segments root")
-    ap.add_argument("--promote", action="store_true",
-                    help="fold L0 delta batches into the L1 tier after ingest")
     ap.add_argument("--compact", action="store_true",
                     help="forced-merge: rebuild the family into ONE segment")
     ap.add_argument("--auto-compact-after", type=int, default=None, metavar="N",
@@ -65,30 +63,26 @@ def main() -> None:
     from nadry_spark.streaming.ingest import (
         compact_serving,
         finalize_incremental,
-        promote_deltas,
         stream_ingest,
     )
 
     spark = get_spark("nadry_stream_index", master=args.master)
     ckpt = os.path.join(args.work, "checkpoint")
     out = os.path.join(args.work, "out")
-    q = stream_ingest(spark, args.input, out, ckpt)
+    q = stream_ingest(spark, args.input, out, ckpt, n_shards=args.shards)
     q.awaitTermination()
 
-    kwargs = {"n_shards": args.shards} if args.shards else {}
-    if args.promote:
-        promote_deltas(spark, out)
     if args.compact:
-        state = compact_serving(spark, out, args.serve, **kwargs)
+        state = compact_serving(spark, out, args.serve, n_shards=args.shards)
     else:
-        state = finalize_incremental(spark, out, args.serve, **kwargs)
+        state = finalize_incremental(spark, out, args.serve)
         if (
             args.auto_compact_after is not None
             and len(state["segments"]) > args.auto_compact_after
         ):
             # per-query fan-out is one scan per segment; past the
             # threshold the rebuild amortizes over every future query
-            state = compact_serving(spark, out, args.serve, **kwargs)
+            state = compact_serving(spark, out, args.serve, n_shards=args.shards)
             state["auto_compacted"] = True
     if args.snapshot is not None:
         from nadry_spark.streaming.snapshots import create_snapshot

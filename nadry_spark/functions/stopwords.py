@@ -13,8 +13,3 @@ STOP_WORDS = frozenset(
         "that", "the", "to", "was", "were", "will", "with", "this",
     ]
 )
-
-
-def is_not_stop_word(word: str) -> bool:
-    """StopWordFilter.isNotStopWord — case-insensitive membership test."""
-    return word.lower() not in STOP_WORDS

@@ -33,25 +33,15 @@ import re
 import unicodedata
 
 from nadry_spark.functions.porter2 import stem
+from nadry_spark.functions.stopwords import STOP_WORDS
 
 # stem() is a pure function and web-text tokens are Zipf-distributed:
-# a bounded memo turns ~500 stem calls/doc into dict hits (the memo is
-# per Python worker process; 2^17 entries ~ a few MB). A plain dict
-# beats lru_cache here: no lock, no recency bookkeeping; on overflow we
-# just reset (Zipf head repopulates in one batch).
-_STEM_MEMO: dict[str, str] = {}
+# the bounded per-token memo of tokenize() below turns ~500 stem
+# calls/doc into dict hits (the memo is per Python worker process;
+# 2^17 entries ~ a few MB). A plain dict beats lru_cache here: no lock,
+# no recency bookkeeping; on overflow we just reset (Zipf head
+# repopulates in one batch).
 _STEM_MEMO_MAX = 1 << 17
-
-
-def _stem_cached(token: str) -> str:
-    s = _STEM_MEMO.get(token)
-    if s is None:
-        if len(_STEM_MEMO) >= _STEM_MEMO_MAX:
-            _STEM_MEMO.clear()
-        s = stem(token)
-        _STEM_MEMO[token] = s
-    return s
-from nadry_spark.functions.stopwords import STOP_WORDS
 
 EMAIL_PATTERN = re.compile(r"[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,6}", re.ASCII)
 URL_PATTERN = re.compile(r"(?:https?://|www\.)[a-zA-Z0-9.-]+\.[a-zA-Z]{2,6}[^\s]*", re.ASCII)
@@ -86,16 +76,9 @@ def replace_special_tokens(text: str) -> str:
     return result
 
 
-def _apply_stemming(token: str) -> str:
-    if len(token) <= 3 or token == "_email_" or token == "_num_":
-        return token
-    return _stem_cached(token)
-
-
 # full per-token decision memo for the tokenize() hot loop: raw token
-# -> stemmed output, or None when the length/stopword filters drop it.
-# Subsumes the stem memo for this path (same Zipf argument, same
-# bounded-reset discipline); the loop body collapses to one dict probe.
+# -> stemmed output, or None when the length/stopword filters drop it;
+# the loop body collapses to one dict probe.
 _TOK_MEMO: dict[str, str | None] = {}
 
 

@@ -169,13 +169,6 @@ def compact_string_col(text_col: str):
     return F.array_join(firsts, "")
 
 
-def compact_string_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """P3 near-dup filter: keep min-id doc per compact-string signature."""
-    sig = df.select(F.col(id_col), compact_string_col(text_col).alias("sig"))
-    keep = sig.groupBy("sig").agg(F.min(id_col).alias(id_col))
-    return df.join(keep.select(id_col), id_col, "left_semi")
-
-
 # ---------------------------------------------------------------------------
 # shingles
 # ---------------------------------------------------------------------------

@@ -27,7 +27,7 @@ Scale notes (the part that matters at 100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nadry_spark.functions.udfs import extract_udf, tokenize_udf
@@ -46,7 +46,10 @@ def extract_documents(pages: DataFrame) -> DataFrame:
 
     doc_id = sha2(url, 256) — bit-identical to the reference
     (DocumentProcessor.java:151-163). Empty/oversize pages are dropped
-    (P1, DocumentProcessor.java:44-53) via the null-struct filter.
+    (P1, DocumentProcessor.java:44-53) via the null-struct filter. A url
+    captured more than once yields one document, from its latest
+    capture (the reference keeps one Documents row per url, S5:
+    _id = sha256(url)).
     """
     # Parquet split planning packs small page files into few splits
     # (128MB default), which would run the CPU-heavy extraction UDF on
@@ -59,6 +62,18 @@ def extract_documents(pages: DataFrame) -> DataFrame:
     spark = pages.sparkSession
     target = spark.sparkContext.defaultParallelism * 2
     pages = pages.repartition(target, "url")
+    # one capture per url: the latest warc_ts, ties broken by the
+    # greater html, then text, so the pick is deterministic. The window
+    # clusters by url, which the repartition above already provides —
+    # it adds no Exchange.
+    latest = Window.partitionBy("url").orderBy(
+        *(F.col(c).desc_nulls_last() for c in ("warc_ts", "html", "text") if c in pages.columns)
+    )
+    pages = (
+        pages.withColumn("_rn", F.row_number().over(latest))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )
     # WET fall-through: rows with no html but a prefilled text column
     # (Common Crawl conversion records, sources/warc.read_wet) are
     # already extracted — index the text directly (empty title/

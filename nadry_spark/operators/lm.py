@@ -46,32 +46,6 @@ def _doc_trigrams(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def train_char_trigram_counts(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> tuple[DataFrame, DataFrame, int]:
-    """-> (trigram counts (tri, c3), context counts (ctx, c2),
-    charset_size).  c2 counts bigram occurrences AS CONTEXTS (= sum of
-    c3 over the prefix), the correct denominator for P(c3 | c1 c2)."""
-    tris = _doc_trigrams(docs, id_col, text_col)
-    c3 = tris.groupBy("tri").agg(F.count("*").alias("c3"))
-    c2 = (
-        c3.groupBy(F.substring("tri", 1, 2).alias("ctx"))
-        .agg(F.sum("c3").alias("c2"))
-    )
-    charset = (
-        # distinct chars PER DOC before the explode: the fan-out is
-        # bounded by charset-per-doc (~dozens) instead of one row per
-        # character of the corpus; the global distinct is unchanged
-        docs.select(
-            F.explode(F.array_distinct(F.split(text_col, ""))).alias("ch")
-        )
-        .where(F.col("ch") != "")
-        .agg(F.countDistinct("ch").alias("v"))
-        .collect()[0]["v"]
-    )
-    return c3, c2, int(charset)
-
-
 def char_trigram_lm_scores(
     docs: DataFrame,
     text_col: str = "text",

@@ -19,14 +19,18 @@ term-sorted, block-compressed Parquet layout:
       meta.json               n_docs, avgdl, k1, b, block_size,
                               codec ("varint", the only block format)
       manifest/shard_K.json   per-shard lineage + metrics rows
-      docs_tokens/shard=S/    per-doc token arrays (batch build only)
+      docs_tokens/shard=S/    per-doc token arrays: the build's resume
+                              cache (a streamed segment drops it once
+                              every shard is done)
 
-One writer: ``build_segments`` (batch, resumable per shard group) and
-``segments_from_postings`` (streaming finalize and compaction) differ
-only in how they build stage 0 and the positions frame; both hand that
-frame to one shard writer (positions -> blocks derived from the written
-positions -> postings -> manifest rows) and share the terms-dictionary
-and meta.json writers, so the two produce the same layout.
+One writer: ``build_segments`` (batch build, and each streamed
+micro-batch) and ``_merge_segments`` (compaction of a serving family)
+differ only in where stage 0 and the positions frame come from — the
+build tokenizes pages, the merge moves the family's already-encoded
+positions rows to their new doc numbers; both hand that frame to one
+shard writer (positions -> blocks derived from the written positions
+-> postings -> manifest rows) and share the terms-dictionary and
+meta.json writers, so the two produce the same layout.
 
 Design decisions (scale rationale):
 
@@ -166,15 +170,20 @@ def read_manifest(out_dir: str) -> dict[int, dict]:
     return entries
 
 
-def write_manifest_entry(out_dir: str, entry: dict) -> None:
-    """Atomic per-shard manifest commit (write tmp + rename)."""
-    mdir = _manifest_dir(out_dir)
-    os.makedirs(mdir, exist_ok=True)
-    path = os.path.join(mdir, f"shard_{entry['shard']}.json")
+def _write_json(path: str, obj) -> None:
+    """Replace a JSON file atomically (write tmp + rename): readers see
+    the old content or the new, never a partial file."""
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump(entry, f)
+        json.dump(obj, f)
     os.replace(tmp, path)
+
+
+def write_manifest_entry(out_dir: str, entry: dict) -> None:
+    """Atomic per-shard manifest commit."""
+    mdir = _manifest_dir(out_dir)
+    os.makedirs(mdir, exist_ok=True)
+    _write_json(os.path.join(mdir, f"shard_{entry['shard']}.json"), entry)
 
 
 # ---------------------------------------------------------------------------
@@ -345,27 +354,6 @@ def _positions_fn(key, pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
-def _encode_positions_stream(batches):
-    """mapInPandas: long-form position ARRAY columns -> the compressed
-    POSITIONS_SCHEMA (delta-gap varint binary per field). One
-    vectorized encode per field per Arrow batch."""
-    from nadry_spark.operators.codecs import encode_position_lists
-
-    array_cols = ("positions_title", "positions_desc", "positions_body")
-    for pdf in batches:
-        out = {
-            "shard": pdf["shard"],
-            "term": pdf["term"],
-            "doc_no": pdf["doc_no"],
-        }
-        for (name, ncol, bcol), acol in zip(_POS_FIELDS, array_cols):
-            bufs, counts = encode_position_lists(list(pdf[acol]))
-            out[ncol] = counts.astype(np.int32)
-            out[bcol] = bufs
-        out["dl"] = pdf["dl"]
-        yield pd.DataFrame(out)
-
-
 def _encode_blocks_stream(avgdl: float, k1: float, b: float, block_size: int):
     """mapInPandas encoder over (shard, term, doc_no)-sorted partitions.
 
@@ -470,8 +458,7 @@ def _segment_meta(
 
 def _write_meta(out_dir: str, meta: dict) -> None:
     """Commit stage 0: meta.json, then its (shard -1) manifest row."""
-    with open(os.path.join(out_dir, "meta.json"), "w") as f:
-        json.dump(meta, f)
+    _write_json(os.path.join(out_dir, "meta.json"), meta)
     write_manifest_entry(
         out_dir,
         {"shard": -1, "status": "done", "stage": "docmap",
@@ -483,7 +470,7 @@ def _write_shards(
     spark: SparkSession, positions: DataFrame, out_dir: str,
     shards: list[int], meta: dict, timings: dict | None = None,
 ) -> None:
-    """The shard writer both builds share. ``positions`` is a
+    """The shard writer the build and the merge share. ``positions`` is a
     POSITIONS_SCHEMA frame holding ``shards``, each shard written by
     one task and sorted by (term, doc_no).
 
@@ -591,7 +578,7 @@ def build_segments(
     docs_content and per-shard docs_tokens tables) is one atomic unit.
     Then groups of ``shards_per_job`` shards build their positions
     locally, one applyInPandas task per shard over docs_tokens, and go
-    through the shard writer shared with segments_from_postings; each
+    through the shard writer shared with the merge; each
     group commits its own manifest rows, so a rerun resumes at the
     first unfinished shard. Pass a dict as `timings` to get per-stage
     wall seconds back (extract_number, stage0_writes, positions,
@@ -710,78 +697,88 @@ def build_segments(
     return meta
 
 
-def segments_from_postings(
-    spark: SparkSession,
-    postings: DataFrame,
-    docs: DataFrame,
-    out_dir: str,
-    *,
-    n_shards: int | None = None,
-    block_size: int = DEFAULT_BLOCK_SIZE,
-    k1: float = DEFAULT_K1,
-    b: float = DEFAULT_B,
+def _merge_segments(
+    spark: SparkSession, paths: list[str], out_dir: str, n_shards: int | None = None,
 ) -> dict:
-    """Build a queryable segment dir from long-form postings
-    (term, doc_id, positions_title/desc/body; tf is the position count)
-    + doc stats — the bridge from streaming delta segments (or any
-    external postings source) to the serving layout, used by the
-    streaming finalize and compaction.
+    """The merge writer: fold the LIVE docs of the segment family at
+    ``paths`` (ordered oldest first) into one segment at out_dir — the
+    Lucene forced-merge. Returns the meta dict.
 
-    Numbers and shards the docs, writes docmap and docs_content, then
-    encodes the postings' position arrays, all shards in one pass, and
-    hands that frame to the shard writer build_segments uses: the same
-    positions, blocks, manifest rows, terms dictionary and meta.json
-    as a batch build of the same corpus. No docs_tokens cache is
-    written. Returns the meta dict.
+    Tombstoned docs drop out and the live docmap rows are renumbered.
+    Each doc's positions rows and docs_content move to the new
+    (doc_no, shard) by a join on (segment, old doc_no): the encoded
+    position lists and dl are carried as they are (no re-tokenize, no
+    re-encode) into the shard writer build_segments uses. Popularity is
+    the max over every copy of the doc_id in the family, tombstoned
+    copies included (popularity is a url property). k1, b and
+    block_size come from the family's meta.
     """
+    segs = [SegmentIndex(spark, p) for p in paths]
     os.makedirs(out_dir, exist_ok=True)
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    numbered, inner_persisted = assign_doc_numbers(docs)
-    meta = _segment_meta(spark, numbered, n_shards, block_size, k1, b)
+    docs = None
+    for i, (seg, dead) in enumerate(zip(segs, _tombstones(segs))):
+        live = ~F.col("doc_no").isin(sorted(dead)) if dead else F.lit(True)
+        part = seg.docmap.drop("shard").select(
+            "*", F.lit(i).alias("_seg"), live.alias("_live")
+        )
+        docs = part if docs is None else docs.unionByName(part)
+    docs = (
+        docs.withColumn(
+            "popularity_score",
+            F.max("popularity_score").over(Window.partitionBy("doc_id")),
+        )
+        .where("_live")
+        .withColumnRenamed("doc_no", "_old")
+        .drop("_live")
+    )
+    numbered, persisted = assign_doc_numbers(docs)
+    m0 = segs[0].meta
+    meta = _segment_meta(spark, numbered, n_shards, m0["block_size"], m0["k1"], m0["b"])
     numbered = numbered.withColumn(
         "shard", (F.col("doc_no") / F.lit(meta["shard_size"])).cast("int")
-    ).persist()
+    )
+    new_nos = numbered.select("_seg", "_old", "doc_no", "shard")
+
+    def moved(table: str) -> DataFrame:
+        """Every live doc's rows of ``table``, keyed by its new doc_no
+        and shard."""
+        out = None
+        for i, seg in enumerate(segs):
+            part = getattr(seg, table).drop("shard").select("*", F.lit(i).alias("_seg"))
+            out = part if out is None else out.unionByName(part)
+        return out.withColumnRenamed("doc_no", "_old").join(new_nos, ["_seg", "_old"])
 
     (
         numbered.select(
             "doc_id", "doc_no", "shard", "url", "title", "description",
-            "total_words", F.coalesce(F.col("popularity_score"), F.lit(0.0)).alias("popularity_score"),
+            "total_words", "popularity_score",
         )
         .write.mode("overwrite")
         .option("compression", "zstd")
         .parquet(os.path.join(out_dir, "docmap"))
     )
-    content_cols = [c for c in ("content", "links") if c in docs.columns]
     (
-        numbered.select("doc_no", *content_cols)
+        moved("docs_content")
+        .select("doc_no", "content", "links")
         .write.mode("overwrite")
         .option("compression", "zstd")
         .parquet(os.path.join(out_dir, "docs_content"))
     )
-
     positions = (
-        postings.join(
-            numbered.select(
-                "doc_id", "doc_no", "shard", F.col("total_words").cast("int").alias("dl")
-            ),
-            "doc_id",
-        )
+        moved("positions")
         .select(
-            "shard", "term", "doc_no",
-            "positions_title", "positions_desc", "positions_body", "dl",
+            "shard", "term", "doc_no", "n_title", "n_desc", "n_body",
+            "pos_title_bin", "pos_desc_bin", "pos_body_bin", "dl",
         )
         .repartition("shard")
         .sortWithinPartitions("shard", "term", "doc_no")
-        # arrays -> delta-varint binary (mapInPandas keeps the order)
-        .mapInPandas(_encode_positions_stream, POSITIONS_SCHEMA)
     )
     _write_shards(spark, positions, out_dir, list(range(meta["n_shards"])), meta)
     _write_terms(spark, out_dir)
     _write_meta(out_dir, meta)
-    numbered.unpersist()
-    if inner_persisted is not None:
-        inner_persisted.unpersist()
+    persisted.unpersist()
     return meta
 
 
@@ -1008,13 +1005,7 @@ class MultiSegmentIndex:
                         "segments must share scoring parameters"
                     )
         # excluded[i] = doc_nos of segment i superseded by ANY newer segment
-        self.excluded: list[set[int]] = [set() for _ in self.segments]
-        by_name = {os.path.basename(s.path.rstrip("/")): i for i, s in enumerate(self.segments)}
-        for s in self.segments:
-            for older_name, doc_nos in s.supersedes().items():
-                i = by_name.get(older_name)
-                if i is not None:
-                    self.excluded[i].update(int(d) for d in doc_nos)
+        self.excluded = _tombstones(self.segments)
         # LIVE global stats: superseded docs drop out of N and avgdl so
         # scoring matches a fresh rebuild of the latest corpus
         n_total = sum(s.meta["n_docs"] for s in self.segments)
@@ -1135,3 +1126,16 @@ class MultiSegmentIndex:
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
+
+
+def _tombstones(segs: list[SegmentIndex]) -> list[set[int]]:
+    """Per family member, the doc_nos that a newer member's
+    supersedes.json replaces (re-crawled urls)."""
+    dead: list[set[int]] = [set() for _ in segs]
+    by_name = {os.path.basename(s.path.rstrip("/")): i for i, s in enumerate(segs)}
+    for s in segs:
+        for older_name, doc_nos in s.supersedes().items():
+            i = by_name.get(older_name)
+            if i is not None:
+                dead[i].update(int(d) for d in doc_nos)
+    return dead

@@ -34,9 +34,11 @@ import re
 import shutil
 import time
 
+from nadry_spark.sources.segments import _write_json
+from nadry_spark.streaming.ingest import _read_state, open_serving_index
+
 _SNAP_DIR = "snapshots"
 _SNAP_RE = re.compile(r"^snap_(\d+)\.json$")
-_SERVING_STATE = "serving_state.json"
 
 
 def _snap_dir(segments_root: str) -> str:
@@ -66,9 +68,7 @@ def create_snapshot(segments_root: str, note: str | None = None) -> dict:
     snapshot. Calling with an unchanged serving state creates a new id
     over the same segment list — ids are commit points, not content
     hashes."""
-    state_path = os.path.join(segments_root, _SERVING_STATE)
-    with open(state_path) as f:
-        state = json.load(f)
+    state = _read_state(segments_root)
     snaps = list_snapshots(segments_root)
     new_id = (snaps[-1]["id"] + 1) if snaps else 1
     snap = {
@@ -81,11 +81,7 @@ def create_snapshot(segments_root: str, note: str | None = None) -> dict:
     }
     d = _snap_dir(segments_root)
     os.makedirs(d, exist_ok=True)
-    path = os.path.join(d, f"snap_{new_id}.json")
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(snap, f)
-    os.replace(tmp, path)
+    _write_json(os.path.join(d, f"snap_{new_id}.json"), snap)
     return snap
 
 
@@ -194,8 +190,6 @@ def snapshot_diff(spark, segments_root: str, from_id: int, to_id: int | None = N
 
     a = open_snapshot(spark, segments_root, from_id)
     if to_id is None:
-        from nadry_spark.streaming.ingest import open_serving_index
-
         b = open_serving_index(spark, segments_root)
     else:
         b = open_snapshot(spark, segments_root, to_id)
@@ -244,11 +238,7 @@ def snapshot_diff(spark, segments_root: str, from_id: int, to_id: int | None = N
 def live_segment_names(segments_root: str) -> set[str]:
     """Segment dir names referenced by the current serving state or by
     any snapshot — everything GC must keep."""
-    live: set[str] = set()
-    state_path = os.path.join(segments_root, _SERVING_STATE)
-    if os.path.exists(state_path):
-        with open(state_path) as f:
-            live.update(json.load(f)["segments"])
+    live = set(_read_state(segments_root)["segments"])
     for snap in list_snapshots(segments_root):
         live.update(snap["segments"])
     return live

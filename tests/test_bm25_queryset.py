@@ -76,7 +76,9 @@ def test_queryset_multi_matches_serving_per_query(spark, idx, tmp_path_factory):
     paths = []
     for i, (lo, hi) in enumerate([(0, n // 2), (n // 2, n)]):
         part = str(base / f"pages{i}.parquet")
-        paq.write_table(table.slice(lo, hi - lo), part)
+        # microsecond warc_ts: the build reads it (latest capture per
+        # url), and Spark cannot read the nanoseconds pyarrow would write
+        paq.write_table(table.slice(lo, hi - lo), part, coerce_timestamps="us")
         seg = str(base / f"seg{i}")
         build_segments(spark, spark.read.parquet(part), seg, n_shards=3, shards_per_job=3)
         paths.append(seg)

@@ -123,7 +123,6 @@ def test_incremental_finalize_with_recrawl(spark, tiny_pages_path, tmp_path_fact
 
     from nadry_spark.streaming.ingest import (
         finalize_incremental,
-        finalize_stream_index,
         open_serving_index,
         stream_ingest,
     )
@@ -140,8 +139,8 @@ def test_incremental_finalize_with_recrawl(spark, tiny_pages_path, tmp_path_fact
 
     for i, (lo, hi) in enumerate(slices):
         pq.write_table(table.slice(lo, hi - lo), os.path.join(input_dir, f"p{i}.parquet"))
-        stream_ingest(spark, input_dir, out_dir, ckpt).awaitTermination(300)
-        state = finalize_incremental(spark, out_dir, root, n_shards=2)
+        stream_ingest(spark, input_dir, out_dir, ckpt, n_shards=2).awaitTermination(300)
+        state = finalize_incremental(spark, out_dir, root)
     assert len(state["segments"]) == 3
 
     # re-crawl: the FIRST page comes back with different content
@@ -151,8 +150,8 @@ def test_incremental_finalize_with_recrawl(spark, tiny_pages_path, tmp_path_fact
     pq.write_table(
         pa.Table.from_pylist([first], schema=schema), os.path.join(input_dir, "p3.parquet")
     )
-    stream_ingest(spark, input_dir, out_dir, ckpt).awaitTermination(300)
-    state = finalize_incremental(spark, out_dir, root, n_shards=2)
+    stream_ingest(spark, input_dir, out_dir, ckpt, n_shards=2).awaitTermination(300)
+    state = finalize_incremental(spark, out_dir, root)
     assert len(state["segments"]) == 4
 
     msi = open_serving_index(spark, root)
@@ -160,10 +159,16 @@ def test_incremental_finalize_with_recrawl(spark, tiny_pages_path, tmp_path_fact
     assert sum(len(e) for e in msi.excluded) == 1
     assert msi.meta["n_docs"] == n  # live docs: re-crawl replaces, not adds
 
-    # ground truth: full rebuild over the compacted latest corpus
+    # ground truth: a batch build of the latest corpus
+    latest = str(base / "latest.parquet")
+    pq.write_table(
+        pa.concat_tables([pa.Table.from_pylist([first], schema=schema), table.slice(1)]),
+        latest,
+    )
     full_dir = str(base / "full")
-    finalize_stream_index(spark, out_dir, full_dir, n_shards=4)
-    from nadry_spark.sources.segments import SegmentIndex
+    from nadry_spark.sources.segments import SegmentIndex, build_segments
+
+    build_segments(spark, spark.read.parquet(latest), full_dir, n_shards=4)
 
     idx_full = SegmentIndex(spark, full_dir)
     for q in QUERIES + ["zzrecrawl marker"]:
@@ -178,7 +183,7 @@ def test_incremental_finalize_with_recrawl(spark, tiny_pages_path, tmp_path_fact
     # forced-merge (compact_serving): family folds to ONE segment with
     # identical answers; old segment dirs are GC'd after the state swap.
     # First backfill a sentinel popularity into segment 0 — the merge
-    # must PRESERVE it (delta doc_stats would otherwise reset to 0).
+    # must PRESERVE it (a new build would otherwise reset it to 0).
     import shutil
 
     from pyspark.sql import functions as F

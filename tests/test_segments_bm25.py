@@ -224,3 +224,31 @@ def test_segment_index_rejects_other_codec(spark, tmp_path):
     (tmp_path / "meta.json").write_text(json.dumps(meta))
     with pytest.raises(ValueError, match="pfor"):
         SegmentIndex(spark, str(tmp_path))
+
+
+def test_build_keeps_latest_capture_per_url(spark, tmp_path):
+    """A url captured twice in one build is ONE document, built from its
+    latest capture (the reference keeps one Documents row per url)."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    from nadry_spark.operators.bm25 import bm25_topk
+    from nadry_spark.sources.pages import PAGES_SCHEMA_DDL, build_page
+    from nadry_spark.sources.segments import SegmentIndex, build_segments
+
+    rows = [build_page(i, 10) for i in range(6)]
+    later = dict(
+        rows[2],
+        warc_ts=rows[2]["warc_ts"] + dt.timedelta(days=1),
+        html=rows[2]["html"] + b"<p>zzlater capture</p>",
+    )
+    pages = spark.createDataFrame([later] + rows, PAGES_SCHEMA_DDL)
+    out = str(tmp_path / "seg")
+    meta = build_segments(spark, pages, out, n_shards=2)
+    assert meta["n_docs"] == 6
+    idx = SegmentIndex(spark, out)
+    urls = [r["url"] for r in idx.docmap.select("url").collect()]
+    assert sorted(urls) == sorted(r["url"] for r in rows)
+    hit = bm25_topk(idx, "zzlater", k=10).collect()
+    assert [r["url"] for r in hit] == [rows[2]["url"]]

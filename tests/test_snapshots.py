@@ -40,8 +40,8 @@ def test_snapshot_time_travel_and_gc(spark, tiny_pages_path, tmp_path_factory):
 
     # cycle 1: first half of the corpus, then pin snapshot 1
     pq.write_table(table.slice(0, n // 2), os.path.join(input_dir, "p0.parquet"))
-    stream_ingest(spark, input_dir, out_dir, ckpt).awaitTermination(300)
-    finalize_incremental(spark, out_dir, root, n_shards=2)
+    stream_ingest(spark, input_dir, out_dir, ckpt, n_shards=2).awaitTermination(300)
+    finalize_incremental(spark, out_dir, root)
     snap1 = create_snapshot(root, note="after first half")
     assert snap1["id"] == 1 and snap1["parent"] is None
     want_snap1 = _topk(open_serving_index(spark, root), "news report")
@@ -53,8 +53,8 @@ def test_snapshot_time_travel_and_gc(spark, tiny_pages_path, tmp_path_factory):
     rest = table.slice(n // 2, n - n // 2)
     cycle2 = pa.Table.from_pylist([first], schema=table.schema)
     pq.write_table(pa.concat_tables([rest, cycle2]), os.path.join(input_dir, "p1.parquet"))
-    stream_ingest(spark, input_dir, out_dir, ckpt).awaitTermination(300)
-    state = finalize_incremental(spark, out_dir, root, n_shards=2)
+    stream_ingest(spark, input_dir, out_dir, ckpt, n_shards=2).awaitTermination(300)
+    state = finalize_incremental(spark, out_dir, root)
     assert len(state["segments"]) == 2
     snap2 = create_snapshot(root)
     assert snap2["id"] == 2 and snap2["parent"] == 1

@@ -1,64 +1,122 @@
-"""Structured Streaming ingest tests: delta segments match the batch
-build; watermarked window agg; stateful first-seen dedup."""
+"""Structured Streaming ingest tests: each micro-batch lands as a
+segment equal to the batch build; publish and merge keep the family
+equal to the batch build of the latest corpus; watermarked window agg;
+stateful first-seen dedup."""
 
 import os
+import shutil
 
 import pyarrow.parquet as pq
 import pytest
 
 
-@pytest.fixture(scope="module")
-def stream_dirs(spark, tiny_pages_path, tmp_path_factory):
-    """Split the tiny corpus into 3 input files and run the ingest
-    stream to completion (availableNow)."""
-    import pyarrow as pa
-
-    base = tmp_path_factory.mktemp("stream")
-    input_dir = str(base / "in")
-    out_dir = str(base / "out")
-    ckpt = str(base / "ckpt")
-    os.makedirs(input_dir)
-    table = pq.read_table(tiny_pages_path)
-    n = table.num_rows
-    for i, (lo, hi) in enumerate([(0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, n)]):
-        pq.write_table(table.slice(lo, hi - lo), os.path.join(input_dir, f"part{i}.parquet"))
-
+def _ingest(spark, table, base, slices, start=0):
+    """Write one input file per (lo, hi) slice of ``table`` (named from
+    ``start`` on) and run the ingest stream, one file per micro-batch."""
     from nadry_spark.streaming.ingest import stream_ingest
 
+    input_dir, out_dir, ckpt = (str(base / d) for d in ("in", "out", "ckpt"))
+    os.makedirs(input_dir, exist_ok=True)
+    for i, (lo, hi) in enumerate(slices, start):
+        pq.write_table(table.slice(lo, hi - lo), os.path.join(input_dir, f"part{i}.parquet"))
     q = stream_ingest(spark, input_dir, out_dir, ckpt, max_files_per_trigger=1)
     q.awaitTermination(300)
     return input_dir, out_dir, ckpt
 
 
-def test_stream_deltas_match_batch_build(spark, stream_dirs, tiny_pages_path):
-    from nadry_spark.operators.index_build import build_index
-    from nadry_spark.streaming.ingest import compact_deltas
+def _thirds(n):
+    return [(0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, n)]
+
+
+@pytest.fixture(scope="module")
+def stream_dirs(spark, tiny_pages_path, tmp_path_factory):
+    """Split the tiny corpus into 3 input files and run the ingest
+    stream to completion (availableNow): 3 staged batch segments."""
+    table = pq.read_table(tiny_pages_path)
+    return _ingest(spark, table, tmp_path_factory.mktemp("stream"), _thirds(table.num_rows))
+
+
+def _staged(out_dir):
+    staged = os.path.join(out_dir, "staged")
+    return [os.path.join(staged, n) for n in sorted(os.listdir(staged))]
+
+
+def _copy_out(stream_dirs, tmp_path):
+    """A private copy of the module stream's output: publishing moves
+    the staged segments away."""
+    out_dir = str(tmp_path / "out")
+    shutil.copytree(stream_dirs[1], out_dir)
+    return out_dir, str(tmp_path / "serving")
+
+
+def _index(idx, dead=frozenset()):
+    """A segment's index keyed by doc_id (doc numbering differs between
+    builds), tombstoned doc_nos left out: ({(term, doc_id): tf}
+    decoded from the blocks, {(term, doc_id): (title, desc, body)
+    position lists})."""
+    from nadry_spark.operators.codecs import decode_position_lists
+
+    ids = {r["doc_no"]: r["doc_id"] for r in idx.docmap.select("doc_no", "doc_id").collect()}
+    terms = [r["term"] for r in idx.terms.select("term").collect()]
+    postings = {
+        (r["term"], ids[r["doc_no"]]): r["tf"]
+        for r in idx.decoded_tf(terms).collect()
+        if r["doc_no"] not in dead
+    }
+    positions = {
+        (r["term"], ids[r["doc_no"]]): tuple(
+            decode_position_lists([r[f"pos_{f}_bin"] or b""], [r[f"n_{f}"]]).tolist()
+            for f in ("title", "desc", "body")
+        )
+        for r in idx.positions.collect()
+        if r["doc_no"] not in dead
+    }
+    return postings, positions
+
+
+def _family_index(segs, excluded=None):
+    """_index over a family: each live doc lives in exactly one member."""
+    postings, positions = {}, {}
+    for i, s in enumerate(segs):
+        p, q = _index(s, excluded[i] if excluded else frozenset())
+        assert not p.keys() & postings.keys()
+        postings.update(p)
+        positions.update(q)
+    return postings, positions
+
+
+def test_stream_deltas_match_batch_build(spark, stream_dirs, seg):
+    """Each micro-batch lands as one segment built by build_segments:
+    together the staged segments hold exactly the batch build's
+    decoded postings and positions."""
+    from nadry_spark.sources.segments import SegmentIndex
 
     _, out_dir, _ = stream_dirs
-    postings_s, docs_s = compact_deltas(spark, out_dir)
-    got = {
-        (r["term"], r["doc_id"]): (r["tf"], r["weight"]) for r in postings_s.collect()
-    }
-    pages = spark.read.parquet(tiny_pages_path)
-    postings_b, _ = build_index(pages)
-    want = {
-        (r["term"], r["doc_id"]): (r["tf"], r["weight"]) for r in postings_b.collect()
-    }
-    assert got == want
-    assert docs_s.count() == 40
+    staged = [SegmentIndex(spark, d) for d in _staged(out_dir)]
+    assert len(staged) == 3
+    assert sum(s.meta["n_docs"] for s in staged) == 40
+    assert _family_index(staged) == _index(seg[0])
 
 
 def test_stream_resume_is_incremental(spark, stream_dirs):
     """Restarting the ingest with the same checkpoint processes nothing
-    new (exactly-once per batch)."""
+    new (exactly-once per batch): the staged segments stay as they
+    are."""
     from nadry_spark.streaming.ingest import stream_ingest
 
     input_dir, out_dir, ckpt = stream_dirs
-    before = spark.read.parquet(os.path.join(out_dir, "delta_postings")).count()
+
+    def listing():
+        return sorted(
+            (os.path.join(r, f), os.stat(os.path.join(r, f)).st_mtime_ns)
+            for r, _, files in os.walk(os.path.join(out_dir, "staged"))
+            for f in files
+        )
+
+    before = listing()
     q = stream_ingest(spark, input_dir, out_dir, ckpt)
     q.awaitTermination(120)
-    after = spark.read.parquet(os.path.join(out_dir, "delta_postings")).count()
-    assert after == before
+    assert listing() == before
 
 
 def test_crawl_rate_stats_windowed(spark, stream_dirs):
@@ -122,90 +180,50 @@ def test_stateful_first_seen_dedups(spark, stream_dirs, tmp_path_factory):
     assert len(urls) == len(set(urls)) == 6
 
 
-def test_tiered_compaction_bounds_reads_and_matches_full(
-    spark, tiny_pages_path, tmp_path_factory
-):
-    """Three ingest+finalize cycles with promotion between: results
-    stay identical to the full-history fold (== the batch build), and
-    the third compaction's L0 read is bounded by the NEWEST batch, not
-    3x history (VERDICT r02 #3)."""
-    from nadry_spark.operators.index_build import build_index
-    from nadry_spark.streaming.ingest import (
-        compact_deltas,
-        promote_deltas,
-        stream_ingest,
-    )
+def test_finalize_publishes_new_batches_and_matches_full(spark, tiny_pages_path, seg, tmp_path_factory):
+    """Three ingest + finalize cycles, then a re-crawl of the first
+    slice: each finalize publishes only the new batch, the re-crawl
+    tombstones exactly the first slice's docs, and the family's live
+    index equals the batch build of the latest corpus."""
+    from nadry_spark.sources.segments import SegmentIndex
+    from nadry_spark.streaming.ingest import finalize_incremental, open_serving_index
 
     base = tmp_path_factory.mktemp("lsm")
-    input_dir = str(base / "in")
-    out_dir = str(base / "out")
-    ckpt = str(base / "ckpt")
-    os.makedirs(input_dir)
+    root = str(base / "serving")
     table = pq.read_table(tiny_pages_path)
     n = table.num_rows
-    slices = [(0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, n)]
-    cycle_stats = []
+    slices = _thirds(n) + [(0, n // 3)]
     for i, (lo, hi) in enumerate(slices):
-        pq.write_table(
-            table.slice(lo, hi - lo), os.path.join(input_dir, f"part{i}.parquet")
-        )
-        q = stream_ingest(spark, input_dir, out_dir, ckpt)
-        q.awaitTermination(300)
-        stats: dict = {}
-        postings, docs = compact_deltas(spark, out_dir, stats=stats)
-        assert docs.count() == hi  # every doc ingested so far survives
-        cycle_stats.append(stats)
-        if i < len(slices) - 1:
-            promote_deltas(spark, out_dir)
+        _, out_dir, _ = _ingest(spark, table, base, [(lo, hi)], start=i)
+        state = finalize_incremental(spark, out_dir, root)
+        assert state["finalized_through"] == i
+        assert len(state["segments"]) == i + 1
+        newest = SegmentIndex(spark, os.path.join(root, state["segments"][-1]))
+        assert newest.meta["n_docs"] == hi - lo
 
-    # (b) bounded read: cycle 3 scans only the newest batch from L0
-    s3 = cycle_stats[-1]
-    newest = slices[-1][1] - slices[-1][0]
-    assert s3["folded_through"] >= 1
-    assert s3["l0_docs_rows"] == newest
-    assert s3["l1_docs_rows"] == n - newest
-    # cycle 1 had no L1 yet: full-history degradation path
-    assert cycle_stats[0]["l1_docs_rows"] == 0
-
-    # (a) identical to the ground-truth batch build over the full corpus
-    got = {
-        (r["term"], r["doc_id"]): (r["tf"], r["weight"]) for r in postings.collect()
-    }
-    postings_b, _ = build_index(spark.read.parquet(tiny_pages_path))
-    want = {
-        (r["term"], r["doc_id"]): (r["tf"], r["weight"]) for r in postings_b.collect()
-    }
-    assert got == want
-
-    # re-crawl across the tier boundary: re-ingest the FIRST slice; the
-    # re-crawled docs supersede their L1 rows, nothing duplicates
-    promote_deltas(spark, out_dir)
-    pq.write_table(table.slice(0, slices[0][1]), os.path.join(input_dir, "part3.parquet"))
-    q = stream_ingest(spark, input_dir, out_dir, ckpt)
-    q.awaitTermination(300)
-    stats4: dict = {}
-    postings4, docs4 = compact_deltas(spark, out_dir, stats=stats4)
-    assert docs4.count() == n
-    assert stats4["l0_docs_rows"] == slices[0][1]  # only the re-crawl batch
-    got4 = {
-        (r["term"], r["doc_id"]): (r["tf"], r["weight"]) for r in postings4.collect()
-    }
-    assert got4 == want
+    idx_batch, _, _ = seg
+    msi = open_serving_index(spark, root)
+    assert msi.excluded == [set(range(n // 3)), set(), set(), set()]
+    assert msi.meta["n_docs"] == n
+    assert msi.meta["avgdl"] == pytest.approx(idx_batch.meta["avgdl"], rel=1e-12)
+    assert _family_index(msi.segments, msi.excluded) == _index(idx_batch)
 
 
-def test_finalize_stream_index_matches_batch_segments(spark, stream_dirs, seg, tmp_path_factory):
-    """Streaming deltas finalized into segments answer BM25 queries
-    identically to the batch-built segments over the same corpus."""
+def test_compacted_stream_matches_batch_segments(spark, stream_dirs, seg, tmp_path):
+    """Streamed segments, published and merged into one segment, answer
+    BM25 queries identically to the batch-built segment over the same
+    corpus and hold the same index: terms, decoded postings, positions,
+    n_docs and avgdl."""
     from nadry_spark.operators.bm25 import bm25_topk
     from nadry_spark.sources.segments import SegmentIndex
-    from nadry_spark.streaming.ingest import finalize_stream_index
+    from nadry_spark.streaming.ingest import compact_serving, finalize_incremental
 
-    _, out_dir, _ = stream_dirs
-    seg_dir = str(tmp_path_factory.mktemp("stream_segments"))
-    meta = finalize_stream_index(spark, out_dir, seg_dir, n_shards=4)
-    assert meta["n_docs"] == 40
+    out_dir, root = _copy_out(stream_dirs, tmp_path)
+    assert len(finalize_incremental(spark, out_dir, root)["segments"]) == 3
+    state = compact_serving(spark, out_dir, root, n_shards=4)
+    idx_stream = SegmentIndex(spark, os.path.join(root, state["segments"][0]))
+    assert idx_stream.meta["n_docs"] == 40
 
-    idx_stream = SegmentIndex(spark, seg_dir)
     idx_batch, _, _ = seg
     for q in ("news report update", "news 2024"):
         a = bm25_topk(idx_stream, q, k=10).collect()
@@ -214,34 +232,62 @@ def test_finalize_stream_index_matches_batch_segments(spark, stream_dirs, seg, t
             (r["doc_id"], round(r["score"], 10)) for r in b
         ], q
 
-    # both writers share one shard writer: the same index content,
-    # keyed by doc_id (doc numbering may differ between the two)
-    from nadry_spark.operators.codecs import decode_position_lists
-
     def terms(idx):
         return sorted((r["term"], r["df"]) for r in idx.terms.collect())
 
-    def postings(idx):
-        return sorted(
-            tuple(r)
-            for r in idx.decoded_tf([t for t, _ in terms(idx)])
-            .join(idx.docmap.select("doc_no", "doc_id"), "doc_no")
-            .select("term", "doc_id", "tf")
-            .collect()
-        )
-
-    def positions(idx):
-        ids = {r["doc_no"]: r["doc_id"] for r in idx.docmap.collect()}
-        return {
-            (r["term"], ids[r["doc_no"]]): tuple(
-                decode_position_lists([r[f"pos_{f}_bin"] or b""], [r[f"n_{f}"]]).tolist()
-                for f in ("title", "desc", "body")
-            )
-            for r in idx.positions.collect()
-        }
-
     assert terms(idx_stream) == terms(idx_batch)
-    assert postings(idx_stream) == postings(idx_batch)
-    assert positions(idx_stream) == positions(idx_batch)
+    assert _index(idx_stream) == _index(idx_batch)
     for key in ("n_docs", "avgdl"):
         assert idx_stream.meta[key] == idx_batch.meta[key], key
+
+
+def test_finalize_stops_at_uncommitted_batch(spark, stream_dirs, tmp_path):
+    """A staged batch whose build has not committed (a shard's manifest
+    row missing) is not published and the watermark stops before it,
+    so the committed batch after it waits too; once it commits, the
+    next finalize publishes both."""
+    from nadry_spark.streaming.ingest import finalize_incremental, open_serving_index
+
+    out_dir, root = _copy_out(stream_dirs, tmp_path)
+    _, b1, b2 = _staged(out_dir)
+    row = os.path.join(b1, "manifest", "shard_0.json")
+    os.rename(row, row + ".held")
+    assert finalize_incremental(spark, out_dir, root) == {
+        "finalized_through": 0, "segments": ["seg_0_0"]
+    }
+    assert os.path.isdir(b1) and os.path.isdir(b2)
+
+    os.rename(row + ".held", row)
+    assert finalize_incremental(spark, out_dir, root) == {
+        "finalized_through": 2, "segments": ["seg_0_0", "seg_1_1", "seg_2_2"]
+    }
+    assert _staged(out_dir) == []
+    # published segments drop the build's resume cache
+    assert not os.path.exists(os.path.join(root, "seg_1_1", "docs_tokens"))
+    assert open_serving_index(spark, root).meta["n_docs"] == 40
+
+
+def test_finalize_recovers_from_crash_before_state_swap(spark, stream_dirs, tmp_path, monkeypatch):
+    """A publish that dies after moving its segments into the serving
+    root but before the serving_state.json swap leaves the family as it
+    was; the next finalize publishes the moved batches."""
+    from nadry_spark.streaming import ingest
+
+    out_dir, root = _copy_out(stream_dirs, tmp_path)
+    write = ingest._write_json
+
+    def crash_on_state(path, obj):
+        if path.endswith("serving_state.json"):
+            raise OSError("crash before the state swap")
+        write(path, obj)
+
+    monkeypatch.setattr(ingest, "_write_json", crash_on_state)
+    with pytest.raises(OSError):
+        ingest.finalize_incremental(spark, out_dir, root)
+    monkeypatch.undo()
+    assert sorted(os.listdir(root)) == ["seg_0_0", "seg_1_1", "seg_2_2"]
+    assert ingest._read_state(root)["segments"] == []
+
+    state = ingest.finalize_incremental(spark, out_dir, root)
+    assert state == {"finalized_through": 2, "segments": ["seg_0_0", "seg_1_1", "seg_2_2"]}
+    assert ingest.open_serving_index(spark, root).meta["n_docs"] == 40

@@ -150,13 +150,17 @@ def test_warc_streaming_decode_bounded_memory(tmp_path_factory):
 
 def test_warc_streaming_ingest_to_serving(spark, tiny_pages_path, tmp_path_factory):
     """End-to-end: WARC archives dropped into a watched directory ->
-    stream_ingest (warc: scheme) -> finalize -> serving index that
-    answers rank-identically to a batch build from the parquet form of
-    the same corpus."""
+    stream_ingest (warc: scheme) -> finalize + compact -> serving index
+    that answers rank-identically to a batch build from the parquet
+    form of the same corpus."""
     from nadry_spark.operators.bm25 import bm25_topk
     from nadry_spark.sources.segments import SegmentIndex, build_segments
     from nadry_spark.sources.warc import write_warc
-    from nadry_spark.streaming.ingest import finalize_stream_index, stream_ingest
+    from nadry_spark.streaming.ingest import (
+        compact_serving,
+        finalize_incremental,
+        stream_ingest,
+    )
 
     base = tmp_path_factory.mktemp("warcstream")
     warc_dir = base / "archives"
@@ -171,9 +175,10 @@ def test_warc_streaming_ingest_to_serving(spark, tiny_pages_path, tmp_path_facto
     stream_ingest(
         spark, f"warc:{warc_dir}", out_dir, ckpt, max_files_per_trigger=1
     ).awaitTermination(300)
-    seg_dir = str(base / "seg")
-    finalize_stream_index(spark, out_dir, seg_dir, n_shards=3)
-    idx_s = SegmentIndex(spark, seg_dir)
+    root = str(base / "serving")
+    assert len(finalize_incremental(spark, out_dir, root)["segments"]) == 2
+    state = compact_serving(spark, out_dir, root, n_shards=3)
+    idx_s = SegmentIndex(spark, os.path.join(root, state["segments"][0]))
 
     batch_dir = str(base / "batch_seg")
     build_segments(
@@ -402,7 +407,7 @@ def test_wet_streaming_ingest(spark, tmp_path_factory):
         q.processAllAvailable()
     finally:
         q.stop()
-    docs = spark.read.parquet(out + "/delta_docs")
+    docs = spark.read.parquet(out + "/staged/batch_*/docmap")
     rows = {r["url"]: r for r in docs.collect()}
     assert len(rows) == 4
     assert all(u.startswith("https://ws") for u in rows)
