@@ -7,8 +7,9 @@ signal, served by operators/anchors.anchor_boosted_topk.
     python jobs/anchors.py --pages /data/pages.parquet --segments /data/segments
     python jobs/anchors.py --pages warc:/data/archives --segments /data/serving_root
 
-Like jobs/pagerank.py, a multi-segment serving root is auto-detected
-via serving_state.json and every member segment gets its slice.
+Like jobs/pagerank.py, the directory opens through
+ingest.open_serving_index, so every member segment of a multi-segment
+serving root gets its slice.
 """
 
 from __future__ import annotations
@@ -36,6 +37,7 @@ def main() -> None:
     from nadry_spark.operators.anchors import anchor_term_index_tokenized
     from nadry_spark.session import get_spark
     from nadry_spark.sources.catalog import read_table
+    from nadry_spark.streaming.ingest import open_serving_index
 
     spark = get_spark("nadry_anchors", master=args.master)
     t0 = time.time()
@@ -49,24 +51,15 @@ def main() -> None:
     )
     at = anchor_term_index_tokenized(links).localCheckpoint()
 
-    state_path = os.path.join(args.segments, "serving_state.json")
-    if os.path.exists(state_path):
-        with open(state_path) as f:
-            seg_dirs = [
-                os.path.join(args.segments, n) for n in json.load(f)["segments"]
-            ]
-    else:
-        seg_dirs = [args.segments]
-
+    segments = open_serving_index(spark, args.segments).segments
     total = 0
-    for seg_dir in seg_dirs:
-        docmap = spark.read.parquet(os.path.join(seg_dir, "docmap"))
+    for seg in segments:
         rows = (
-            docmap.select("doc_no", F.col("url").alias("dst"))
+            seg.docmap.select("doc_no", F.col("url").alias("dst"))
             .join(at, "dst")
             .select("doc_no", "term", "tf", "n_srcs")
         )
-        out = os.path.join(seg_dir, "anchors")
+        out = os.path.join(seg.path, "anchors")
         rows.write.mode("overwrite").parquet(out)
         total += spark.read.parquet(out).count()
 
@@ -74,7 +67,7 @@ def main() -> None:
         json.dumps(
             {
                 "event": "anchors_done",
-                "segments": len(seg_dirs),
+                "segments": len(segments),
                 "anchor_term_rows": total,
                 "elapsed_sec": round(time.time() - t0, 2),
             }

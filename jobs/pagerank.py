@@ -1,5 +1,5 @@
 """PageRank job: reads a built segment dir — or an incremental
-multi-segment serving root (auto-detected via serving_state.json) —
+multi-segment serving root (ingest.open_serving_index tells them apart) —
 computes reference-exact PageRank over the GLOBAL doc link graph and
 writes popularity back into each segment's docmap.
 
@@ -35,63 +35,43 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
+    from functools import reduce
+
+    from pyspark.sql import DataFrame
 
     from nadry_spark.operators.pagerank import apply_pagerank, pagerank
     from nadry_spark.session import get_spark
+    from nadry_spark.streaming.ingest import open_serving_index
 
     spark = get_spark("nadry_pagerank", master=args.master)
     t0 = time.time()
 
-    state_path = os.path.join(args.segments, "serving_state.json")
-    if os.path.exists(state_path):
-        # multi-segment family: rank over the GLOBAL live link graph
-        # (tombstoned re-crawls excluded), then back-fill each
-        # segment's docmap with its slice of the scores
-        with open(state_path) as f:
-            seg_dirs = [
-                os.path.join(args.segments, n) for n in json.load(f)["segments"]
-            ]
-        from nadry_spark.sources.segments import MultiSegmentIndex
-
-        msi = MultiSegmentIndex(spark, seg_dirs)
-        parts = []
-        for i, seg in enumerate(msi.segments):
-            part = msi._live(
-                i,
-                seg.docmap.select("doc_no", "url").join(
-                    seg.docs_content.select("doc_no", "links"), "doc_no"
-                ),
-            )
-            parts.append(part.select("url", "links"))
-        graph = parts[0]
-        for p in parts[1:]:
-            graph = graph.unionByName(p)
-        ranks = pagerank(
-            graph, damping=args.damping, tol=args.tol,
-            max_iter=args.max_iter, check_every=args.check_every,
-        ).localCheckpoint()
-        targets = [(s.path, s.docmap) for s in msi.segments]
-    else:
-        seg_dirs = [args.segments]
-        docmap = spark.read.parquet(os.path.join(args.segments, "docmap"))
-        content = spark.read.parquet(os.path.join(args.segments, "docs_content"))
-        docs = docmap.select("doc_no", "url").join(
-            content.select("doc_no", "links"), "doc_no"
-        )
-        ranks = pagerank(
-            docs.select("url", "links"),
-            damping=args.damping,
-            tol=args.tol,
-            max_iter=args.max_iter,
-            check_every=args.check_every,
-        )
-        targets = [(args.segments, docmap)]
+    # a serving root opens as its family, a segment dir as the family
+    # of one: rank over the GLOBAL live link graph (tombstoned
+    # re-crawls excluded), then back-fill each segment's docmap with
+    # its slice of the scores
+    idx = open_serving_index(spark, args.segments)
+    graph = reduce(DataFrame.unionByName, [
+        idx._live(
+            i,
+            seg.docmap.select("doc_no", "url").join(
+                seg.docs_content.select("doc_no", "links"), "doc_no"
+            ),
+        ).select("url", "links")
+        for i, seg in enumerate(idx.segments)
+    ])
+    # checkpointed: the docmap swaps below replace the tables the
+    # graph reads
+    ranks = pagerank(
+        graph, damping=args.damping, tol=args.tol,
+        max_iter=args.max_iter, check_every=args.check_every,
+    ).localCheckpoint()
 
     import shutil
 
-    for seg_dir, docmap in targets:
-        updated = apply_pagerank(docmap, ranks)
+    for seg in idx.segments:
+        seg_dir = seg.path
+        updated = apply_pagerank(seg.docmap, ranks)
         tmp = os.path.join(seg_dir, "docmap_new")
         updated.repartitionByRange(4, "doc_no").write.mode("overwrite").parquet(tmp)
         # atomic-ish swap

@@ -52,21 +52,18 @@ def main() -> None:
 
     from nadry_spark.plans.query import QueryEngine
     from nadry_spark.session import get_spark
-    from nadry_spark.sources.segments import SegmentIndex
+    from nadry_spark.sources.segments import MultiSegmentIndex
+    from nadry_spark.streaming.ingest import open_serving_index
+    from nadry_spark.streaming.snapshots import open_snapshot
 
     spark = get_spark("nadry_query", master=args.master)
-    # a dir holding serving_state.json is an incremental multi-segment
-    # family (streaming.finalize_incremental); otherwise one segment dir
     if args.snapshot is not None:
-        from nadry_spark.streaming.snapshots import open_snapshot
-
         idx = open_snapshot(spark, args.segments, args.snapshot).warm()
-    elif os.path.exists(os.path.join(args.segments, "serving_state.json")):
-        from nadry_spark.streaming.ingest import open_serving_index
-
-        idx = open_serving_index(spark, args.segments).warm()
     else:
-        idx = SegmentIndex(spark, args.segments).warm()
+        idx = open_serving_index(spark, args.segments).warm()
+    # bm25 entry points that set the tie contract: doc_no ties (and the
+    # doc_no column) for one segment, doc_id ties for a family
+    multi = isinstance(idx, MultiSegmentIndex)
 
     if args.field:
         from nadry_spark.operators.fieldsearch import field_search
@@ -80,14 +77,12 @@ def main() -> None:
             default=str, indent=2,
         ))
     elif args.anchor_boost is not None:
-        if hasattr(idx, "segments"):
-            from nadry_spark.operators.anchors import (
-                anchor_boosted_topk_multi as _boosted,
-            )
-        else:
-            from nadry_spark.operators.anchors import anchor_boosted_topk as _boosted
+        from nadry_spark.operators.anchors import (
+            anchor_boosted_topk,
+            anchor_boosted_topk_multi,
+        )
 
-        rows = _boosted(
+        rows = (anchor_boosted_topk_multi if multi else anchor_boosted_topk)(
             idx, args.query, k=(args.page + 1) * args.page_size,
             weight=args.anchor_boost,
         ).collect()
@@ -97,12 +92,9 @@ def main() -> None:
             default=str, indent=2,
         ))
     elif args.scoring == "bm25" and args.mode == "and":
-        if hasattr(idx, "segments"):
-            from nadry_spark.operators.bm25 import bm25_topk_multi as _topk
-        else:
-            from nadry_spark.operators.bm25 import bm25_topk as _topk
+        from nadry_spark.operators.bm25 import bm25_topk, bm25_topk_multi
 
-        rows = _topk(
+        rows = (bm25_topk_multi if multi else bm25_topk)(
             idx, args.query, k=(args.page + 1) * args.page_size, mode="bmw", conjunctive=True
         ).collect()
         data = [r.asDict() for r in rows[args.page * args.page_size :]]

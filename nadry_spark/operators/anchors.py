@@ -24,6 +24,8 @@ the DuckDB oracle mirrors it verbatim.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -54,6 +56,47 @@ def anchor_term_index_tokenized(
     )
 
 
+def _anchor_boosted(index, topk, tie: str, query: str, k: int, weight: float,
+                    pool: int | None, mode: str, conjunctive: bool) -> DataFrame:
+    """The one body of both boosted entry points: ``topk`` (a BM25
+    entry point) ranks the pool with its tie contract, each family
+    member's live backfilled anchors map to doc_id through its own
+    docmap (doc_no spaces are per-segment), and the boosted pool is
+    reordered on (score desc, ``tie`` asc). Members without a backfill
+    contribute no evidence."""
+    from nadry_spark.functions.tokenizer import tokenize
+
+    toks = sorted(set(tokenize(query)))
+    base = topk(index, query, k=pool or max(50, 5 * k), mode=mode,
+                conjunctive=conjunctive)
+    parts = [
+        index._live(i, seg.anchors.where(F.col("term").isin(toks)))
+        .join(seg.docmap.select("doc_no", "doc_id"), "doc_no")
+        .select("doc_id", "n_srcs")
+        for i, seg in enumerate(index.segments)
+        if seg.has_anchors
+    ]
+    if parts:
+        asrc = reduce(DataFrame.unionByName, parts)
+        asrc = asrc.groupBy("doc_id").agg(F.sum("n_srcs").alias("_asrc"))
+        base = base.join(asrc, "doc_id", "left")
+    else:
+        base = base.withColumn("_asrc", F.lit(None).cast("long"))
+    return (
+        base.select(
+            *(c for c in base.columns if c not in ("score", "_asrc")),
+            F.round(
+                F.col("score")
+                + F.lit(float(weight))
+                * F.log(F.lit(1.0) + F.coalesce("_asrc", F.lit(0)).cast("double")),
+                9,
+            ).alias("score"),
+        )
+        .orderBy(F.desc("score"), F.asc(tie))
+        .limit(k)
+    )
+
+
 def anchor_boosted_topk(
     index,
     query: str,
@@ -70,43 +113,21 @@ def anchor_boosted_topk(
     where anchor_srcs sums the doc's distinct inbound linkers whose
     anchors use each query term (the spam-resistant count).  The
     candidate pool is the BM25 top-`pool` (default 5k-per-k), so the
-    anchor join touches pool rows, never the corpus; ties break
-    doc_no like the unboosted path.  Requires a `jobs/anchors.py`
-    backfill (index.has_anchors); anchor-only hits (docs matched by
-    inbound text but not their own) stay out of the pool by design —
-    BM25F (operators/bm25f) is the full multi-field treatment, this
-    is the cheap serving-time boost."""
-    from nadry_spark.functions.tokenizer import tokenize
+    anchor join touches pool rows, never the corpus; rows carry
+    doc_no and ties break on it like the unboosted bm25_topk.
+    Requires a `jobs/anchors.py` backfill (index.has_anchors);
+    anchor-only hits (docs matched by inbound text but not their own)
+    stay out of the pool by design — BM25F (operators/bm25f) is the
+    full multi-field treatment, this is the cheap serving-time
+    boost."""
     from nadry_spark.operators.bm25 import bm25_topk
 
     if not index.has_anchors:
         raise FileNotFoundError(
             f"no anchors table under {index.path}; run jobs/anchors.py first"
         )
-    toks = sorted(set(tokenize(query)))
-    pool = pool or max(50, 5 * k)
-    base = bm25_topk(index, query, k=pool, mode=mode, conjunctive=conjunctive)
-    an = (
-        index.anchors.where(F.col("term").isin(toks))
-        .groupBy("doc_no")
-        .agg(F.sum("n_srcs").alias("_asrc"))
-    )
-    return (
-        base.join(an, "doc_no", "left")
-        .select(
-            "doc_id",
-            "url",
-            "doc_no",
-            F.round(
-                F.col("score")
-                + F.lit(float(weight))
-                * F.log(F.lit(1.0) + F.coalesce("_asrc", F.lit(0)).cast("double")),
-                9,
-            ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("doc_no"))
-        .limit(k)
-    )
+    return _anchor_boosted(index, bm25_topk, "doc_no", query, k, weight,
+                           pool, mode, conjunctive)
 
 
 def anchor_boosted_topk_multi(
@@ -119,50 +140,14 @@ def anchor_boosted_topk_multi(
 ) -> DataFrame:
     """Family (MultiSegmentIndex) variant of :func:`anchor_boosted_topk`:
     the anchor evidence is the union of each LIVE segment's backfilled
-    anchors table mapped through its own docmap (doc_no spaces are
-    per-segment; tombstoned docs drop with ``msi._live``).  Segments
-    without a backfill simply contribute no evidence — a freshly
-    ingested segment degrades to plain BM25 until jobs/anchors.py
-    runs, never errors.  Ties break doc_id like bm25_topk_multi."""
-    from nadry_spark.functions.tokenizer import tokenize
+    anchors table.  Segments without a backfill simply contribute no
+    evidence — a freshly ingested segment degrades to plain BM25 until
+    jobs/anchors.py runs, never errors.  Ties break doc_id like
+    bm25_topk_multi."""
     from nadry_spark.operators.bm25 import bm25_topk_multi
 
-    toks = sorted(set(tokenize(query)))
-    pool = pool or max(50, 5 * k)
-    base = bm25_topk_multi(msi, query, k=pool, mode=mode)
-
-    parts = []
-    for i, seg in enumerate(msi.segments):
-        if not seg.has_anchors:
-            continue
-        an = msi._live(i, seg.anchors.where(F.col("term").isin(toks)))
-        parts.append(
-            an.join(seg.docmap.select("doc_no", "doc_id"), "doc_no").select(
-                "doc_id", "n_srcs"
-            )
-        )
-    if parts:
-        asrc = parts[0]
-        for p in parts[1:]:
-            asrc = asrc.unionByName(p)
-        asrc = asrc.groupBy("doc_id").agg(F.sum("n_srcs").alias("_asrc"))
-        base = base.join(asrc, "doc_id", "left")
-    else:
-        base = base.withColumn("_asrc", F.lit(None).cast("long"))
-    return (
-        base.select(
-            "doc_id",
-            "url",
-            F.round(
-                F.col("score")
-                + F.lit(float(weight))
-                * F.log(F.lit(1.0) + F.coalesce("_asrc", F.lit(0)).cast("double")),
-                9,
-            ).alias("score"),
-        )
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
+    return _anchor_boosted(msi, bm25_topk_multi, "doc_id", query, k, weight,
+                           pool, mode, False)
 
 
 def anchor_term_index(

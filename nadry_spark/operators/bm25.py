@@ -6,9 +6,10 @@ intersection with block-max WAND pruning and a bounded min-heap".
 
 Every top-k entry point is a thin wrapper over one core, ``_topk``,
 that ranks a QUERYSET (query_id -> index terms) over a segment FAMILY:
-the (segment, tombstoned doc_nos) pairs of a MultiSegmentIndex, or
-``[(index, ())]`` for a SegmentIndex. A single query is Q=1;
-``bmw_block_stats`` shares the term resolution. The core:
+the (segment, tombstoned doc_nos) pairs of ``index.segments`` and
+``index.excluded`` — one pair with no tombstones for a SegmentIndex.
+A single query is Q=1; ``bmw_block_stats`` shares the term resolution.
+The core:
 
 1. resolves terms (``_resolve``): live df (minus ``df_corrections``),
    missing-term and conjunctive drops, idf from the family's ``meta``;
@@ -27,9 +28,10 @@ the (segment, tombstoned doc_nos) pairs of a MultiSegmentIndex, or
    merges and enriches on the driver; otherwise a distributed
    per-query top-k and a broadcast docmap join.
 
-Ties break on ``doc_no`` ascending for one segment (``bm25_topk``,
-``bm25_queryset_topk``) and on ``doc_id`` ascending for a family
-(``bm25_topk_multi``, ``bm25_queryset_topk_multi``). The queryset
+The tie order comes from the entry point, not the handle: ``bm25_topk``
+and ``bm25_queryset_topk`` break score ties on ``doc_no`` ascending and
+return the ``doc_no`` column; ``bm25_topk_multi`` and
+``bm25_queryset_topk_multi`` break them on ``doc_id`` ascending. The queryset
 entry points are TAAT-only and always return the lazy distributed
 frame: jobs/batch_rank.py writes it out, and its plan shows the
 term-pruned scan.
@@ -348,8 +350,8 @@ def _resolve(index, queries: dict[int, list[str]], conjunctive: bool):
     # table; subtract the tombstoned docs that actually contain each
     # term (cached on the handle — one batched probe per unseen term,
     # nothing per query on the steady-state serving path)
-    corr = index.df_corrections(present) if hasattr(index, "segments") else {}
-    live_df = {t: stats[t]["df"] - corr.get(t, 0) for t in present}
+    corr = index.df_corrections(present)
+    live_df = {t: stats[t]["df"] - corr[t] for t in present}
     q_ids, q_terms = [], []
     for qid, ts in distinct.items():
         terms = [t for t in ts if live_df.get(t, 0) > 0]
@@ -400,17 +402,15 @@ def _top(df: DataFrame, k: int, order: list, fn=F.row_number) -> DataFrame:
 
 
 def _topk(index, queries: dict[int, list[str]], k: int, mode: str,
-          conjunctive: bool, cols: tuple[str, ...],
+          conjunctive: bool, cols: tuple[str, ...], tie: str,
           lazy: bool = False) -> DataFrame:
     """The scoring core behind every entry point: ``queries`` (query_id
     -> index terms) ranked over ``index``'s segment family, <= k rows
-    per query in (query_id, score desc, tie asc) order, projected to
-    ``cols``. ``lazy`` keeps the distributed finish even when warm."""
+    per query in (query_id, score desc, ``tie`` asc) order, projected
+    to ``cols``. ``lazy`` keeps the distributed finish even when warm."""
     spark = index.spark
     ddl = ", ".join(f"{c} {_COL_TYPES[c]}" for c in cols)
-    multi = hasattr(index, "segments")
-    family = list(zip(index.segments, index.excluded)) if multi else [(index, ())]
-    tie = "doc_id" if multi else "doc_no"
+    family = list(zip(index.segments, index.excluded))
     if k < 1:
         return empty_df(spark, ddl)
     q_ids, q_terms, idf_map = _resolve(index, queries, conjunctive)
@@ -443,18 +443,19 @@ def _topk(index, queries: dict[int, list[str]], k: int, mode: str,
 
     # distributed finish: a per-query top-k per segment BEFORE its
     # docmap broadcast bounds the broadcast near Q*k rows (the raw
-    # frame holds up to n_shards*Q*k). In a family, rank() over the
-    # score keeps every row tied with the segment's k-th score, so the
-    # doc_id tie-break of the merge sees whole ties.
-    seg_order = [F.desc("score")] + ([] if multi else [F.asc("doc_no")])
+    # frame holds up to n_shards*Q*k). Under the doc_no tie the
+    # segment's own order is final; under the doc_id tie rank() over
+    # the score keeps every row tied with the segment's k-th score, so
+    # the doc_id tie-break of the merge sees whole ties.
+    seg_order = [F.desc("score")] + ([F.asc("doc_no")] if tie == "doc_no" else [])
     parts = [
         seg.docmap.join(F.broadcast(_top(f, k, seg_order, F.rank)), "doc_no")
         .select("query_id", "doc_id", "url", "doc_no", "score")
         for (seg, _), f in zip(family, frames)
     ]
     out = reduce(DataFrame.unionByName, parts)
-    if multi:
-        out = _top(out, k, [F.desc("score"), F.asc("doc_id")])
+    if len(parts) > 1 or tie != "doc_no":
+        out = _top(out, k, [F.desc("score"), F.asc(tie)])
     return out.orderBy("query_id", F.desc("score"), F.asc(tie)).select(*cols)
 
 
@@ -466,7 +467,7 @@ def bm25_topk(
     conjunctive: bool = False,
     tokens: list[str] | None = None,
 ) -> DataFrame:
-    """BM25 top-k of one query over one segment.
+    """BM25 top-k of one query with the single-segment tie contract.
 
     Returns (doc_id, url, doc_no, score) ordered by (score desc, doc_no).
 
@@ -478,7 +479,7 @@ def bm25_topk(
     """
     toks = tokenize(query) if tokens is None else list(tokens)
     return _topk(index, {0: toks}, k, mode, conjunctive,
-                 ("doc_id", "url", "doc_no", "score"))
+                 ("doc_id", "url", "doc_no", "score"), "doc_no")
 
 
 def bm25_topk_multi(
@@ -489,9 +490,10 @@ def bm25_topk_multi(
     conjunctive: bool = False,
     tokens: list[str] | None = None,
 ) -> DataFrame:
-    """BM25 top-k over a MultiSegmentIndex — the incremental-serving
-    path: per-segment exact scoring with GLOBAL statistics, k-way merge
-    of per-segment top-ks, ties on doc_id (cluster-size independent).
+    """BM25 top-k with the family tie contract — the incremental-serving
+    path (either handle; a SegmentIndex is a family of one): per-segment
+    exact scoring with GLOBAL statistics, k-way merge of per-segment
+    top-ks, ties on doc_id (cluster-size independent).
 
     Global statistics are tombstone-exact: N/avgdl come from the
     index's live-doc meta, and per-term df subtracts superseded docs
@@ -513,7 +515,7 @@ def bm25_topk_multi(
     the cluster-size-independent tie order.
     """
     toks = tokenize(query) if tokens is None else list(tokens)
-    return _topk(msi, {0: toks}, k, mode, conjunctive, ("doc_id", "url", "score"))
+    return _topk(msi, {0: toks}, k, mode, conjunctive, ("doc_id", "url", "score"), "doc_id")
 
 
 BMW_STATS_SCHEMA = "shard int, n_blocks long, n_decoded long"
@@ -583,7 +585,7 @@ def bm25_queryset_topk(
     order (score desc, doc_no asc), <= k rows per query."""
     toks = {qid: tokenize(q) for qid, q in queries.items()}
     return _topk(index, toks, k, "taat", conjunctive,
-                 ("query_id", "doc_id", "url", "doc_no", "score"), lazy=True)
+                 ("query_id", "doc_id", "url", "doc_no", "score"), "doc_no", lazy=True)
 
 
 def bm25_queryset_topk_multi(
@@ -602,4 +604,4 @@ def bm25_queryset_topk_multi(
     ordered (query_id, score desc, doc_id asc)."""
     toks = {qid: tokenize(q) for qid, q in queries.items()}
     return _topk(msi, toks, k, "taat", conjunctive,
-                 ("query_id", "doc_id", "url", "score"), lazy=True)
+                 ("query_id", "doc_id", "url", "score"), "doc_id", lazy=True)

@@ -191,15 +191,15 @@ def eval_bool_tree(
 
 
 def bool_search(index, query: str, k: int = 10) -> DataFrame:
-    """Boolean retrieval over a SegmentIndex / MultiSegmentIndex,
-    ranked by BM25 over the tree's positive leaves (negated leaves
-    filter only).  Returns (doc_id, url, score) top-k, ties on doc_id.
+    """Boolean retrieval over a segment family, ranked by BM25 over
+    the tree's positive leaves (negated leaves filter only).  Returns
+    (doc_id, url, score) top-k, ties on doc_id.
 
     Leaves run through the engine tokenizer (stems, stopword drops,
     specials); a leaf whose every token is dropped matches nothing —
     NOT <stopword> therefore matches everything, which is the only
     sensible reading."""
-    from nadry_spark.operators.bm25 import bm25_topk, bm25_topk_multi
+    from nadry_spark.operators.bm25 import bm25_topk_multi
 
     spark = index.spark
     tree = parse_bool_query(query)
@@ -233,12 +233,7 @@ def bool_search(index, query: str, k: int = 10) -> DataFrame:
     # can only be pure-OR-branch docs; N = k * 8 is a pragmatic bound
     # and the fallback join fills genuinely unscored matches with 0.
     need = max(k * 8, 64)
-    if hasattr(index, "segments"):
-        scored = bm25_topk_multi(index, "", k=need, tokens=pos_tokens)
-    else:
-        scored = bm25_topk(index, "", k=need, tokens=pos_tokens).select(
-            "doc_id", "url", "score"
-        )
+    scored = bm25_topk_multi(index, "", k=need, tokens=pos_tokens)
     hit = matched.join(scored, "doc_id", "left").join(
         index.doc_meta_df().select("doc_id", F.col("url").alias("_u")),
         "doc_id",

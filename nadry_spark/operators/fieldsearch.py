@@ -18,6 +18,8 @@ consistent ranking matters more than a second dl normalization).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -41,9 +43,9 @@ def _segment_field_tf(seg, tokens: list[str], field: str) -> DataFrame:
 def field_search(index, query: str, field: str, k: int = 10) -> DataFrame:
     """Top-k (doc_id, url, score) where every scoring occurrence sits
     in ``field``; disjunctive over the query tokens, ties on doc_id.
-    Works over a SegmentIndex or MultiSegmentIndex (disjoint doc
-    spaces, tombstoned re-crawls excluded; global N/avgdl from the
-    multi-segment meta so results equal a fresh full rebuild)."""
+    Works over any segment family (disjoint doc spaces, tombstoned
+    re-crawls excluded; global N/avgdl from the family's meta so
+    results equal a fresh full rebuild)."""
     if field not in _FIELD_COL:
         raise ValueError(f"field must be one of {sorted(_FIELD_COL)}")
     spark = index.spark
@@ -53,24 +55,15 @@ def field_search(index, query: str, field: str, k: int = 10) -> DataFrame:
 
         return empty_df(spark, "doc_id string, url string, score double")
 
-    segments = index.segments if hasattr(index, "segments") else [index]
-    parts = []
-    for i, seg in enumerate(segments):
-        tfd = _segment_field_tf(seg, tokens, field)
-        if hasattr(index, "_live"):
-            tfd = index._live(i, tfd)
-        parts.append(
-            tfd.join(
-                seg.docmap.select("doc_no", "doc_id", "url", "total_words"),
-                "doc_no",
-            ).select(
-                "doc_id", "url", "term", "tf",
-                F.col("total_words").cast("double").alias("dl"),
-            )
+    cand = reduce(DataFrame.unionByName, [
+        index._live(i, _segment_field_tf(seg, tokens, field))
+        .join(seg.docmap.select("doc_no", "doc_id", "url", "total_words"), "doc_no")
+        .select(
+            "doc_id", "url", "term", "tf",
+            F.col("total_words").cast("double").alias("dl"),
         )
-    cand = parts[0]
-    for p in parts[1:]:
-        cand = cand.unionByName(p)
+        for i, seg in enumerate(index.segments)
+    ])
 
     n_docs = int(index.meta["n_docs"])
     avgdl = float(index.meta["avgdl"])

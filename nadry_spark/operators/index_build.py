@@ -78,40 +78,41 @@ def extract_documents(pages: DataFrame) -> DataFrame:
     # (Common Crawl conversion records, sources/warc.read_wet) are
     # already extracted — index the text directly (empty title/
     # description, no links; the P1 empty/oversize bounds still apply).
-    # html rows run the reference-exact extractor as before.
-    has_text = "text" in pages.columns
+    # html rows run the reference-exact extractor as before. One
+    # projection chooses per row, so the latest-capture window above
+    # runs once: the extractor sees html only where it is present (a
+    # NULL comes back as the null struct without parsing), and an html
+    # row whose extraction is empty drops rather than falling back.
     html_ok = F.col("html").isNotNull() & (F.length("html") > 0)
+    text = F.col("text") if "text" in pages.columns else F.lit(None).cast("string")
+    is_text = (
+        ~html_ok & text.isNotNull() & (F.length(text) > 0)
+        & (F.length(text) <= 100_000_000)
+    )
     extracted = (
-        pages.where(html_ok)
-        .select("url", extract_udf(F.col("html"), F.col("url")).alias("doc"))
-        .where(F.col("doc.content").isNotNull())
+        pages.select(
+            "url",
+            is_text.alias("_text"),
+            text.alias("_content"),
+            extract_udf(F.when(html_ok, F.col("html")), F.col("url")).alias("doc"),
+        )
+        .where(F.col("doc.content").isNotNull() | F.col("_text"))
         .select(
             F.sha2(F.col("url"), 256).alias("doc_id"),
             "url",
-            F.col("doc.title").alias("title"),
-            F.col("doc.description").alias("description"),
-            F.col("doc.content").alias("content"),
-            F.col("doc.links").alias("links"),
+            *(
+                F.when(F.col("_text"), fallback)
+                .otherwise(F.col(f"doc.{field}"))
+                .alias(field)
+                for field, fallback in (
+                    ("title", F.lit("")),
+                    ("description", F.lit("")),
+                    ("content", F.col("_content")),
+                    ("links", F.array().cast("array<string>")),
+                )
+            ),
         )
     )
-    if has_text:
-        text_rows = (
-            pages.where(
-                (~html_ok)
-                & F.col("text").isNotNull()
-                & (F.length("text") > 0)
-                & (F.length("text") <= 100_000_000)
-            )
-            .select(
-                F.sha2(F.col("url"), 256).alias("doc_id"),
-                "url",
-                F.lit("").alias("title"),
-                F.lit("").alias("description"),
-                F.col("text").alias("content"),
-                F.array().cast("array<string>").alias("links"),
-            )
-        )
-        extracted = extracted.unionByName(text_rows)
     tokenized = extracted.select(
         "*",
         tokenize_udf(F.col("title")).alias("tokens_title"),

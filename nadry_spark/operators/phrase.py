@@ -19,6 +19,7 @@ with a single aggregation, no n-way self-join chain.
 from __future__ import annotations
 
 import re
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -181,23 +182,15 @@ def _phrase_match_fused(pos: DataFrame, tokens: list[str]) -> DataFrame:
 
 
 def phrase_match_doc_ids(index, tokens: list[str]) -> DataFrame:
-    """doc_ids containing the phrase — works over a SegmentIndex or a
-    MultiSegmentIndex (doc spaces are segment-disjoint, so the J2
-    positional aggregation runs per segment and the matched ids union;
-    tombstoned re-crawls excluded)."""
-    if hasattr(index, "segments"):  # MultiSegmentIndex
-        parts = []
-        for i, seg in enumerate(index.segments):
-            matched = index._live(i, phrase_match_docs(seg, tokens))
-            parts.append(
-                seg.docmap.join(matched, "doc_no").select("doc_id")
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-    matched = phrase_match_docs(index, tokens)
-    return index.docmap.join(matched, "doc_no").select("doc_id")
+    """doc_ids containing the phrase, over a segment family (doc spaces
+    are segment-disjoint, so the J2 positional aggregation runs per
+    segment and the matched ids union; tombstoned re-crawls
+    excluded)."""
+    return reduce(DataFrame.unionByName, [
+        seg.docmap.join(index._live(i, phrase_match_docs(seg, tokens)), "doc_no")
+        .select("doc_id")
+        for i, seg in enumerate(index.segments)
+    ])
 
 
 def disjunctive_ranked(
@@ -206,9 +199,8 @@ def disjunctive_ranked(
     """Regular exact-mode search over pre-tokenized index terms: decode
     candidate tfs from the compressed blocks (term-pruned scan) and run
     the reference ranking formulas. Unlimited — callers paginate.
-    Works over a SegmentIndex or a MultiSegmentIndex (both expose
-    candidates_for / doc_meta_df; the multi form unions live docs with
-    tombstoned re-crawls excluded)."""
+    Works over any segment family (candidates_for / doc_meta_df union
+    the live docs, tombstoned re-crawls excluded)."""
     from nadry_spark.operators.ranker import rank_exact
 
     cand = index.candidates_for(tokens)
@@ -227,8 +219,8 @@ def phrase_ranked(
 ) -> DataFrame:
     """Multi-token phrase path: positional match -> rank with every
     term's tf forced to 1 (SearchWrapper.java:357-366). Unlimited —
-    pagination happens AFTER full ranking (:649-666). Works over single
-    or multi-segment indexes (phrase_match_doc_ids)."""
+    pagination happens AFTER full ranking (:649-666). Works over any
+    segment family (phrase_match_doc_ids)."""
     from nadry_spark.operators.ranker import rank_exact
 
     spark = index.spark

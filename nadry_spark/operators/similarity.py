@@ -94,12 +94,15 @@ def brute_force_topk(
     )
 
 
+def _sign_bit(vec_col: str, d: int) -> Column:
+    """Dimension ``d`` is >= 0: true, false, or NULL — read as bit 0 —
+    where the vector lacks the dimension (short or NULL vector)."""
+    return F.try_element_at(F.col(vec_col), F.lit(d + 1)) >= 0
+
+
 def sign_lsh_bucket(vec_col: str, dims: list[int]) -> Column:
     """Bucket id string from sign bits of fixed dimensions."""
-    bits = [
-        F.when(F.element_at(F.col(vec_col), d + 1) >= 0, "1").otherwise("0")
-        for d in dims
-    ]
+    bits = [F.when(_sign_bit(vec_col, d), "1").otherwise("0") for d in dims]
     return F.concat(*bits)
 
 
@@ -114,14 +117,8 @@ def sign_lsh_probe_buckets(vec_col: str, dims: list[int]) -> Column:
     corpus (a random scan of that fraction would land 0.31 — the
     probes carry real signal even on weakly-clustered data; clustered
     real embeddings do far better)."""
-    bits = [
-        F.when(F.element_at(F.col(vec_col), d + 1) >= 0, F.lit("1")).otherwise(F.lit("0"))
-        for d in dims
-    ]
-    inv = [
-        F.when(F.element_at(F.col(vec_col), d + 1) >= 0, F.lit("0")).otherwise(F.lit("1"))
-        for d in dims
-    ]
+    bits = [F.when(_sign_bit(vec_col, d), F.lit("1")).otherwise(F.lit("0")) for d in dims]
+    inv = [F.when(_sign_bit(vec_col, d), F.lit("0")).otherwise(F.lit("1")) for d in dims]
     probes = [F.concat(*bits)]
     for i in range(len(dims)):
         probes.append(F.concat(*(bits[:i] + [inv[i]] + bits[i + 1:])))
@@ -149,9 +146,9 @@ def lsh_topk(
     from pyspark.sql import Window
 
     dims = dims or [0, 1, 2, 3, 4, 5]
-    vloc = _collect_vectors_local(vectors, id_col, vec_col)
+    vloc = _collect_vectors_local(vectors, id_col, vec_col, dims)
     if vloc is not None:
-        qloc = _collect_vectors_local(queries, id_col, vec_col)
+        qloc = _collect_vectors_local(queries, id_col, vec_col, dims)
         if qloc is not None:
             import numpy as np
 
@@ -242,9 +239,10 @@ def lsh_topk_multi(
         [12, 13, 14, 15, 16, 17],
         [18, 19, 20, 21, 22, 23],
     ]
-    vloc = _collect_vectors_local(vectors, id_col, vec_col)
+    all_dims = [d for dims in tables for d in dims]
+    vloc = _collect_vectors_local(vectors, id_col, vec_col, all_dims)
     if vloc is not None:
-        qloc = _collect_vectors_local(queries, id_col, vec_col)
+        qloc = _collect_vectors_local(queries, id_col, vec_col, all_dims)
         if qloc is not None:
             import numpy as np
 
@@ -404,10 +402,12 @@ DRIVER_ANN_MAX_ROWS = 200_000
 DRIVER_ANN_MAX_CELLS = 16_000_000  # rows x dim
 
 
-def _collect_vectors_local(df: DataFrame, id_col: str, vec_col: str):
+def _collect_vectors_local(df: DataFrame, id_col: str, vec_col: str, dims=()):
     """Bounded collect of a vector table: ONE LIMIT-bounded job.
     Returns {ids, V (n x d float64), pdf} or None past the gates
-    (too many rows/cells, or ragged vectors)."""
+    (too many rows/cells, ragged or NULL vectors, or vectors too short
+    to hold every sign-bit dimension of ``dims``) — the caller then
+    runs its distributed plan, which handles all of those."""
     import numpy as np
 
     pdf = df.limit(DRIVER_ANN_MAX_ROWS + 1).toPandas()
@@ -415,8 +415,13 @@ def _collect_vectors_local(df: DataFrame, id_col: str, vec_col: str):
         return None
     if len(pdf) == 0:
         return {"ids": np.empty(0, dtype=np.int64), "V": np.empty((0, 0)), "pdf": pdf}
-    V = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+    try:
+        V = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+    except (TypeError, ValueError):  # ragged rows, or NULL among vectors
+        return None
     if V.ndim != 2 or V.size > DRIVER_ANN_MAX_CELLS:
+        return None
+    if dims and V.shape[1] <= max(dims):
         return None
     return {"ids": pdf[id_col].to_numpy(), "V": V, "pdf": pdf}
 
@@ -931,7 +936,7 @@ def cosine_dup_pairs(
     from nadry_spark.operators.dedup import skip_hot_buckets
 
     dims = dims or [0, 1, 2, 3, 4, 5]
-    loc = _collect_vectors_local(vectors, id_col, vec_col)
+    loc = _collect_vectors_local(vectors, id_col, vec_col, dims)
     if loc is not None:
         out = _cosine_dup_pairs_local(
             vectors.sparkSession, loc, threshold, dims, bucket_cap, stats,

@@ -38,6 +38,8 @@ asserted by tests).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -141,8 +143,8 @@ def span_near_search(
 ) -> DataFrame:
     """Proximity search surface: tokenize -> span match -> rank by
     window tightness (min_window asc, doc_id asc), top k.  Works over
-    a SegmentIndex or a MultiSegmentIndex (per-segment spans union;
-    doc spaces are disjoint and tombstoned re-crawls are excluded)."""
+    any segment family (per-segment spans union; doc spaces are
+    disjoint and tombstoned re-crawls are excluded)."""
     spark = index.spark
     tokens = tokenize(query)
     empty = spark.createDataFrame(
@@ -150,20 +152,10 @@ def span_near_search(
     )
     if not tokens:
         return empty
-    if hasattr(index, "segments"):  # MultiSegmentIndex
-        parts = []
-        for i, seg in enumerate(index.segments):
-            spans = index._live(i, span_near_docs(seg, tokens, slop, ordered))
-            parts.append(
-                seg.docmap.join(spans, "doc_no").select(
-                    "doc_id", "url", "min_window"
-                )
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-    else:
-        out = index.docmap.join(
-            span_near_docs(index, tokens, slop, ordered), "doc_no"
+    out = reduce(DataFrame.unionByName, [
+        seg.docmap.join(
+            index._live(i, span_near_docs(seg, tokens, slop, ordered)), "doc_no"
         ).select("doc_id", "url", "min_window")
+        for i, seg in enumerate(index.segments)
+    ])
     return out.orderBy(F.asc("min_window"), F.asc("doc_id")).limit(k)

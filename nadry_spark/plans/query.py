@@ -28,7 +28,9 @@ description, DOC_TFIDF, QUERY_TFIDF — plus id/doc_id.
 from __future__ import annotations
 
 import time
+from functools import reduce
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nadry_spark.functions.snippets import snippet_udf
@@ -39,6 +41,7 @@ from nadry_spark.operators.phrase import (
     extract_quoted_phrases,
     phrase_ranked,
 )
+from nadry_spark.sources.segments import MultiSegmentIndex
 
 
 class QueryEngine:
@@ -50,11 +53,13 @@ class QueryEngine:
         cache_cap: int = 1024,
         did_you_mean: bool = False,
     ):
-        """index: a SegmentIndex or a MultiSegmentIndex (the
-        incremental-serving family) — both expose the common serving
-        API (candidates_for / doc_meta_df / content_for) so every mode
-        (exact, bm25, phrase) works over either, with tombstoned
-        re-crawls excluded in the multi case.
+        """index: a segment family — a SegmentIndex (the family of one)
+        or a MultiSegmentIndex (the incremental-serving family). Every
+        mode (exact, bm25, phrase) runs the same family path
+        (candidates_for / doc_meta_df / content_for, tombstoned
+        re-crawls excluded); only bm25's tie contract follows the
+        handle: doc_no ties and rows for one segment, doc_id ties for
+        a MultiSegmentIndex.
 
         scoring: 'exact' (reference-identical TF-IDF blend) or
         'bm25' (block-max WAND fast path).
@@ -102,15 +107,12 @@ class QueryEngine:
         if self.scoring == "bm25":
             # tokens are already index terms — do NOT re-tokenize (stems
             # that equal stopwords would vanish, specials would shred)
-            if hasattr(self.index, "segments"):  # MultiSegmentIndex
-                from nadry_spark.operators.bm25 import bm25_topk_multi
+            # the entry point sets the tie contract: envelope rows of
+            # one segment carry doc_no and break ties on it
+            from nadry_spark.operators.bm25 import bm25_topk, bm25_topk_multi
 
-                return bm25_topk_multi(
-                    self.index, "", k=need, mode="taat", tokens=tokens
-                )
-            from nadry_spark.operators.bm25 import bm25_topk
-
-            return bm25_topk(self.index, "", k=need, mode="taat", tokens=tokens)
+            topk = bm25_topk_multi if isinstance(self.index, MultiSegmentIndex) else bm25_topk
+            return topk(self.index, "", k=need, mode="taat", tokens=tokens)
         return disjunctive_ranked(self.index, tokens, with_metadata=True)
 
     def search(self, query: str, page: int = 0, page_size: int = 10) -> dict:
@@ -223,14 +225,12 @@ class QueryEngine:
 
         spark = self.index.spark
         if self._vocab_variants is None:
-            if hasattr(self.index, "segments"):  # MultiSegmentIndex
-                vocab = None
-                for s in self.index.segments:
-                    part = s.terms.select("term", "df")
-                    vocab = part if vocab is None else vocab.unionByName(part)
-                vocab = vocab.groupBy("term").agg(F.sum("df").alias("df"))
-            else:
-                vocab = self.index.terms.select("term", "df")
+            vocab = (
+                reduce(DataFrame.unionByName,
+                       [s.terms.select("term", "df") for s in self.index.segments])
+                .groupBy("term")
+                .agg(F.sum("df").alias("df"))
+            )
             self._vocab_variants = deletion_variants(
                 vocab, "term", out="_var"
             ).persist()

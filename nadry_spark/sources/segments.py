@@ -32,6 +32,14 @@ shard writer (positions -> blocks derived from the written positions
 -> postings -> manifest rows) and share the terms-dictionary and
 meta.json writers, so the two produce the same layout.
 
+One serving shape: a ``SegmentIndex`` is a family of one (``segments``
+is ``[self]``, ``excluded`` is ``[set()]``) and a ``MultiSegmentIndex``
+is the incremental family. The family methods — ``_live``,
+``df_corrections``, ``candidates_for``, ``doc_meta_df`` and
+``content_for`` — are written once, on their shared base, and every
+serving operator loops over ``index.segments`` instead of testing the
+handle type.
+
 Design decisions (scale rationale):
 
 * **Doc-range sharding.** Every term's postings for one doc range live
@@ -62,6 +70,7 @@ import json
 import math
 import os
 import time
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -787,8 +796,83 @@ def _merge_segments(
 # ---------------------------------------------------------------------------
 
 
-class SegmentIndex:
-    """Handle over a built segment directory."""
+class _Family:
+    """The serving API of a segment family, written once: ``segments``
+    (ordered oldest first) and ``excluded`` (per member, the doc_nos a
+    newer member supersedes) are all it reads. A SegmentIndex is the
+    family of one, ``[self]`` with ``[set()]``; a MultiSegmentIndex is
+    the incremental family. Doc spaces are disjoint per member (each
+    live doc_id exists in exactly one live member), so the unions below
+    have no duplicates."""
+
+    def _live(self, i: int, df: DataFrame) -> DataFrame:
+        """Drop member i's tombstoned doc_nos from a frame."""
+        excl = self.excluded[i]
+        if not excl:
+            return df
+        return df.where(~F.col("doc_no").isin([int(x) for x in excl]))
+
+    def df_corrections(self, terms: list[str]) -> dict[str, int]:
+        """Per-term count of TOMBSTONED docs containing the term —
+        subtract from summed df for live-exact idf. Tombstone sets are
+        immutable for this handle's lifetime, so results are cached
+        per term; uncached terms are probed in ONE batched job across
+        all members with exclusions (not one collect per member per
+        query — this sits on the hot serving path). A family without
+        tombstones runs no job."""
+        missing = [t for t in set(terms) if t not in self._df_corr]
+        if missing and any(self.excluded):
+            probe = reduce(DataFrame.unionByName, [
+                seg.decoded_tf(missing).where(F.col("doc_no").isin([int(x) for x in excl]))
+                for seg, excl in zip(self.segments, self.excluded)
+                if excl
+            ])
+            # (term, doc_no) is unique WITHIN a segment's decoded_tf
+            # (postings merge fields before block encoding and a doc
+            # lives in exactly one shard), but per-segment doc_no
+            # spaces all start at 0 — distinct-by-doc_no across the
+            # union would collapse tombstoned docs from DIFFERENT
+            # segments that happen to share a doc_no. Plain count('*')
+            # counts each (segment, term, doc) probe row exactly once.
+            counts = {
+                r["term"]: int(r["c"])
+                for r in probe.groupBy("term")
+                .agg(F.count("*").alias("c"))
+                .collect()
+            }
+            self._df_corr.update({t: counts.get(t, 0) for t in missing})
+        return {t: self._df_corr.get(t, 0) for t in set(terms)}
+
+    def candidates_for(self, terms: list[str]) -> DataFrame:
+        """(term, doc_id, url, tf) exact-mode candidates, live docs only."""
+        return reduce(DataFrame.unionByName, [
+            self._live(i, s.decoded_tf(terms))
+            .join(s.docmap.select("doc_no", "doc_id", "url"), "doc_no")
+            .select("term", "doc_id", "url", "tf")
+            for i, s in enumerate(self.segments)
+        ])
+
+    def doc_meta_df(self) -> DataFrame:
+        """(doc_id, url, total_words, popularity_score) for ranking."""
+        return reduce(DataFrame.unionByName, [
+            self._live(i, s.docmap).select("doc_id", "url", "total_words", "popularity_score")
+            for i, s in enumerate(self.segments)
+        ])
+
+    def content_for(self, ids_df: DataFrame) -> DataFrame:
+        """(doc_id, title, content) for the requested doc_ids — the
+        page-bounded enrichment join (J4)."""
+        return reduce(DataFrame.unionByName, [
+            self._live(i, s.docmap.join(ids_df, "doc_id"))
+            .join(s.docs_content, "doc_no")
+            .select("doc_id", "title", "content")
+            for i, s in enumerate(self.segments)
+        ])
+
+
+class SegmentIndex(_Family):
+    """Handle over a built segment directory — the serving family of
+    one: ``segments`` is ``[self]`` and ``excluded`` is ``[set()]``."""
 
     # driver-side pin gates for warm(): the term dictionary and the
     # doc_no->(doc_id, url) map are pinned in DRIVER memory while they
@@ -815,6 +899,15 @@ class SegmentIndex:
         self._cached: dict[str, DataFrame] = {}
         self._terms_dict: dict | None = None
         self._docmap_dict: dict | None = None
+        self._df_corr: dict[str, int] = {}  # df_corrections cache
+
+    @property
+    def segments(self) -> list["SegmentIndex"]:
+        return [self]
+
+    @property
+    def excluded(self) -> list[set[int]]:
+        return [set()]
 
     def warm(self) -> "SegmentIndex":
         """Pin the dictionary, blocks and docmap in executor memory —
@@ -943,35 +1036,14 @@ class SegmentIndex:
             "term string, doc_no long, tf int",
         )
 
-    # ---- common serving API (shared with MultiSegmentIndex) ----
 
-    def candidates_for(self, terms: list[str]) -> DataFrame:
-        """(term, doc_id, url, tf) exact-mode candidates."""
-        return (
-            self.decoded_tf(terms)
-            .join(self.docmap.select("doc_no", "doc_id", "url"), "doc_no")
-            .select("term", "doc_id", "url", "tf")
-        )
-
-    def doc_meta_df(self) -> DataFrame:
-        """(doc_id, url, total_words, popularity_score) for ranking."""
-        return self.docmap.select("doc_id", "url", "total_words", "popularity_score")
-
-    def content_for(self, ids_df: DataFrame) -> DataFrame:
-        """(doc_id, title, content) for the requested doc_ids — the
-        page-bounded enrichment join (J4)."""
-        return (
-            self.docmap.join(ids_df, "doc_id")
-            .join(self.docs_content, "doc_no")
-            .select("doc_id", "title", "content")
-        )
-
-
-class MultiSegmentIndex:
+class MultiSegmentIndex(_Family):
     """Serving handle over an ORDERED list of segment directories —
     the Lucene multi-segment model: each incremental finalize adds one
     segment holding only its new docs; queries run over all segments
-    with GLOBAL statistics and merge the per-segment top-ks.
+    with GLOBAL statistics and merge the per-segment top-ks. The
+    serving API is the family's (``_Family``), shared with the
+    family-of-one SegmentIndex.
 
     * ``meta``: n_docs summed, avgdl doc-weighted across segments
       (sum of each segment's avgdl*n_docs over total docs), k1/b/block
@@ -987,8 +1059,9 @@ class MultiSegmentIndex:
 
     Segments are doc-partitioned, so conjunctive/disjunctive scoring
     stays exact per segment; only the final k-way merge crosses
-    segments (<= n_segments * shards * k rows). Global ordering ties
-    break on doc_id (cluster-size independent), not doc_no.
+    segments (<= n_segments * shards * k rows). The tie order of a
+    ranked answer comes from the entry point (bm25_topk_multi breaks
+    ties on doc_id), not from the handle.
     """
 
     def __init__(self, spark: SparkSession, paths: list[str]):
@@ -1040,91 +1113,6 @@ class MultiSegmentIndex:
                 agg = out.setdefault(t, {"df": 0, "n_blocks": 0})
                 agg["df"] += st["df"]
                 agg["n_blocks"] += st["n_blocks"]
-        return out
-
-    def df_corrections(self, terms: list[str]) -> dict[str, int]:
-        """Per-term count of TOMBSTONED docs containing the term —
-        subtract from summed df for live-exact idf. Tombstone sets are
-        immutable for this handle's lifetime, so results are cached
-        per term; uncached terms are probed in ONE batched job across
-        all segments with exclusions (not one collect per segment per
-        query — this sits on the hot serving path)."""
-        missing = [t for t in set(terms) if t not in self._df_corr]
-        if missing and any(self.excluded):
-            probe = None
-            for seg, excl in zip(self.segments, self.excluded):
-                if not excl:
-                    continue
-                part = seg.decoded_tf(missing).where(
-                    F.col("doc_no").isin([int(x) for x in excl])
-                )
-                probe = part if probe is None else probe.unionByName(part)
-            # (term, doc_no) is unique WITHIN a segment's decoded_tf
-            # (postings merge fields before block encoding and a doc
-            # lives in exactly one shard), but per-segment doc_no
-            # spaces all start at 0 — distinct-by-doc_no across the
-            # union would collapse tombstoned docs from DIFFERENT
-            # segments that happen to share a doc_no. Plain count('*')
-            # counts each (segment, term, doc) probe row exactly once.
-            counts = {
-                r["term"]: int(r["c"])
-                for r in probe.groupBy("term")
-                .agg(F.count("*").alias("c"))
-                .collect()
-            }
-            for t in missing:
-                self._df_corr[t] = counts.get(t, 0)
-        else:
-            for t in missing:
-                self._df_corr[t] = 0
-        return {t: self._df_corr[t] for t in set(terms)}
-
-    # ---- common serving API (tombstone-aware unions) ----
-
-    def _live(self, i: int, df: DataFrame) -> DataFrame:
-        """Drop segment i's tombstoned doc_nos from a frame."""
-        excl = self.excluded[i]
-        if not excl:
-            return df
-        return df.where(~F.col("doc_no").isin([int(x) for x in excl]))
-
-    def candidates_for(self, terms: list[str]) -> DataFrame:
-        """(term, doc_id, url, tf) across the family, live docs only.
-        Doc spaces are disjoint per segment (each live doc_id exists in
-        exactly one live segment), so the union has no duplicates."""
-        parts = [
-            self._live(i, s.decoded_tf(terms))
-            .join(s.docmap.select("doc_no", "doc_id", "url"), "doc_no")
-            .select("term", "doc_id", "url", "tf")
-            for i, s in enumerate(self.segments)
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def doc_meta_df(self) -> DataFrame:
-        parts = [
-            self._live(i, s.docmap).select(
-                "doc_id", "url", "total_words", "popularity_score"
-            )
-            for i, s in enumerate(self.segments)
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    def content_for(self, ids_df: DataFrame) -> DataFrame:
-        parts = [
-            self._live(i, s.docmap.join(ids_df, "doc_id"))
-            .join(s.docs_content, "doc_no")
-            .select("doc_id", "title", "content")
-            for i, s in enumerate(self.segments)
-        ]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
         return out
 
 

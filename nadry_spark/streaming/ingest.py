@@ -251,10 +251,14 @@ def compact_serving(
 
 
 def open_serving_index(spark: SparkSession, segments_root: str):
-    """MultiSegmentIndex over the incremental serving family recorded
-    in serving_state.json (query with bm25.bm25_topk_multi)."""
-    from nadry_spark.sources.segments import MultiSegmentIndex
+    """The serving handle of a directory: the MultiSegmentIndex over the
+    incremental family recorded in serving_state.json (query with
+    bm25.bm25_topk_multi), or the SegmentIndex of a segment directory,
+    which has no such file."""
+    from nadry_spark.sources.segments import MultiSegmentIndex, SegmentIndex
 
+    if not os.path.exists(os.path.join(segments_root, _SERVING_STATE)):
+        return SegmentIndex(spark, segments_root)
     return MultiSegmentIndex(
         spark,
         [os.path.join(segments_root, n) for n in _read_state(segments_root)["segments"]],

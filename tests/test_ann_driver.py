@@ -156,3 +156,44 @@ def test_ivfpq_parity(spark, vecs, monkeypatch):
     _force_distributed(monkeypatch)
     d_out = run()
     assert f_out == d_out and len(f_out) > 0
+
+
+@pytest.fixture(scope="module")
+def hostile(spark, vecs):
+    """Vector tables the driver gate must hand to the distributed plan:
+    one ragged row and one NULL vector beside well-formed rows, and a
+    table whose vectors are shorter than the default sign-bit dims."""
+    bad = spark.createDataFrame(
+        [(9000, [1.0, 2.0, 3.0]), (9001, None)],
+        "vec_id long, embedding array<double>",
+    )
+    short = spark.createDataFrame(
+        [(i, [((i * 7 + d) % 5) - 2.0 for d in range(3)]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    return {
+        "ragged_null": vecs.unionByName(bad).localCheckpoint(),
+        "short_dim": short.localCheckpoint(),
+    }
+
+
+@pytest.mark.parametrize("table", ["ragged_null", "short_dim"])
+def test_driver_paths_fall_back_on_hostile_vectors(spark, hostile, monkeypatch, table):
+    from nadry_spark.operators import similarity as sim
+
+    vectors = hostile[table]
+    queries = vectors.where(F.col("vec_id") < 4)
+
+    def run():
+        return (
+            _rows(sim.brute_force_topk(vectors, queries, k=5)),
+            _rows(sim.lsh_topk(vectors, queries, k=5)),
+            _rows(sim.cosine_dup_pairs(vectors, threshold=0.9)),
+        )
+
+    f_bf, f_lsh, f_dup = run()
+    _force_distributed(monkeypatch)
+    d_bf, d_lsh, d_dup = run()
+    assert f_bf == d_bf and len(f_bf) > 0
+    assert f_lsh == d_lsh
+    assert f_dup == d_dup

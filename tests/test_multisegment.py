@@ -63,13 +63,64 @@ def test_multi_segment_matches_single(spark, seg, halves):
                 assert got == want, (q, mode, conj)
 
 
+def _canon(res):
+    """A QueryEngine envelope without its timing."""
+    return (
+        res["totalResults"],
+        res["totalPages"],
+        res["tokens"],
+        [
+            (
+                r["url"],
+                r["title"],
+                r["description"],
+                round(r["score"], 9),
+            )
+            for r in res["data"]
+        ],
+    )
+
+
 def test_multi_segment_single_path_is_identity(spark, seg):
+    """A one-member family answers like its segment on every serving
+    operator, and a segment is itself a family of one: no tombstones,
+    zero df corrections."""
+    from nadry_spark.operators.boolquery import bool_search
+    from nadry_spark.operators.fieldsearch import field_search
+    from nadry_spark.operators.spans import span_near_search
+    from nadry_spark.plans.query import QueryEngine
     from nadry_spark.sources.segments import MultiSegmentIndex
 
     idx, _, _ = seg
     msi = MultiSegmentIndex(spark, [idx.path])
     for q in QUERIES[:1]:
         assert _topk_multi(msi, q, k=10) == _topk_single(idx, q, k=10)
+
+    assert idx.segments == [idx]
+    assert idx.excluded == [set()] and msi.excluded == [set()]
+    terms = ["news", "report", "zzznotaterm"]
+    assert idx.df_corrections(terms) == msi.df_corrections(terms) == dict.fromkeys(terms, 0)
+
+    for scoring in ("exact", "bm25"):
+        e_idx = QueryEngine(idx, scoring=scoring)
+        e_msi = QueryEngine(msi, scoring=scoring)
+        for q in ["news report", '"news report"', "table 2024"]:
+            a = e_idx.search(q, page=0, page_size=5)
+            assert a["data"], ("vacuous envelope case", scoring, q)
+            assert _canon(a) == _canon(e_msi.search(q, page=0, page_size=5)), (scoring, q)
+
+    cases = [
+        lambda ix: field_search(ix, "news report", "title", k=50),
+        lambda ix: field_search(ix, "table 2024", "body", k=50),
+        lambda ix: span_near_search(ix, "news report", slop=20, k=500),
+        lambda ix: span_near_search(ix, "news report", slop=20, ordered=True, k=500),
+        lambda ix: bool_search(ix, "news AND report", k=500),
+        lambda ix: bool_search(ix, "(news OR batch) AND NOT update", k=500),
+    ]
+    for i, case in enumerate(cases):
+        want = case(idx).collect()
+        assert want, ("vacuous case", i)
+        assert case(msi).collect() == want, i
 
 
 def test_query_engine_over_multi_segment(spark, seg, halves):
@@ -81,22 +132,6 @@ def test_query_engine_over_multi_segment(spark, seg, halves):
 
     idx_single, _, _ = seg
     msi = MultiSegmentIndex(spark, halves)
-
-    def canon(res):
-        return (
-            res["totalResults"],
-            res["totalPages"],
-            res["tokens"],
-            [
-                (
-                    r["url"],
-                    r["title"],
-                    r["description"],
-                    round(r["score"], 9),
-                )
-                for r in res["data"]
-            ],
-        )
 
     for scoring in ("exact", "bm25"):
         e_single = QueryEngine(idx_single, scoring=scoring)
@@ -111,7 +146,7 @@ def test_query_engine_over_multi_segment(spark, seg, halves):
                     (r["url"], round(r["score"], 9)) for r in a["data"]
                 ] == [(r["url"], round(r["score"], 9)) for r in b["data"]], (scoring, q)
             else:
-                assert canon(a) == canon(b), (scoring, q)
+                assert _canon(a) == _canon(b), (scoring, q)
 
 
 def test_incremental_finalize_with_recrawl(spark, tiny_pages_path, tmp_path_factory):
