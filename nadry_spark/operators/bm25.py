@@ -533,7 +533,9 @@ def bmw_block_stats(
     blocks existed vs how many the cursors actually DECODED (seek()
     skips whole blocks by max_doc_no without decoding; the block-max
     threshold check skips scoring). Returns
-    ``{"n_blocks", "n_decoded", "skip_rate"}`` totals — all zero for a
+    ``{"n_blocks", "n_decoded", "skip_rate"}`` totals over the family's
+    shards (either handle; each segment scored as ``_score`` scores
+    it, tombstones and bound inflation included) — all zero for a
     query that is never scored (no term left, or a conjunctive query
     missing a term).
     """
@@ -544,17 +546,22 @@ def bmw_block_stats(
     if not q_ids:
         return {"n_blocks": 0, "n_decoded": 0, "skip_rate": 0.0}
     meta = index.meta
-    scorer = _shard_bmw(
-        k=k, k1=meta["k1"], b=meta["b"], avgdl=meta["avgdl"],
-        idf_map=idf_map, n_query_terms=len(q_terms[0]), conjunctive=conjunctive,
-        stats_mode=True,
-    )
-    rows = (
-        index.blocks.where(F.col("term").isin(q_terms[0]))
+    frames = [
+        seg.blocks.where(F.col("term").isin(q_terms[0]))
         .groupBy("shard")
-        .applyInPandas(scorer, BMW_STATS_SCHEMA)
-        .collect()
-    )
+        .applyInPandas(
+            _shard_bmw(
+                k=k, k1=meta["k1"], b=meta["b"], avgdl=meta["avgdl"],
+                idf_map=idf_map, n_query_terms=len(q_terms[0]),
+                conjunctive=conjunctive, stats_mode=True,
+                exclude=frozenset(int(x) for x in excl),
+                bound_inflation=max(1.0, meta["avgdl"] / seg.meta["avgdl"]),
+            ),
+            BMW_STATS_SCHEMA,
+        )
+        for seg, excl in zip(index.segments, index.excluded)
+    ]
+    rows = reduce(DataFrame.unionByName, frames).collect()
     total = sum(r["n_blocks"] for r in rows)
     decoded = sum(r["n_decoded"] for r in rows)
     return {

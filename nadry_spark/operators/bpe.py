@@ -41,7 +41,9 @@ The argmax is ONE row collected per step — BPE is inherently
 sequential in the number of merges (each step's counts depend on the
 previous merge), so k merges cost k vocab-sized Spark jobs plus k
 1-row collects.  That is the shape real distributed BPE trainers use;
-nothing corpus-sized ever reaches the driver.
+nothing corpus-sized ever reaches the driver.  While the vocabulary
+fits ``DRIVER_BPE_MAX_VOCAB`` (one bounded collect decides) the same
+merge loop runs in memory over it instead — one Spark job in all.
 
 Determinism / oracle notes: tokenization is lowercase a-z runs
 (RE2-safe class, ASCII); overlapping pairs are COUNTED ("a a a" has
@@ -53,6 +55,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from nadry_spark.localrows import collect_bounded
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -128,19 +132,6 @@ def _apply_merge(long_df: DataFrame, lft: str, rgt: str) -> DataFrame:
     )
 
 
-def _merges_from_vocab(
-    vocab: list[tuple[str, int]], n_merges: int
-) -> list[tuple[int, str, str, int]]:
-    """The classic in-memory BPE merge loop (Sennrich ACL'16 reference
-    implementation shape) over a (word, count) vocabulary, with the
-    EXACT counting/tie-break/merge semantics of the Spark formulation:
-    overlapping adjacent pairs all counted, argmax by (count desc,
-    lft asc, rgt asc), greedy left-to-right non-overlapping merge
-    application.  Used by :func:`bpe_merges_local`; equality with the
-    per-step Spark path is asserted in tests/test_bpe.py."""
-    return _merges_and_words_from_vocab([(list(w), c) for w, c in vocab], n_merges)[0]
-
-
 def _apply_merge_inplace(words: list, lft: str, rgt: str) -> None:
     """Greedy left-to-right non-overlapping (lft, rgt) merge over the
     in-memory symbol lists — the Python mirror of :func:`_apply_merge`."""
@@ -160,9 +151,15 @@ def _apply_merge_inplace(words: list, lft: str, rgt: str) -> None:
 def _merges_and_words_from_vocab(
     words: list, n_merges: int
 ) -> tuple[list[tuple[int, str, str, int]], list]:
-    """Merge loop over pre-split symbol lists; returns (merge table,
-    final symbol lists) so encode consumers read the post-merge
-    segmentation without re-applying the chain."""
+    """The classic in-memory BPE merge loop (Sennrich ACL'16 reference
+    implementation shape) over pre-split (symbols, count) words, with
+    the EXACT counting/tie-break/merge semantics of the Spark
+    formulation: overlapping adjacent pairs all counted, argmax by
+    (count desc, lft asc, rgt asc), greedy left-to-right
+    non-overlapping merge application (equality asserted in
+    tests/test_bpe.py). Returns (merge table, final symbol lists) so
+    encode consumers read the post-merge segmentation without
+    re-applying the chain."""
     out: list[tuple[int, str, str, int]] = []
     for step in range(1, n_merges + 1):
         counts: dict[tuple[str, str], int] = {}
@@ -182,44 +179,19 @@ def _merges_and_words_from_vocab(
 
 # driver gate for the in-memory merge loop: the vocabulary (distinct
 # lowercase words + counts) must fit the driver — ~2M rows is tens of
-# MB; a LIMIT-bounded collect means a beyond-driver vocabulary falls
-# through to the distributed per-merge loop without a full collect
+# MB; a bounded collect means a beyond-driver vocabulary falls through
+# to the distributed per-merge loop without a full collect
 DRIVER_BPE_MAX_VOCAB = 2_000_000
 
 
-def _collect_vocab_bounded(docs: DataFrame, text_col: str):
-    """(word, cnt) vocabulary if it fits ``DRIVER_BPE_MAX_VOCAB``,
-    else None (one bounded job either way)."""
-    rows = word_counts(docs, text_col).limit(DRIVER_BPE_MAX_VOCAB + 1).collect()
-    if len(rows) > DRIVER_BPE_MAX_VOCAB:
+def _vocab_local(docs: DataFrame, text_col: str):
+    """The vocabulary as (symbols, cnt) words, each word split into
+    its characters, if it fits ``DRIVER_BPE_MAX_VOCAB``, else None
+    (one bounded job either way)."""
+    pdf = collect_bounded(word_counts(docs, text_col), DRIVER_BPE_MAX_VOCAB)
+    if pdf is None:
         return None
-    return [(r["word"], int(r["cnt"])) for r in rows]
-
-
-def bpe_merges_local(
-    docs: DataFrame, n_merges: int = 3, text_col: str = "text"
-) -> DataFrame:
-    """:func:`bpe_merges` with the merge loop on the DRIVER: ONE
-    distributed job reduces the corpus to its (word, count) vocabulary
-    — the only corpus-sized work BPE training has — and the k merge
-    steps then run in memory over that vocabulary.  Same merge table
-    as :func:`bpe_merges` (asserted in tests), but k merges cost one
-    Spark job total instead of k vocab-sized jobs + k collects.
-
-    Scale contract: the VOCABULARY must fit on the driver (~10M
-    distinct lowercase words at web scale, hundreds of MB — the same
-    assumption every production BPE trainer makes).  If it doesn't,
-    use :func:`bpe_merges`, which keeps the vocabulary distributed and
-    pays one Spark job per merge instead."""
-    spark = docs.sparkSession
-    vocab = [
-        (r["word"], int(r["cnt"]))
-        for r in word_counts(docs, text_col).collect()
-    ]
-    out = _merges_from_vocab(vocab, n_merges)
-    return spark.createDataFrame(
-        out, "step int, lft string, rgt string, pair_count long"
-    )
+    return [(list(w), int(c)) for w, c in zip(pdf["word"], pdf["cnt"])]
 
 
 def bpe_merges(
@@ -231,18 +203,20 @@ def bpe_merges(
     rgt string, pair_count long), ordered by step.  Stops early
     (fewer rows) if the vocabulary runs out of adjacent pairs.
 
-    This is the fully-distributed formulation (vocabulary never leaves
-    the cluster; one vocab-sized Spark job per merge); driver-sized
-    vocabularies (the common case, and what every production BPE
-    trainer assumes) take the :func:`bpe_merges_local` in-memory loop
-    via a LIMIT-bounded collect gate — identical table (asserted in
-    tests/test_bpe.py), ONE Spark job instead of one per merge.
+    Driver-sized vocabularies (the common case, and what every
+    production BPE trainer assumes: ~10M distinct lowercase words at
+    web scale) take an in-memory merge loop once one bounded collect
+    shows the vocabulary fits ``DRIVER_BPE_MAX_VOCAB`` — identical
+    table (asserted in tests/test_bpe.py), ONE Spark job instead of
+    one per merge. Past the gate the fully-distributed formulation
+    runs: the vocabulary never leaves the cluster, one vocab-sized
+    Spark job per merge.
     """
     spark = docs.sparkSession
-    vocab = _collect_vocab_bounded(docs, text_col)
-    if vocab is not None:
+    words = _vocab_local(docs, text_col)
+    if words is not None:
         return spark.createDataFrame(
-            _merges_from_vocab(vocab, n_merges),
+            _merges_and_words_from_vocab(words, n_merges)[0],
             "step int, lft string, rgt string, pair_count long",
         )
     # localCheckpoint per step: caps the k-step window/join lineage so
@@ -286,15 +260,14 @@ def bpe_encode_stats(
     form collapses to (word, n_sub) and joins the corpus word stream —
     no per-doc re-segmentation of repeated words."""
     spark = docs.sparkSession
-    vocab = _collect_vocab_bounded(docs, text_col)
-    if vocab is not None:
+    words = _vocab_local(docs, text_col)
+    if words is not None:
         # driver fast path: learn (or apply) the merge chain in memory
         # over the collected vocabulary — the final symbol lists ARE
         # the segmentation, so n_sub per word falls out without the k
         # checkpointed merge applications; ONE corpus-sized job remains
         # (the word-stream join below). Identical n_sub values
         # (asserted in tests/test_bpe.py).
-        words = [(list(w), c) for w, c in vocab]
         if merges is None:
             _table, words = _merges_and_words_from_vocab(words, n_merges)
         else:

@@ -25,6 +25,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nadry_spark.localrows import _local_frame, collect_bounded
+
+# driver fast-path gate of every function here: the SYMMETRIZED edge
+# count (twice the raw pair rows) the numpy rounds run over, ~tens of
+# MB at 2M. The pair stream is checkpointed before the bounded collect:
+# the fallback unions it with itself, and both then read the checkpoint
+# instead of re-evaluating an expensive pair pipeline per consumer.
+DRIVER_MAX_SYM_EDGES = 2_000_000
+
 
 def connected_components(
     edges: DataFrame,
@@ -33,7 +42,6 @@ def connected_components(
     iterations: int = 8,
     until_converged: bool = False,
     checkpoint_every: int = 3,
-    driver_max_edges: int | None = 2_000_000,
 ) -> DataFrame:
     """(v, component) for every vertex appearing in ``edges``;
     ``component`` is the minimum vertex id reachable within
@@ -47,12 +55,12 @@ def connected_components(
     regardless of convergence, which is what the cross-engine oracle
     checks rely on.
 
-    Driver fast path (the bpe_merges_local / mmr_select precedent):
-    dedup pair graphs are a tiny fraction of the corpus (LSH/PPJoin
+    Driver fast path (the bpe_merges / mmr_select precedent): dedup
+    pair graphs are a tiny fraction of the corpus (LSH/PPJoin
     candidates that VERIFIED — thousands of edges for thousands of
     docs), so when twice the raw edge count is driver-sized
-    (``driver_max_edges``, default 2M ~ tens of MB; 2x because the
-    recurrence runs over the symmetrized set) the k propagation
+    (``DRIVER_MAX_SYM_EDGES``, 2M; 2x because the recurrence runs over
+    the symmetrized set — one bounded collect decides) the k propagation
     rounds run as vectorized numpy min-scatters on one collected edge
     list instead of k (join + min-aggregate) Spark rounds (2 shuffles
     each). The simulation is round-for-round the SAME recurrence
@@ -61,28 +69,29 @@ def connected_components(
     numeric ids and for strings (UTF-8 byte order == code-point
     order) — bit-identical output to the distributed loop, asserted
     in tests/test_components_fuzzy.py. Past the threshold (true
-    corpus-scale pair graphs) the distributed loop runs unchanged;
-    ``driver_max_edges=None`` disables the fast path.
+    corpus-scale pair graphs) the distributed loop runs unchanged.
     """
-    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if driver_max_edges is not None:
-        # materialize the pair stream once (the round-start shape
-        # checkpointed it too): the count gate AND whichever path wins
-        # read the checkpoint instead of re-evaluating an expensive
-        # pair pipeline per consumer
-        raw = raw.localCheckpoint()
-    if driver_max_edges is not None and raw.count() * 2 <= driver_max_edges:
-        # collect the RAW pair rows (one cheap count-gate job + one
-        # toPandas job) and symmetrize in numpy — duplicate edges are
-        # harmless to a min-scatter, so the Spark-side distinct
-        # shuffle + checkpoint the distributed loop needs buys nothing
-        # on the fast path
-        verts, labels = _cc_numpy(raw.toPandas(), iterations, until_converged)
+    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint()
+    pdf = collect_bounded(raw, DRIVER_MAX_SYM_EDGES // 2)
+    if pdf is not None:
+        # symmetrize the collected RAW pair rows in numpy — duplicate
+        # edges are harmless to a min-scatter, so the Spark-side
+        # distinct shuffle + checkpoint the distributed loop needs buys
+        # nothing on the fast path
+        verts, labels = _cc_numpy(pdf, iterations, until_converged)
         return _local_frame(
             edges.sparkSession,
             raw.schema["a"].dataType,
             [("v", verts), ("component", verts[labels])],
+            n_keys=2,
         )
+    return _cc_distributed(raw, iterations, until_converged, checkpoint_every)
+
+
+def _cc_distributed(
+    raw: DataFrame, iterations: int, until_converged: bool, checkpoint_every: int
+) -> DataFrame:
+    """The distributed min-label propagation loop over (a, b) pairs."""
     und = raw.unionByName(raw.select(F.col("b").alias("a"), F.col("a").alias("b")))
     und = und.distinct().localCheckpoint()
     labels = (
@@ -142,36 +151,11 @@ def _cc_numpy(pdf, iterations: int, until_converged: bool):
     return verts, labels
 
 
-def _local_frame(spark, vtype, cols) -> DataFrame:
-    """Driver-resident (name, numpy array) columns as a DataFrame.
-
-    Arrow-backed ``createDataFrame(pandas)`` — measured ~2-3x cheaper
-    end-to-end than the row-list path for the few-thousand-row frames
-    the graph fast paths return (the rows still ship to executors
-    through parallelize slices; Arrow just makes the conversion and
-    the collect cheap). Integer-typed columns pass through as int64;
-    the vertex-typed columns keep the input's Spark type."""
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField(
-                name, LongType() if name == "cluster_size" else vtype, True
-            )
-            for name, _ in cols
-        ]
-    )
-    pdf = pd.DataFrame({name: vals for name, vals in cols})
-    return spark.createDataFrame(pdf, schema)
-
-
 def connected_components_with_sizes(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
     iterations: int = 8,
-    driver_max_edges: int | None = 2_000_000,
 ) -> DataFrame:
     """(v, component, cluster_size) — :func:`connected_components`
     labels joined with the per-component member count, in ONE call.
@@ -183,17 +167,12 @@ def connected_components_with_sizes(
     the sizes are one ``np.unique`` over the final labels, so the
     whole answer returns as a single driver-built frame; past the
     gate it composes the distributed pieces unchanged."""
-    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if driver_max_edges is not None:
-        # materialize the pair stream once (the round-start shape
-        # checkpointed it too): the count gate AND whichever path wins
-        # read the checkpoint instead of re-evaluating an expensive
-        # pair pipeline per consumer
-        raw = raw.localCheckpoint()
-    if driver_max_edges is not None and raw.count() * 2 <= driver_max_edges:
+    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint()
+    pdf = collect_bounded(raw, DRIVER_MAX_SYM_EDGES // 2)
+    if pdf is not None:
         import numpy as np
 
-        verts, labels = _cc_numpy(raw.toPandas(), iterations, False)
+        verts, labels = _cc_numpy(pdf, iterations, False)
         _, inv, cnt = np.unique(labels, return_inverse=True, return_counts=True)
         return _local_frame(
             edges.sparkSession,
@@ -203,11 +182,9 @@ def connected_components_with_sizes(
                 ("component", verts[labels]),
                 ("cluster_size", cnt[inv].astype("int64")),
             ],
+            n_keys=2,
         )
-    labels = connected_components(
-        raw, src="a", dst="b", iterations=iterations,
-        driver_max_edges=None,
-    )
+    labels = _cc_distributed(raw, iterations, False, checkpoint_every=3)
     sizes = labels.groupBy("component").agg(
         F.count("*").cast("long").alias("cluster_size")
     )
@@ -219,7 +196,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 3,
-    driver_max_edges: int | None = 2_000_000,
 ) -> DataFrame:
     """Synchronous label propagation communities (Raghavan et al.,
     Phys. Rev. E 2007, "Near linear time algorithm to detect community
@@ -247,19 +223,14 @@ def label_propagation(
     """
     from pyspark.sql import Window
 
-    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    if driver_max_edges is not None:
-        # materialize the pair stream once (the round-start shape
-        # checkpointed it too): the count gate AND whichever path wins
-        # read the checkpoint instead of re-evaluating an expensive
-        # pair pipeline per consumer
-        raw = raw.localCheckpoint()
-    if driver_max_edges is not None and raw.count() * 2 <= driver_max_edges:
+    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint()
+    pdf = collect_bounded(raw, DRIVER_MAX_SYM_EDGES // 2)
+    if pdf is not None:
         # raw rows collected; symmetrize + self-loop drop + DISTINCT
         # happen in numpy (LPA counts neighbours, so unlike CC the
         # dedup is semantic here and must match the distributed
         # loop's distinct() exactly — it does, on pair identity)
-        return _lpa_local(raw, iterations)
+        return _lpa_local(raw, pdf, iterations)
     und = raw.unionByName(raw.select(F.col("b").alias("a"), F.col("a").alias("b")))
     und = und.where(F.col("a") != F.col("b")).distinct().localCheckpoint()
     labels = und.select(F.col("a").alias("v")).distinct().withColumn(
@@ -281,7 +252,7 @@ def label_propagation(
     return labels
 
 
-def _lpa_local(raw: DataFrame, iterations: int) -> DataFrame:
+def _lpa_local(raw: DataFrame, pdf, iterations: int) -> DataFrame:
     """Driver-side simulation of ``iterations`` synchronous LPA rounds
     over collected RAW (a, b) pair rows — the exact
     argmax-by-(count desc, label asc) recurrence of the distributed
@@ -293,7 +264,6 @@ def _lpa_local(raw: DataFrame, iterations: int) -> DataFrame:
     dedup is load-bearing, unlike CC's."""
     import numpy as np
 
-    pdf = raw.toPandas()
     spark = raw.sparkSession
     a0 = pdf["a"].to_numpy()
     b0 = pdf["b"].to_numpy()
@@ -330,4 +300,5 @@ def _lpa_local(raw: DataFrame, iterations: int) -> DataFrame:
         spark,
         raw.schema["a"].dataType,
         [("v", verts), ("community", verts[labels])],
+        n_keys=2,
     )

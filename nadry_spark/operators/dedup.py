@@ -296,7 +296,6 @@ def jaccard_pairs(
     candidates: DataFrame | None = None,
     threshold: float = 0.0,
     broadcast_arrays: bool = False,
-    driver_verify: bool = False,
 ) -> DataFrame:
     """(id_a, id_b, jaccard) via shingle self-join; optionally restricted
     to LSH candidates (the scale path — never all-pairs).
@@ -309,33 +308,7 @@ def jaccard_pairs(
     is ONE stage over the skinny pair stream and the only exchanged
     payload is the (candidate-docs-only) array table, once. Callers
     enable it when the candidate-doc set is bounded (ngram_jaccard_dups
-    / minhash_dedup_pairs gate on the measured shingle row count).
-
-    ``driver_verify``: run the restricted verify driver-side
-    (:func:`_jaccard_local` with the collected candidate set) —
-    callers set it when the measured shingle row count is under
-    ``DRIVER_JACCARD_MAX_OCC_ROWS`` and threshold > 0; identical rows
-    (see _jaccard_local), distributed verify unchanged past the gate
-    or when the enumerated pair bound trips."""
-    if candidates is not None and driver_verify and threshold > 0:
-        # per-pair sorted-set intersection (not the co-occurrence
-        # enumeration): the candidate set is already LSH-bounded, so
-        # O(pairs x set size) skips the O(sum df^2) enumeration that
-        # dominates on corpora with high-df shingles
-        out = _jaccard_local_cand(
-            shingles.sparkSession,
-            shingles.select("id", "shingle").toPandas(),
-            shingles.schema["id"].dataType,
-            threshold,
-            candidates.select("id_a", "id_b").toPandas(),
-        )
-        if out is not None:
-            return out
-        _LOG.warning(
-            "jaccard_pairs: candidate pair bound over %d — falling "
-            "back to the distributed verify",
-            DRIVER_MINHASH_MAX_CAND_PAIRS,
-        )
+    / minhash_dedup_pairs gate on the measured shingle row count)."""
     if candidates is not None:
         # per-pair set intersection: join each candidate pair to the two
         # docs' shingle arrays and intersect. O(candidates * shingle set)
@@ -830,7 +803,6 @@ def ngram_jaccard_dups(
     shingle_n: int = 3,
     threshold: float = 0.5,
     stats: dict | None = None,
-    driver_max_occ_rows: int | None = DRIVER_JACCARD_MAX_OCC_ROWS,
 ) -> DataFrame:
     """Exact-threshold all-pairs n-gram Jaccard near-dup join:
     shingle -> prefix-filtered candidates -> jaccard verify.
@@ -846,7 +818,7 @@ def ngram_jaccard_dups(
 
     Driver fast path (the components/pagerank precedent): when the
     token-count estimate says the occurrence rows are driver-sized
-    (``driver_max_occ_rows``) the verify runs as one numpy
+    (``DRIVER_JACCARD_MAX_OCC_ROWS``) the verify runs as one numpy
     co-occurrence pass over the collected shingle rows
     (:func:`_jaccard_local` — identical rows by construction,
     asserted in tests/test_dedup.py), with an exact enumerated-pair
@@ -859,11 +831,14 @@ def ngram_jaccard_dups(
     it is persisted for the call and released once the (small) verified
     pair set is checkpointed.
     """
-    if stats is None and driver_max_occ_rows is not None:
+    if stats is None:
+        # a count probe, not a bounded collect: it sizes the occurrence
+        # frame BEFORE building it, where a LIMIT probe would build and
+        # ship up to the bound of shingle rows only to fall back
         est = df.select(
             F.sum(F.size(F.split(F.col(text_col), r"\s+"))).alias("n")
         ).collect()[0]["n"]
-        if est is not None and est <= driver_max_occ_rows:
+        if est is not None and est <= DRIVER_JACCARD_MAX_OCC_ROWS:
             occ = word_shingles(df, id_col, text_col, shingle_n, distinct=False)
             out = _jaccard_local(
                 df.sparkSession,
@@ -925,7 +900,10 @@ def minhash_dedup_pairs(
     # invariant and the verify dedups in-aggregate, so the distinct
     # shuffle buys nothing here
     sh = word_shingles(df, id_col, text_col, shingle_n, distinct=False).persist()
+    # a count probe, not a bounded collect: n_occ also picks the
+    # broadcast verify below
     n_occ = sh.count()
+    occ_pdf = None
     if n_occ <= DRIVER_JACCARD_MAX_OCC_ROWS and threshold > 0:
         # full driver fast path: ONE Spark job (the shingle collect)
         # replaces the signature aggregation (n_hashes md5s per
@@ -934,9 +912,10 @@ def minhash_dedup_pairs(
         # price of the driver verify. Stats/skip semantics identical
         # (asserted in tests); falls back past the distinct-shingle /
         # candidate-pair gates with the collect as sunk cost.
+        occ_pdf = sh.select("id", "shingle").toPandas()
         out = _minhash_local(
             df.sparkSession,
-            sh.select("id", "shingle").toPandas(),
+            occ_pdf,
             df.schema[id_col].dataType,
             n_hashes,
             bands,
@@ -960,14 +939,24 @@ def minhash_dedup_pairs(
     cand = lsh_candidate_pairs(
         sigs, n_hashes, bands, bucket_cap=bucket_cap, stats=stats
     ).persist()
-    pairs = jaccard_pairs(
-        sh, cand, threshold, broadcast_arrays=bcast,
-        # driver verify: collect the persisted occurrence rows and the
-        # (LSH-bounded) candidate set, verify in numpy — identical
-        # restricted-verify rows, minus the array-table aggregation +
-        # broadcast + per-pair intersect stages
-        driver_verify=(n_occ <= DRIVER_JACCARD_MAX_OCC_ROWS and threshold > 0),
-    ).localCheckpoint()
+    pairs = None
+    if occ_pdf is not None:
+        # driver verify of the LSH-bounded candidates over the rows
+        # collected above: identical restricted-verify rows, minus the
+        # array-table aggregation + broadcast + intersect stages
+        pairs = _jaccard_local_cand(
+            df.sparkSession, occ_pdf, df.schema[id_col].dataType, threshold,
+            cand.select("id_a", "id_b").toPandas(),
+        )
+        if pairs is None:
+            _LOG.warning(
+                "minhash_dedup_pairs: candidate pair bound over %d — "
+                "falling back to the distributed verify",
+                DRIVER_MINHASH_MAX_CAND_PAIRS,
+            )
+    if pairs is None:
+        pairs = jaccard_pairs(sh, cand, threshold, broadcast_arrays=bcast)
+    pairs = pairs.localCheckpoint()
     sh.unpersist()
     sigs.unpersist()
     cand.unpersist()

@@ -29,14 +29,18 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nadry_spark.operators.pagerank import build_edges
+from nadry_spark.localrows import _local_frame, collect_bounded
+from nadry_spark.operators.pagerank import _edge_index, build_edges
+
+# driver fast-path gate: edge rows one bounded collect may bring to the
+# driver
+DRIVER_MAX_EDGES = 5_000_000
 
 
 def hits(
     documents: DataFrame,
     iters: int = 3,
     broadcast_threshold: int = 1_000_000,
-    driver_max_edges: int | None = 5_000_000,
 ) -> DataFrame:
     """(url, authority, hub) for every page after `iters` rounds.
     Pages nobody links to have authority 0; pages with no outlinks
@@ -46,7 +50,14 @@ def hits(
     count fits ``broadcast_threshold`` they ride as broadcasts so the
     edge table never shuffles (checkpointed frames lose stats, so
     without the hint Catalyst falls back to SortMergeJoin); past the
-    threshold the joins degrade to the correct shuffle plan."""
+    threshold the joins degrade to the correct shuffle plan.
+
+    Driver fast path: while the vertices fit ``broadcast_threshold``
+    and a non-empty edge list fits ``DRIVER_MAX_EDGES`` (one bounded
+    collect decides), the rounds run as numpy scatter-adds over the
+    collected edges, summed in a fixed (dst, src) order."""
+    # edges checkpointed: the gate collects them and the fallback
+    # rounds read them twice per iteration
     edges = build_edges(documents).localCheckpoint()
     nodes = documents.select("url").distinct().localCheckpoint()
     n_nodes = nodes.count()
@@ -56,44 +67,29 @@ def hits(
     # left joins below fill them; summation-order noise is the same
     # class the distributed partial aggregation has, absorbed by the
     # 1e-9 output grid.
-    if driver_max_edges is not None and n_nodes <= broadcast_threshold:
-        n_edges = edges.count()
-        if 0 < n_edges <= driver_max_edges:
-            import numpy as np
-            from pyspark.sql.types import DoubleType, StructField, StructType
+    epdf = (
+        collect_bounded(edges, DRIVER_MAX_EDGES)
+        if n_nodes <= broadcast_threshold
+        else None
+    )
+    if epdf is not None and len(epdf):
+        import numpy as np
 
-            urls = np.sort(nodes.toPandas()["url"].to_numpy())
-            epdf = edges.toPandas()
-            src_idx = np.searchsorted(urls, epdf["src"].to_numpy())
-            dst_idx = np.searchsorted(urls, epdf["dst"].to_numpy())
-            h_vec = np.ones(len(urls), dtype=np.float64)
-            a_vec = np.zeros(len(urls), dtype=np.float64)
-            for _ in range(iters):
-                a_raw = np.zeros(len(urls), dtype=np.float64)
-                np.add.at(a_raw, dst_idx, h_vec[src_idx])
-                a_vec = a_raw / a_raw.sum()
-                h_raw = np.zeros(len(urls), dtype=np.float64)
-                np.add.at(h_raw, src_idx, a_vec[dst_idx])
-                h_vec = h_raw / h_raw.sum()
-            spark = documents.sparkSession
-            schema = StructType(
-                [
-                    StructField("url", nodes.schema["url"].dataType, True),
-                    StructField("authority", DoubleType(), True),
-                    StructField("hub", DoubleType(), True),
-                ]
-            )
-            import pandas as pd
-
-            out = spark.createDataFrame(
-                pd.DataFrame({"url": urls, "authority": a_vec, "hub": h_vec}),
-                schema,
-            )
-            return out.select(
-                "url",
-                F.round("authority", 9).alias("authority"),
-                F.round("hub", 9).alias("hub"),
-            )
+        urls = np.sort(nodes.toPandas()["url"].to_numpy())
+        _order, src_idx, dst_idx = _edge_index(urls, epdf)
+        h_vec = np.ones(len(urls), dtype=np.float64)
+        a_vec = np.zeros(len(urls), dtype=np.float64)
+        for _ in range(iters):
+            a_raw = np.zeros(len(urls), dtype=np.float64)
+            np.add.at(a_raw, dst_idx, h_vec[src_idx])
+            a_vec = a_raw / a_raw.sum()
+            h_raw = np.zeros(len(urls), dtype=np.float64)
+            np.add.at(h_raw, src_idx, a_vec[dst_idx])
+            h_vec = h_raw / h_raw.sum()
+        return _local_frame(
+            documents.sparkSession, nodes.schema["url"].dataType,
+            [("url", urls), ("authority", a_vec), ("hub", h_vec)], round9=True,
+        )
     bc = F.broadcast if n_nodes <= broadcast_threshold else (lambda df: df)
     h = nodes.select("url", F.lit(1.0).alias("hub"))
     a = None

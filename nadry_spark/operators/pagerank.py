@@ -25,9 +25,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nadry_spark.localrows import _local_frame, collect_bounded
+
 DAMPING = 0.85
 TOLERANCE = 1.0e-6
 MAX_ITER = 100
+# driver fast-path gate of pagerank and trustrank: live edge rows one
+# bounded collect may bring to the driver
+DRIVER_MAX_EDGES = 5_000_000
 
 
 def build_edges(documents: DataFrame) -> DataFrame:
@@ -49,7 +54,6 @@ def pagerank(
     checkpoint_every: int = 5,
     check_every: int = 1,
     broadcast_threshold: int = 1_000_000,
-    driver_max_edges: int | None = 5_000_000,
 ) -> DataFrame:
     """(url, popularity_score) over pages with >=1 inlink.
 
@@ -72,7 +76,12 @@ def pagerank(
     bytes); remember the broadcast ships TWICE per iteration for up to
     max_iter iterations, so this must stay well under what a single
     executor comfortably rebuilds per round. Past the threshold (true
-    web-graph scale) the shuffle join takes over unchanged."""
+    web-graph scale) the shuffle join takes over unchanged.
+
+    Driver fast path: while n fits ``broadcast_threshold`` and the live
+    edge list fits ``DRIVER_MAX_EDGES`` (one bounded collect decides),
+    the iterations run in numpy over the collected edges, summed in a
+    fixed order — bit-reproducible whatever the input partitioning."""
     spark = documents.sparkSession
     edges = build_edges(documents).persist()
 
@@ -97,28 +106,26 @@ def pagerank(
     ranks = vertices.select("dst", F.lit(1.0 / n).alias("rank"))
     base = (1.0 - damping) / n
 
-    # Driver fast path (bpe_merges_local / components._cc_local
-    # precedent): when the live edge list is driver-sized, run the
-    # power iteration as numpy scatter-adds on ONE collected edge
-    # table instead of max_iter (broadcast-join + aggregate) rounds —
-    # the recurrence is identical (contrib[dst] = sum rank[src]/
-    # indeg[src]; rank = base + d*contrib; same per-iteration L1
-    # convergence test at the same check_every cadence). Summation
-    # order differs from Spark's partial aggregation, which is the
-    # same noise class the distributed loop already has run-to-run
-    # (and the DuckDB oracle has cross-engine); scores land on the
-    # same 1e-9 grid. Past the threshold (true web graphs) the
-    # broadcast/shuffle loop below runs unchanged.
-    if driver_max_edges is not None and n <= broadcast_threshold:
-        n_edges = live_edges.count()
-        if n_edges <= driver_max_edges:
-            out = _pagerank_local(
-                spark, live_edges, vertices, n, damping, tol, max_iter, check_every
-            )
-            edges.unpersist()
-            vertices.unpersist()
-            live_edges.unpersist()
-            return out
+    # Driver fast path: the power iteration as numpy scatter-adds on
+    # the collected edge table instead of max_iter (broadcast-join +
+    # aggregate) rounds — the same recurrence (contrib[dst] = sum
+    # rank[src]/indeg[src]; rank = base + d*contrib) and L1 test at the
+    # same check_every cadence. Its summation order differs from
+    # Spark's partial aggregation (the DuckDB oracle's noise class) but
+    # is fixed, so the scores do not depend on the partitioning.
+    epdf = (
+        collect_bounded(live_edges, DRIVER_MAX_EDGES)
+        if n <= broadcast_threshold
+        else None
+    )
+    if epdf is not None:
+        out = _pagerank_local(
+            spark, epdf, vertices, n, damping, tol, max_iter, check_every
+        )
+        edges.unpersist()
+        vertices.unpersist()
+        live_edges.unpersist()
+        return out
 
     small = n <= broadcast_threshold
     bc = F.broadcast if small else (lambda df: df)
@@ -161,21 +168,31 @@ def pagerank(
     return out
 
 
+def _edge_index(verts, epdf, src: str = "src", dst: str = "dst"):
+    """(order, src_idx, dst_idx): positions of the collected edges'
+    endpoints in the sorted vertex array, and the (dst, src) order that
+    fixes every numpy scatter-add's summation order — without it the
+    float sums follow the collect's arrival order, which changes with
+    the input's partitioning."""
+    import numpy as np
+
+    src_idx = np.searchsorted(verts, epdf[src].to_numpy())
+    dst_idx = np.searchsorted(verts, epdf[dst].to_numpy())
+    order = np.lexsort((src_idx, dst_idx))
+    return order, src_idx[order], dst_idx[order]
+
+
 def _pagerank_local(
-    spark, live_edges, vertices, n, damping, tol, max_iter, check_every
+    spark, epdf, vertices, n, damping, tol, max_iter, check_every
 ) -> DataFrame:
     """Driver-side power iteration over the collected live-edge table —
     the exact recurrence of the distributed loop, vectorized with numpy
     scatter-adds (see the fast-path comment in :func:`pagerank`)."""
     import numpy as np
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
-    vpdf = vertices.select("dst").toPandas()
-    epdf = live_edges.select("src", "dst", "src_indeg").toPandas()
-    verts = np.sort(vpdf["dst"].to_numpy())
-    src_idx = np.searchsorted(verts, epdf["src"].to_numpy())
-    dst_idx = np.searchsorted(verts, epdf["dst"].to_numpy())
-    indeg = epdf["src_indeg"].to_numpy().astype(np.float64)
+    verts = np.sort(vertices.select("dst").toPandas()["dst"].to_numpy())
+    order, src_idx, dst_idx = _edge_index(verts, epdf)
+    indeg = epdf["src_indeg"].to_numpy().astype(np.float64)[order]
 
     ranks = np.full(n, 1.0 / n, dtype=np.float64)
     base = (1.0 - damping) / n
@@ -190,19 +207,9 @@ def _pagerank_local(
             if delta < tol:
                 break
 
-    vtype = vertices.schema["dst"].dataType
-    schema = StructType(
-        [
-            StructField("url", vtype, True),
-            StructField("popularity_score", DoubleType(), True),
-        ]
-    )
-    import pandas as pd
-
-    # Arrow-backed pandas conversion: ~2-3x cheaper end-to-end than
-    # the pickled row-list path for these few-thousand-row frames
-    return spark.createDataFrame(
-        pd.DataFrame({"url": verts, "popularity_score": ranks}), schema
+    return _local_frame(
+        spark, vertices.schema["dst"].dataType,
+        [("url", verts), ("popularity_score", ranks)],
     )
 
 
@@ -222,7 +229,6 @@ def trustrank(
     damping: float = DAMPING,
     iters: int = 3,
     broadcast_threshold: int = 1_000_000,
-    driver_max_edges: int | None = 5_000_000,
 ) -> DataFrame:
     """TrustRank (Gyongyi, Garcia-Molina & Pedersen, VLDB'04): trust
     propagation from a trusted seed set to demote web spam before a
@@ -242,7 +248,9 @@ def trustrank(
 
     Scale: per iteration one edge join + one aggregation, like
     ``pagerank``; the seed vector is node-sized and the uniform seed
-    mass 1/|seeds| is a broadcast scalar.
+    mass 1/|seeds| is a broadcast scalar. The driver fast path takes
+    ``pagerank``'s gates: ``broadcast_threshold`` nodes and
+    ``DRIVER_MAX_EDGES`` live edges.
     """
     edges = build_edges(documents)
     outdeg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
@@ -259,40 +267,30 @@ def trustrank(
     # driver fast path (same gates/rationale as pagerank's): the
     # recurrence t = (1-d)*s + d*contrib over a collected live-edge
     # table, numpy scatter-adds per round
-    if driver_max_edges is not None and n_nodes <= broadcast_threshold:
-        live_ck = live.localCheckpoint()
-        if live_ck.count() <= driver_max_edges:
-            import numpy as np
+    epdf = (
+        collect_bounded(live.select("src", "dst", "outdeg"), DRIVER_MAX_EDGES)
+        if n_nodes <= broadcast_threshold
+        else None
+    )
+    if epdf is not None:
+        import numpy as np
 
-            bpdf = base.toPandas()
-            epdf = live_ck.select("src", "dst", "outdeg").toPandas()
-            urls = bpdf["url"].to_numpy()
-            order = np.argsort(urls)
-            urls = urls[order]
-            s_vec = bpdf["s"].to_numpy().astype(np.float64)[order]
-            src_idx = np.searchsorted(urls, epdf["src"].to_numpy())
-            dst_idx = np.searchsorted(urls, epdf["dst"].to_numpy())
-            outdeg_f = epdf["outdeg"].to_numpy().astype(np.float64)
-            rank = s_vec.copy()
-            for _ in range(iters):
-                contrib = np.zeros(len(urls), dtype=np.float64)
-                np.add.at(contrib, dst_idx, rank[src_idx] / outdeg_f)
-                rank = (1.0 - damping) * s_vec + damping * contrib
-            from pyspark.sql.types import DoubleType, StructField, StructType
-
-            spark = documents.sparkSession
-            schema = StructType(
-                [
-                    StructField("url", base.schema["url"].dataType, True),
-                    StructField("trust_score", DoubleType(), True),
-                ]
-            )
-            import pandas as pd
-
-            out = spark.createDataFrame(
-                pd.DataFrame({"url": urls, "trust_score": rank}), schema
-            )
-            return out.select("url", F.round("trust_score", 9).alias("trust_score"))
+        bpdf = base.toPandas()
+        urls = bpdf["url"].to_numpy()
+        by_url = np.argsort(urls)
+        urls = urls[by_url]
+        s_vec = bpdf["s"].to_numpy().astype(np.float64)[by_url]
+        order, src_idx, dst_idx = _edge_index(urls, epdf)
+        outdeg_f = epdf["outdeg"].to_numpy().astype(np.float64)[order]
+        rank = s_vec.copy()
+        for _ in range(iters):
+            contrib = np.zeros(len(urls), dtype=np.float64)
+            np.add.at(contrib, dst_idx, rank[src_idx] / outdeg_f)
+            rank = (1.0 - damping) * s_vec + damping * contrib
+        return _local_frame(
+            documents.sparkSession, base.schema["url"].dataType,
+            [("url", urls), ("trust_score", rank)], round9=True,
+        )
     # trust vectors are node-sized: broadcast them like pagerank does
     # so the edge table never shuffles while the graph fits; past the
     # threshold the joins degrade to the correct shuffle plan

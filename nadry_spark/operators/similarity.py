@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nadry_spark.localrows import collect_bounded
+
 
 def dot(a: Column, b: Column) -> Column:
     # cast BEFORE multiplying: float32*float32 then widen loses bits the
@@ -400,28 +402,37 @@ def _nearest_centroid_expr(vec_col, centroids: list[tuple[int, list[float]]]):
 
 DRIVER_ANN_MAX_ROWS = 200_000
 DRIVER_ANN_MAX_CELLS = 16_000_000  # rows x dim
+# kept-bucket pair bound of the driver cosine_dup_pairs (the pairs are
+# enumerated in numpy); past it the distributed self-join runs
+DRIVER_COSINE_MAX_PAIRS = 20_000_000
 
 
 def _collect_vectors_local(df: DataFrame, id_col: str, vec_col: str, dims=()):
-    """Bounded collect of a vector table: ONE LIMIT-bounded job.
-    Returns {ids, V (n x d float64), pdf} or None past the gates
-    (too many rows/cells, ragged or NULL vectors, or vectors too short
-    to hold every sign-bit dimension of ``dims``) — the caller then
-    runs its distributed plan, which handles all of those."""
+    """One row's dimension ``d`` (a 1-row job), then a bounded collect
+    of at most min(``DRIVER_ANN_MAX_ROWS``, ``DRIVER_ANN_MAX_CELLS`` //
+    d) rows. Returns {ids, V (n x d float64), pdf} or None past the
+    gates (too many rows/cells, a NULL or empty first vector, ragged
+    or NULL vectors, or vectors too short to hold every sign-bit
+    dimension of ``dims``) — the caller then runs its distributed
+    plan, which handles all of those."""
     import numpy as np
+    import pandas as pd
 
-    pdf = df.limit(DRIVER_ANN_MAX_ROWS + 1).toPandas()
-    if len(pdf) > DRIVER_ANN_MAX_ROWS:
+    first = df.select(vec_col).limit(1).collect()
+    if not first:
+        empty = pd.DataFrame(columns=df.columns)
+        return {"ids": np.empty(0, dtype=np.int64), "V": np.empty((0, 0)), "pdf": empty}
+    d = len(first[0][0] or ())
+    if d == 0 or (dims and d <= max(dims)):
         return None
-    if len(pdf) == 0:
-        return {"ids": np.empty(0, dtype=np.int64), "V": np.empty((0, 0)), "pdf": pdf}
+    pdf = collect_bounded(df, min(DRIVER_ANN_MAX_ROWS, DRIVER_ANN_MAX_CELLS // d))
+    if pdf is None:
+        return None
     try:
         V = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
     except (TypeError, ValueError):  # ragged rows, or NULL among vectors
         return None
-    if V.ndim != 2 or V.size > DRIVER_ANN_MAX_CELLS:
-        return None
-    if dims and V.shape[1] <= max(dims):
+    if V.shape != (len(pdf), d):
         return None
     return {"ids": pdf[id_col].to_numpy(), "V": V, "pdf": pdf}
 
@@ -462,6 +473,18 @@ def _seq_norms(A):
     return np.sqrt(np.cumsum(A * A, axis=1)[:, -1])
 
 
+def _assign_local(V, centroids):
+    """Nearest-centroid cid per row: columns in cid order, so argmin's
+    first minimum is the distributed (round-9 distance, cid) struct-min
+    whatever order the caller listed the centroids in."""
+    import numpy as np
+
+    ordered = sorted(centroids, key=lambda c: c[0])
+    C = np.array([c for _, c in ordered], dtype=np.float64)
+    cids = np.array([cid for cid, _ in ordered], dtype=np.int64)
+    return cids[np.argmin(_d2_round9(V, C), axis=1)]
+
+
 def _lloyd_local(ids, V, seed_centroids, iters: int):
     """Deterministic Lloyd rounds in numpy — same recurrence as the
     distributed loop: assignment by (round-9 distance, cid) argmin,
@@ -470,12 +493,7 @@ def _lloyd_local(ids, V, seed_centroids, iters: int):
 
     centroids = [(int(cid), [float(x) for x in cvec]) for cid, cvec in seed_centroids]
     for _ in range(iters):
-        C = np.array([c for _, c in centroids], dtype=np.float64)
-        cids = np.array([cid for cid, _ in centroids], dtype=np.int64)
-        d2 = _d2_round9(V, C)
-        # columns are in cid-ascending order, argmin takes the first
-        # minimum -> (distance, cid) struct-min ties exactly
-        assign = cids[np.argmin(d2, axis=1)]
+        assign = _assign_local(V, centroids)
         centroids = [
             (
                 int(cid),
@@ -483,10 +501,7 @@ def _lloyd_local(ids, V, seed_centroids, iters: int):
             )
             for cid in np.unique(assign)
         ]
-    C = np.array([c for _, c in centroids], dtype=np.float64)
-    cids = np.array([cid for cid, _ in centroids], dtype=np.int64)
-    assign = cids[np.argmin(_d2_round9(V, C), axis=1)]
-    return assign, centroids
+    return _assign_local(V, centroids), centroids
 
 
 def _ivf_build_local(
@@ -619,9 +634,10 @@ def _cosine_dup_pairs_local(
     """cosine_dup_pairs on a collected table: sign buckets, the same
     hot-bucket skip rule/stats/warning as ``dedup.skip_hot_buckets``,
     per-bucket (id_a < id_b by value) pairs and bit-equal raw cosines
-    (sequential accumulation). Returns None when the kept-bucket pair
-    count explodes (degenerate orthant past the cap=None guard) so the
-    caller falls back to the distributed join."""
+    (sequential accumulation). Returns None, before any stats or
+    warning, when the kept-bucket pair count passes
+    ``DRIVER_COSINE_MAX_PAIRS`` so the caller falls back to the
+    distributed join."""
     import logging
 
     import numpy as np
@@ -645,9 +661,13 @@ def _cosine_dup_pairs_local(
     buckets = np.array(["".join(row) for row in bits])
     codes, _uniq = pd.factorize(buckets)
     counts = np.bincount(codes)
-    skipped = int((counts > bucket_cap).sum()) if bucket_cap is not None else 0
+    hot = counts > bucket_cap if bucket_cap is not None else np.zeros(len(counts), bool)
+    keep = (counts >= 2) & ~hot
+    # the distributed fallback's skip_hot_buckets is then the one reporter
+    if sum(int(c) * (int(c) - 1) // 2 for c in counts[keep]) > DRIVER_COSINE_MAX_PAIRS:
+        return None
     if bucket_cap is not None:
-        hot = counts > bucket_cap
+        skipped = int(hot.sum())
         max_dropped = sum(int(c) * (int(c) - 1) // 2 for c in counts[hot])
         if stats is not None:
             stats["skipped_buckets"] = skipped
@@ -657,11 +677,6 @@ def _cosine_dup_pairs_local(
                 "%s: skipped %d hot buckets over cap=%d (up to %d candidate pairs dropped)",
                 "cosine_dup_pairs", skipped, bucket_cap, max_dropped,
             )
-        keep = (counts >= 2) & ~hot
-    else:
-        keep = counts >= 2
-    if sum(int(c) * (int(c) - 1) // 2 for c in counts[keep]) > 20_000_000:
-        return None
     order = np.argsort(codes, kind="stable")
     bc = codes[order]
     bstarts = np.flatnonzero(np.concatenate(([True], bc[1:] != bc[:-1])))

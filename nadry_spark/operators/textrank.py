@@ -32,7 +32,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nadry_spark.localrows import _local_frame, collect_bounded
+from nadry_spark.operators.pagerank import _edge_index
 from nadry_spark.spread import spread_small_scan
+
+# driver fast-path gate: (u, v) edge rows of the vocabulary graph one
+# bounded collect may bring to the driver
+DRIVER_MAX_EDGES = 5_000_000
 
 
 def _token_pairs(docs: DataFrame, stop: list[str], text_col: str) -> DataFrame:
@@ -77,13 +83,16 @@ def textrank_keywords(
     iters: int = 3,
     damping: float = 0.85,
     text_col: str = "text",
-    driver_max_edges: int | None = 5_000_000,
 ) -> DataFrame:
     """(term, score) for every token with at least one co-occurrence
     neighbour, after `iters` damped iterations.  Isolated tokens (no
     surviving adjacent partner anywhere in the corpus) have no graph
     presence and are not returned — they carry no relational evidence
-    for the keyword decision."""
+    for the keyword decision.
+
+    Driver fast path: while the edge list fits ``DRIVER_MAX_EDGES``
+    (one bounded collect decides) the iterations run as numpy
+    scatter-adds over the collected edges, summed in a fixed order."""
     stop = sorted(set(stopwords or []))
     pairs = _token_pairs(docs, stop, text_col)
 
@@ -96,48 +105,36 @@ def textrank_keywords(
         .agg(F.sum("c").alias("w_uv"))
         .localCheckpoint()
     )
-    wdeg = edges.groupBy("u").agg(F.sum("w_uv").alias("wdeg")).localCheckpoint()
-    vertices = wdeg.select(F.col("u").alias("term"))
-
     # driver fast path (pagerank precedent): the vocabulary graph is
     # orders of magnitude smaller than the corpus (distinct adjacent
     # bigrams); when it is driver-sized run the damped iterations as
-    # numpy scatter-adds over the collected (u, v, w_uv, wdeg) table —
-    # per-edge op order (divide by wdeg THEN multiply by w_uv) matches
-    # the distributed expression; output on the same 1e-9 grid.
-    if driver_max_edges is not None and edges.count() <= driver_max_edges:
+    # numpy scatter-adds over the collected (u, v, w_uv) table, wdeg
+    # being the exact integer sum of w_uv per u — per-edge op order
+    # (divide by wdeg THEN multiply by w_uv) matches the distributed
+    # expression; output on the same 1e-9 grid.
+    epdf = collect_bounded(edges, DRIVER_MAX_EDGES)
+    if epdf is not None:
         import numpy as np
-        from pyspark.sql.types import DoubleType, StructField, StructType
 
-        wpdf = wdeg.toPandas()
-        epdf = edges.toPandas()
-        terms = np.sort(wpdf["u"].to_numpy())
-        wdeg_vec = np.empty(len(terms), dtype=np.float64)
-        wdeg_vec[np.searchsorted(terms, wpdf["u"].to_numpy())] = (
-            wpdf["wdeg"].to_numpy().astype(np.float64)
-        )
-        u_idx = np.searchsorted(terms, epdf["u"].to_numpy())
-        v_idx = np.searchsorted(terms, epdf["v"].to_numpy())
-        w_uv = epdf["w_uv"].to_numpy().astype(np.float64)
+        terms = np.unique(epdf["u"].to_numpy())
+        order, u_idx, v_idx = _edge_index(terms, epdf, "u", "v")
+        w_int = epdf["w_uv"].to_numpy().astype(np.int64)[order]
+        wdeg_int = np.zeros(len(terms), dtype=np.int64)
+        np.add.at(wdeg_int, u_idx, w_int)
+        wdeg_vec = wdeg_int.astype(np.float64)
+        w_uv = w_int.astype(np.float64)
         rank = np.ones(len(terms), dtype=np.float64)
         base_f = 1.0 - damping
         for _ in range(iters):
             contrib = np.zeros(len(terms), dtype=np.float64)
             np.add.at(contrib, v_idx, (rank[u_idx] / wdeg_vec[u_idx]) * w_uv)
             rank = base_f + damping * contrib
-        spark = docs.sparkSession
-        schema = StructType(
-            [
-                StructField("term", wdeg.schema["u"].dataType, True),
-                StructField("score", DoubleType(), True),
-            ]
+        return _local_frame(
+            docs.sparkSession, edges.schema["u"].dataType,
+            [("term", terms), ("score", rank)], round9=True,
         )
-        import pandas as pd
-
-        out = spark.createDataFrame(
-            pd.DataFrame({"term": terms, "score": rank}), schema
-        )
-        return out.select("term", F.round("score", 9).alias("score"))
+    wdeg = edges.groupBy("u").agg(F.sum("w_uv").alias("wdeg")).localCheckpoint()
+    vertices = wdeg.select(F.col("u").alias("term"))
 
     base = F.lit(1.0) - F.lit(damping)
     ranks = vertices.select("term", F.lit(1.0).alias("rank"))

@@ -197,3 +197,92 @@ def test_driver_paths_fall_back_on_hostile_vectors(spark, hostile, monkeypatch, 
     assert f_bf == d_bf and len(f_bf) > 0
     assert f_lsh == d_lsh
     assert f_dup == d_dup
+
+
+def test_vector_collect_bounded_by_first_row_dimension(spark, vecs, monkeypatch):
+    """The driver collect is capped at min(DRIVER_ANN_MAX_ROWS,
+    DRIVER_ANN_MAX_CELLS // d) rows for the first row's dimension d, so
+    an over-cell table falls back without reaching the driver whole; a
+    NULL or empty first vector falls back before any collect."""
+    from nadry_spark.operators import similarity as sim
+
+    queries = vecs.where(F.col("vec_id") < 4)
+    with monkeypatch.context() as m:
+        _force_distributed(m)
+        want = _rows(sim.brute_force_topk(vecs, queries, k=5))
+
+    bounds = []
+    collect = sim.collect_bounded
+
+    def spy(df, max_rows):
+        bounds.append(max_rows)
+        return collect(df, max_rows)
+
+    monkeypatch.setattr(sim, "collect_bounded", spy)
+    monkeypatch.setattr(sim, "DRIVER_ANN_MAX_CELLS", 8 * 50)
+    assert _rows(sim.brute_force_topk(vecs, queries, k=5)) == want
+    assert bounds == [50]  # 160 8-dim rows: one 51-row collect, then fallback
+
+    rows = [tuple(r) for r in vecs.collect()]
+    for first in (None, []):
+        # parallelize keeps list order: the 1-row probe reads row 0
+        table = spark.createDataFrame(
+            [(5000, first)] + rows, "vec_id long, embedding array<double>"
+        )
+        bounds.clear()
+        assert sim._collect_vectors_local(table, "vec_id", "embedding") is None
+        assert bounds == [], first
+
+
+def test_ivf_seed_ties_follow_cid_not_position(spark, monkeypatch):
+    """Seed centroids listed in DESCENDING cid order, with vectors
+    equidistant from both: the driver Lloyd assignment takes the
+    smaller cid, as the distributed (distance, cid) struct-min does."""
+    from nadry_spark.operators import similarity as sim
+
+    vectors = spark.createDataFrame(
+        [(0, [0.0, 1.0]), (1, [2.0, 0.5]), (2, [-2.0, 0.5]), (3, [0.0, -1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    seeds = [(1, [1.0, 0.0]), (0, [-1.0, 0.0])]
+
+    def run():
+        out = []
+        for iters in (0, 1):
+            assigned, cents = sim.ivf_build(
+                vectors, n_centroids=2, iters=iters, seed_centroids=seeds
+            )
+            out.append((cents, _rows(assigned.select("vec_id", "cid"))))
+        return out
+
+    fast = run()
+    _force_distributed(monkeypatch)
+    assert fast == run()
+
+
+def test_cosine_dup_pairs_bail_out_reports_once(spark, vecs, monkeypatch, caplog):
+    """A driver bail-out past DRIVER_COSINE_MAX_PAIRS leaves the stats
+    and the hot-bucket warning to the distributed fallback: one
+    warning, and the distributed run's stats."""
+    import logging
+
+    from nadry_spark.operators import similarity as sim
+
+    def run():
+        stats: dict = {}
+        caplog.clear()
+        with caplog.at_level(logging.WARNING, logger="nadry_spark.similarity"):
+            out = _rows(
+                sim.cosine_dup_pairs(
+                    vecs, threshold=0.9, dims=[0, 1, 2], bucket_cap=12, stats=stats
+                )
+            )
+        warned = [r for r in caplog.records if "hot buckets" in r.getMessage()]
+        return out, stats, len(warned)
+
+    with monkeypatch.context() as m:
+        _force_distributed(m)
+        want = run()
+    assert want[1]["skipped_buckets"] > 0 and want[2] == 1
+    monkeypatch.setattr(sim, "DRIVER_COSINE_MAX_PAIRS", 0)
+    assert run() == want

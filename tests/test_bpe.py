@@ -62,22 +62,6 @@ def test_bpe_merges_match_reference(spark, texts):
     assert got == want
 
 
-def test_bpe_merges_local_identical(spark, texts):
-    """The driver-loop fast path (one Spark job) must learn the exact
-    table of the fully-distributed formulation AND the independent
-    reference — counts, tie-breaks, and non-overlapping application."""
-    from nadry_spark.operators.bpe import bpe_merges, bpe_merges_local
-
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    want = [tuple(r) for r in bpe_merges(docs, n_merges=6).orderBy("step").collect()]
-    got = [tuple(r) for r in bpe_merges_local(docs, n_merges=6).orderBy("step").collect()]
-    assert got == want
-    ref, _ = _ref_bpe(texts, 6)
-    assert got == [(s, l, r, c) for s, l, r, c in ref]
-
-
 def test_bpe_overlap_merge_semantics(spark):
     """'aaaa' -> one (a,a) merge must produce 'aa aa', never 'aaa a'
     or an overlapping double-merge."""

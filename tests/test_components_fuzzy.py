@@ -70,7 +70,16 @@ def test_connected_components_vs_union_find(spark):
     assert any(partial[v] != want[v] for v in want)  # chain of 8 unfinished
 
 
-def test_cc_driver_fast_path_identical_to_distributed(spark):
+def _distributed(monkeypatch, fn):
+    """``fn()`` with the driver fast path gated off."""
+    from nadry_spark.operators import components
+
+    with monkeypatch.context() as m:
+        m.setattr(components, "DRIVER_MAX_SYM_EDGES", 0)
+        return fn()
+
+
+def test_cc_driver_fast_path_identical_to_distributed(spark, monkeypatch):
     """The driver-sized numpy fast path must be row-identical to the
     distributed propagation loop for the SAME round count — including
     unconverged fixed-iteration states (the oracle-relied property)
@@ -87,12 +96,10 @@ def test_cc_driver_fast_path_identical_to_distributed(spark):
             (r["v"], r["component"])
             for r in connected_components(df, iterations=iters).collect()
         )
-        dist = sorted(
+        dist = _distributed(monkeypatch, lambda: sorted(
             (r["v"], r["component"])
-            for r in connected_components(
-                df, iterations=iters, driver_max_edges=None
-            ).collect()
-        )
+            for r in connected_components(df, iterations=iters).collect()
+        ))
         assert fast == dist
 
     sdf = spark.createDataFrame(
@@ -102,16 +109,14 @@ def test_cc_driver_fast_path_identical_to_distributed(spark):
         (r["v"], r["component"])
         for r in connected_components(sdf, iterations=4).collect()
     )
-    dist = sorted(
+    dist = _distributed(monkeypatch, lambda: sorted(
         (r["v"], r["component"])
-        for r in connected_components(
-            sdf, iterations=4, driver_max_edges=None
-        ).collect()
-    )
+        for r in connected_components(sdf, iterations=4).collect()
+    ))
     assert fast == dist
 
 
-def test_cc_with_sizes_fast_path_identical_to_distributed(spark):
+def test_cc_with_sizes_fast_path_identical_to_distributed(spark, monkeypatch):
     """connected_components_with_sizes: the driver fast path's numpy
     size computation must match the distributed groupBy+join
     composition row-for-row — including duplicate and self-loop edges
@@ -132,11 +137,11 @@ def test_cc_with_sizes_fast_path_identical_to_distributed(spark):
                 df, iterations=iters
             ).collect()
         )
-        dist = sorted(
+        dist = _distributed(monkeypatch, lambda: sorted(
             tuple(r) for r in connected_components_with_sizes(
-                df, iterations=iters, driver_max_edges=None
+                df, iterations=iters
             ).collect()
-        )
+        ))
         assert fast == dist
 
 

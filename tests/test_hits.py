@@ -51,11 +51,12 @@ def test_hits_matches_reference(spark):
     assert got["hub1"][1] > got["hub2"][1] > 0.0
 
 
-def test_hits_driver_fast_path_matches_distributed(spark):
+def test_hits_driver_fast_path_matches_distributed(spark, monkeypatch):
     import random
 
     import pytest as _pt
 
+    from nadry_spark.operators import hits as hits_mod
     from nadry_spark.operators.hits import hits
 
     rng = random.Random(11)
@@ -65,9 +66,10 @@ def test_hits_driver_fast_path_matches_distributed(spark):
     ]
     df = spark.createDataFrame(docs, "url string, links array<string>")
     fast = {r["url"]: (r["authority"], r["hub"]) for r in hits(df, iters=3).collect()}
+    monkeypatch.setattr(hits_mod, "DRIVER_MAX_EDGES", 0)
     dist = {
         r["url"]: (r["authority"], r["hub"])
-        for r in hits(df, iters=3, driver_max_edges=None).collect()
+        for r in hits(df, iters=3).collect()
     }
     assert set(fast) == set(dist)
     for u in dist:

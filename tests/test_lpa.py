@@ -57,11 +57,12 @@ def test_lpa_matches_reference(spark):
     assert got2["b2"] != got2["a2"] != got2["c2"]
 
 
-def test_lpa_driver_fast_path_identical_to_distributed(spark):
+def test_lpa_driver_fast_path_identical_to_distributed(spark, monkeypatch):
     """LPA is pure integer counting + (cnt desc, label asc) argmax —
     the driver fast path must be BIT-identical to the distributed loop."""
     import random
 
+    from nadry_spark.operators import components
     from nadry_spark.operators.components import label_propagation
 
     rng = random.Random(3)
@@ -73,10 +74,10 @@ def test_lpa_driver_fast_path_identical_to_distributed(spark):
             (r["v"], r["community"])
             for r in label_propagation(df, iterations=iters).collect()
         )
-        dist = sorted(
-            (r["v"], r["community"])
-            for r in label_propagation(
-                df, iterations=iters, driver_max_edges=None
-            ).collect()
-        )
+        with monkeypatch.context() as m:
+            m.setattr(components, "DRIVER_MAX_SYM_EDGES", 0)
+            dist = sorted(
+                (r["v"], r["community"])
+                for r in label_propagation(df, iterations=iters).collect()
+            )
         assert fast == dist

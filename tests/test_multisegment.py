@@ -83,8 +83,9 @@ def _canon(res):
 
 def test_multi_segment_single_path_is_identity(spark, seg):
     """A one-member family answers like its segment on every serving
-    operator, and a segment is itself a family of one: no tombstones,
-    zero df corrections."""
+    operator (BMW block stats included), and a segment is itself a
+    family of one: no tombstones, zero df corrections."""
+    from nadry_spark.operators.bm25 import bmw_block_stats
     from nadry_spark.operators.boolquery import bool_search
     from nadry_spark.operators.fieldsearch import field_search
     from nadry_spark.operators.spans import span_near_search
@@ -121,6 +122,29 @@ def test_multi_segment_single_path_is_identity(spark, seg):
         want = case(idx).collect()
         assert want, ("vacuous case", i)
         assert case(msi).collect() == want, i
+
+    for q in ["news report update", "news 2024"]:
+        want = bmw_block_stats(idx, q, k=10)
+        assert want["n_blocks"] > 0, ("vacuous case", q)
+        assert bmw_block_stats(msi, q, k=10) == want, q
+
+
+def test_bmw_block_stats_over_tombstoned_family(spark, halves):
+    """bmw_block_stats scores every member of a family, a tombstone
+    included: its block total is the family's term_stats block sum."""
+    from nadry_spark.functions.tokenizer import tokenize
+    from nadry_spark.operators.bm25 import bmw_block_stats
+    from nadry_spark.sources.segments import MultiSegmentIndex
+
+    msi = MultiSegmentIndex(spark, halves)
+    msi.excluded = [{0}, set()]
+    msi._df_corr = {}
+    for q in ["news report update", "news 2024"]:
+        stats = msi.term_stats(tokenize(q))
+        assert stats, ("vacuous case", q)
+        got = bmw_block_stats(msi, q, k=10)
+        assert got["n_blocks"] == sum(st["n_blocks"] for st in stats.values()), q
+        assert 0 <= got["n_decoded"] <= got["n_blocks"], q
 
 
 def test_query_engine_over_multi_segment(spark, seg, halves):

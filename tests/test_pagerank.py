@@ -129,7 +129,7 @@ def test_trustrank_matches_python_reference(spark):
     assert total <= 1.0 + 1e-9  # mass only leaks (dangling), never appears
 
 
-def test_driver_fast_path_matches_distributed(spark):
+def test_driver_fast_path_matches_distributed(spark, monkeypatch):
     """The numpy fast path must match the distributed broadcast-join
     loop on the same graph — fixed-iteration and converged modes.
     (Not bit-compared: the two sum contributions in different orders,
@@ -137,6 +137,7 @@ def test_driver_fast_path_matches_distributed(spark):
     is far below the 1e-9 output grid.)"""
     import random
 
+    from nadry_spark.operators import pagerank as pr
     from nadry_spark.operators.pagerank import pagerank
 
     rng = random.Random(5)
@@ -149,18 +150,47 @@ def test_driver_fast_path_matches_distributed(spark):
         fast = {
             r["url"]: r["popularity_score"] for r in pagerank(df, **kwargs).collect()
         }
-        dist = {
-            r["url"]: r["popularity_score"]
-            for r in pagerank(df, driver_max_edges=None, **kwargs).collect()
-        }
+        with monkeypatch.context() as m:
+            m.setattr(pr, "DRIVER_MAX_EDGES", 0)
+            dist = {
+                r["url"]: r["popularity_score"]
+                for r in pagerank(df, **kwargs).collect()
+            }
         assert set(fast) == set(dist)
         for u in dist:
             assert fast[u] == pytest.approx(dist[u], abs=1e-12), u
 
 
-def test_trustrank_driver_fast_path_matches_distributed(spark):
+def test_driver_path_bit_identical_across_partitionings(spark):
+    """The driver path sums each page's contributions in a fixed
+    (dst, src) order, so its scores are BIT-identical whatever order
+    the partitioning collects the edges in."""
     import random
 
+    from nadry_spark.operators.pagerank import pagerank
+
+    rng = random.Random(13)
+    docs = [
+        (f"u{i}", list({f"u{rng.randrange(300)}" for _ in range(rng.randrange(1, 8))}))
+        for i in range(300)
+    ]
+    df = spark.createDataFrame(docs, "url string, links array<string>")
+
+    def scores(n):
+        return {
+            r["url"]: r["popularity_score"]
+            for r in pagerank(df.repartition(n), tol=0.0, max_iter=20).collect()
+        }
+
+    one = scores(1)
+    assert len(one) > 200
+    assert scores(7) == one
+
+
+def test_trustrank_driver_fast_path_matches_distributed(spark, monkeypatch):
+    import random
+
+    from nadry_spark.operators import pagerank as pr
     from nadry_spark.operators.pagerank import trustrank
 
     rng = random.Random(9)
@@ -171,10 +201,8 @@ def test_trustrank_driver_fast_path_matches_distributed(spark):
     df = spark.createDataFrame(docs, "url string, links array<string>")
     seeds = spark.createDataFrame([("u0",), ("u3",)], "url string")
     fast = {r["url"]: r["trust_score"] for r in trustrank(df, seeds).collect()}
-    dist = {
-        r["url"]: r["trust_score"]
-        for r in trustrank(df, seeds, driver_max_edges=None).collect()
-    }
+    monkeypatch.setattr(pr, "DRIVER_MAX_EDGES", 0)
+    dist = {r["url"]: r["trust_score"] for r in trustrank(df, seeds).collect()}
     assert set(fast) == set(dist)
     for u in dist:
         assert fast[u] == pytest.approx(dist[u], abs=1e-9), u

@@ -237,13 +237,14 @@ def test_prefix_filtered_jaccard_matches_naive(spark):
     sh.unpersist()
 
 
-def test_jaccard_driver_fast_path_identical_to_distributed(spark):
+def test_jaccard_driver_fast_path_identical_to_distributed(spark, monkeypatch):
     """ngram_jaccard_dups' driver fast path (numpy co-occurrence
     verify) must be row-identical — jaccard doubles BIT-equal — to the
     distributed PPJoin path, for long and string ids; the pair-bound
     gate must fall back to the distributed join rather than fail."""
     import random
 
+    from nadry_spark.operators import dedup as dedup_mod
     from nadry_spark.operators.dedup import ngram_jaccard_dups
 
     rng = random.Random(5)
@@ -269,19 +270,18 @@ def test_jaccard_driver_fast_path_identical_to_distributed(spark):
                     frame, "id", "text", shingle_n=3, threshold=t
                 ).collect()
             )
-            dist = sorted(
-                (r["id_a"], r["id_b"], r["jaccard"])
-                for r in ngram_jaccard_dups(
-                    frame, "id", "text", shingle_n=3, threshold=t,
-                    driver_max_occ_rows=None,
-                ).collect()
-            )
+            with monkeypatch.context() as m:
+                m.setattr(dedup_mod, "DRIVER_JACCARD_MAX_OCC_ROWS", 0)
+                dist = sorted(
+                    (r["id_a"], r["id_b"], r["jaccard"])
+                    for r in ngram_jaccard_dups(
+                        frame, "id", "text", shingle_n=3, threshold=t
+                    ).collect()
+                )
             assert fast == dist, f"threshold={t}"
 
     # degenerate input: every doc identical -> pair bound explodes;
     # the fallback must still return the correct (complete) pair set
-    from nadry_spark.operators import dedup as dedup_mod
-
     boiler = spark.createDataFrame(
         [(i, "a b c d e f g h") for i in range(20)], "id long, text string"
     )

@@ -66,9 +66,10 @@ def test_textrank_isolated_corpus_empty(spark):
     assert textrank_keywords(docs, stopwords=[], iters=2).count() == 0
 
 
-def test_textrank_driver_fast_path_matches_distributed(spark):
+def test_textrank_driver_fast_path_matches_distributed(spark, monkeypatch):
     import pytest as _pt
 
+    from nadry_spark.operators import textrank as tr
     from nadry_spark.operators.textrank import textrank_keywords
 
     docs = spark.createDataFrame(
@@ -80,10 +81,8 @@ def test_textrank_driver_fast_path_matches_distributed(spark):
         "doc_id long, text string",
     )
     fast = {r["term"]: r["score"] for r in textrank_keywords(docs, iters=3).collect()}
-    dist = {
-        r["term"]: r["score"]
-        for r in textrank_keywords(docs, iters=3, driver_max_edges=None).collect()
-    }
+    monkeypatch.setattr(tr, "DRIVER_MAX_EDGES", 0)
+    dist = {r["term"]: r["score"] for r in textrank_keywords(docs, iters=3).collect()}
     assert set(fast) == set(dist) and fast
     for t in dist:
         assert fast[t] == _pt.approx(dist[t], abs=1e-9), t
