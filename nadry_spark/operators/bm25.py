@@ -1,4 +1,4 @@
-"""BM25 top-k over compressed segments: one scoring core, distributed
+"""BM25 top-k over compressed segments: one scoring core, two executors,
 block-max WAND.
 
 north_star: "multi-term conjunctive/disjunctive top-k via posting-list
@@ -22,19 +22,31 @@ The core:
    * ``bmw`` — document-at-a-time block-max WAND with a bounded
      min-heap, Q=1 only; skips whole blocks without decoding when the
      block maxima can't beat the heap threshold (wins for small k and
-     long, selective lists);
-3. finishes: if ``warm()`` pinned every segment's docmap, the
-   ``(query_id, _seg, doc_no, score)`` frame collects in ONE job and
-   merges and enriches on the driver; otherwise a distributed
-   per-query top-k and a broadcast docmap join.
+     long, selective lists).
+   The same per-shard scorer runs under one of two executors
+   (``_per_shard``): when ``warm()`` pinned every family member
+   (``SegmentIndex.pinned``), a driver loop calls it over the pinned
+   blocks of the shards that hold a query term; otherwise Spark calls
+   it under ``applyInPandas``. A family never mixes the two;
+3. finishes: scored on the driver, the per-shard top-ks merge and
+   enrich from the pinned docmaps on the driver, and the rows come
+   back as a LocalRelation (``local_rows_df``) — no Spark job at all;
+   with only the docmaps pinned, the ``(query_id, _seg, doc_no,
+   score)`` frame collects in ONE job into the same driver merge;
+   otherwise a distributed per-query top-k and a broadcast docmap join.
 
 The tie order comes from the entry point, not the handle: ``bm25_topk``
 and ``bm25_queryset_topk`` break score ties on ``doc_no`` ascending and
 return the ``doc_no`` column; ``bm25_topk_multi`` and
 ``bm25_queryset_topk_multi`` break them on ``doc_id`` ascending. The queryset
 entry points are TAAT-only and always return the lazy distributed
-frame: jobs/batch_rank.py writes it out, and its plan shows the
-term-pruned scan.
+frame, pinned or not: jobs/batch_rank.py writes it out, and its plan
+shows the term-pruned scan.
+
+TAAT stays the Q=1 scorer of the serving path (``QueryEngine``): on
+the serve benchmark's queries BMW skips no block on the driver (it
+decodes every block TAAT decodes) and scores ~2.8x slower, so it
+buys nothing there (measured in ROADMAP direction 1).
 
 idf is the Lucene/Robertson BM25+ form ln(1 + (N - df + 0.5)/(df +
 0.5)) — always positive, monotone in rarity.
@@ -363,10 +375,26 @@ def _resolve(index, queries: dict[int, list[str]], conjunctive: bool):
     return q_ids, q_terms, idf_map
 
 
+def _per_shard(seg, terms: list[str], scorer, schema: str, driver: bool):
+    """``scorer`` over each of ``seg``'s shards holding a block of
+    ``terms``: called in a driver loop over the pinned blocks (a pandas
+    frame back) or under applyInPandas (a lazy Spark frame)."""
+    if driver:
+        outs = [scorer((shard,), blocks) for shard, blocks in seg.pinned_blocks(terms)]
+        cols = [c.split()[0] for c in schema.split(",")]
+        return pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(columns=cols)
+    return (
+        seg.blocks.where(F.col("term").isin(terms))
+        .groupBy("shard")
+        .applyInPandas(scorer, schema)
+    )
+
+
 def _score(family, meta: dict, q_ids: list[int], q_terms: list[list[str]],
            idf_map: dict[str, float], k: int, mode: str,
-           conjunctive: bool) -> list[DataFrame]:
-    """Per segment, the (query_id, doc_no, score) per-shard top-k frame."""
+           conjunctive: bool, driver: bool) -> list:
+    """Per segment, the (query_id, doc_no, score) per-shard top-k frame:
+    pandas on the ``driver``, else a lazy Spark frame."""
     terms = sorted(idf_map)
     frames = []
     for seg, excl in family:
@@ -377,19 +405,19 @@ def _score(family, meta: dict, q_ids: list[int], q_terms: list[list[str]],
             idf_map=idf_map, conjunctive=conjunctive,
             exclude=frozenset(int(x) for x in excl),
         )
-        shards = seg.blocks.where(F.col("term").isin(terms)).groupBy("shard")
         if mode == "taat":
             scorer = _shard_taat(shard_size=seg.meta["shard_size"],
                                  q_ids=q_ids, q_terms=q_terms, **args)
-            frames.append(shards.applyInPandas(scorer, QSET_SCHEMA))
+            frames.append(_per_shard(seg, terms, scorer, QSET_SCHEMA, driver))
         else:
             scorer = _shard_bmw(
                 n_query_terms=len(q_terms[0]),
                 bound_inflation=max(1.0, meta["avgdl"] / seg.meta["avgdl"]),
                 **args,
             )
+            out = _per_shard(seg, terms, scorer, TOPK_SCHEMA, driver)
             frames.append(
-                shards.applyInPandas(scorer, TOPK_SCHEMA).select(
+                out.assign(query_id=q_ids[0]) if driver else out.select(
                     F.lit(q_ids[0]).cast("long").alias("query_id"), "doc_no", "score"
                 )
             )
@@ -416,23 +444,35 @@ def _topk(index, queries: dict[int, list[str]], k: int, mode: str,
     q_ids, q_terms, idf_map = _resolve(index, queries, conjunctive)
     if not q_ids:
         return empty_df(spark, ddl)
-    frames = _score(family, index.meta, q_ids, q_terms, idf_map, k, mode, conjunctive)
+    # a family whose every member warm() pinned scores on the driver,
+    # else under applyInPandas; never a mix of the two
+    driver = not lazy and all(seg.pinned for seg, _ in family)
+    frames = _score(family, index.meta, q_ids, q_terms, idf_map, k, mode, conjunctive, driver)
 
-    if not lazy and all(s._docmap_dict is not None for s, _ in family):
-        # serving fast path (docmaps pinned in the driver at warm()):
-        # ONE Spark job collects the per-shard top-ks (<= n_segments *
-        # n_shards * k rows per query), then the k-way merge and the
-        # enrichment run driver-side — the join formulation costs a
-        # broadcast materialization job per segment per query. The
-        # rows come back as a LocalRelation (local_rows_df), so the
-        # caller's collect() runs no second job.
+    if driver:
+        rows = [
+            {"query_id": q, "_seg": i, "doc_no": d, "score": score}
+            for i, f in enumerate(frames)
+            for q, d, score in zip(f["query_id"].tolist(), f["doc_no"].tolist(),
+                                   f["score"].tolist())
+        ]
+    elif not lazy and all(s._docmap_dict is not None for s, _ in family):
+        # docmaps pinned in the driver at warm() but not the blocks: ONE
+        # Spark job collects the per-shard top-ks (<= n_segments *
+        # n_shards * k rows per query) for the driver merge — the join
+        # formulation costs a broadcast materialization job per segment
+        # per query
         merged = reduce(DataFrame.unionByName,
                         [f.withColumn("_seg", F.lit(i)) for i, f in enumerate(frames)])
-        rows = []
-        for r in merged.collect():
-            row = r.asDict()
-            row["doc_id"], row["url"] = family[row["_seg"]][0]._docmap_dict[row["doc_no"]]
-            rows.append(row)
+        rows = [r.asDict() for r in merged.collect()]
+    else:
+        rows = None
+    if rows is not None:
+        # the driver merge and enrichment from the pinned docmaps; the
+        # rows go back as a LocalRelation (local_rows_df), so the
+        # caller's collect() runs no job
+        for row in rows:
+            row["doc_id"], row["url"], _ = family[row["_seg"]][0]._docmap_dict[row["doc_no"]]
         rows.sort(key=lambda x: (x["query_id"], -x["score"], x[tie]))
         top = [
             tuple(row[c] for c in cols)
@@ -546,10 +586,10 @@ def bmw_block_stats(
     if not q_ids:
         return {"n_blocks": 0, "n_decoded": 0, "skip_rate": 0.0}
     meta = index.meta
+    driver = all(seg.pinned for seg in index.segments)
     frames = [
-        seg.blocks.where(F.col("term").isin(q_terms[0]))
-        .groupBy("shard")
-        .applyInPandas(
+        _per_shard(
+            seg, q_terms[0],
             _shard_bmw(
                 k=k, k1=meta["k1"], b=meta["b"], avgdl=meta["avgdl"],
                 idf_map=idf_map, n_query_terms=len(q_terms[0]),
@@ -557,11 +597,14 @@ def bmw_block_stats(
                 exclude=frozenset(int(x) for x in excl),
                 bound_inflation=max(1.0, meta["avgdl"] / seg.meta["avgdl"]),
             ),
-            BMW_STATS_SCHEMA,
+            BMW_STATS_SCHEMA, driver,
         )
         for seg, excl in zip(index.segments, index.excluded)
     ]
-    rows = reduce(DataFrame.unionByName, frames).collect()
+    rows = (
+        [r for f in frames for r in f.to_dict("records")] if driver
+        else reduce(DataFrame.unionByName, frames).collect()
+    )
     total = sum(r["n_blocks"] for r in rows)
     decoded = sum(r["n_decoded"] for r in rows)
     return {

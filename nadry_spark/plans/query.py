@@ -13,8 +13,13 @@ Reproduces api/SearchController.java:53-111 + SearchWrapper:
    computed distributed: totalResults via count(), only the requested
    page's rows cross the driver boundary (offset/limit), never the
    full ranked candidate set;
-5. late enrichment of the current page only: title/snippet via the
-   F15 pandas UDF + content join (J4, :500-557).
+5. late enrichment of the current page only (J4 + F15, :500-557):
+   over a family whose every member warm() pinned, title and content
+   come from the driver pins and the snippet is
+   ``find_first_context_match`` called directly, so a warmed bm25
+   search runs no Spark job; otherwise the content join and the
+   ``snippet_udf`` that wraps the same function. Tombstoned re-crawls
+   are excluded on both paths.
 
 The result envelope mirrors the reference JSON
 {success, data, totalPages, currentPage, totalResults, tokens,
@@ -33,7 +38,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nadry_spark.functions.snippets import snippet_udf
+from nadry_spark.functions.snippets import find_first_context_match, snippet_udf
 from nadry_spark.localrows import local_rows_df
 from nadry_spark.functions.tokenizer import tokenize
 from nadry_spark.operators.phrase import (
@@ -257,29 +262,35 @@ class QueryEngine:
             envelope["didYouMean"] = " ".join(corrected)
 
     def _enrich(self, page_rows, tokens):
-        """J4 + F15: join content for the k paged docs only, snippet UDF."""
+        """J4 + F15 for the k paged docs only: title and snippet from the
+        driver pins of a pinned family (no job), else the content join
+        and the snippet UDF."""
         if not page_rows:
             return []
         idx = self.index
-        spark = idx.spark
         by_doc_id = {r["doc_id"]: self._result_row(r) for r in page_rows}
-        ids_df = local_rows_df(spark, "doc_id string", [(d,) for d in by_doc_id])
-        detail = (
-            idx.content_for(F.broadcast(ids_df))
-            .select(
-                "doc_id", "title",
-                snippet_udf(tokens)(F.col("content")).alias("description"),
-            )
-            .collect()
-        )
-        details = {r["doc_id"]: r for r in detail}
+        pinned = idx.pinned_content(list(by_doc_id))
+        if pinned is not None:
+            details = {
+                doc_id: (title, find_first_context_match(content, tokens))
+                for doc_id, (title, content) in pinned.items()
+            }
+        else:
+            ids_df = local_rows_df(idx.spark, "doc_id string", [(d,) for d in by_doc_id])
+            details = {
+                r["doc_id"]: (r["title"], r["description"])
+                for r in idx.content_for(F.broadcast(ids_df))
+                .select(
+                    "doc_id", "title",
+                    snippet_udf(tokens)(F.col("content")).alias("description"),
+                )
+                .collect()
+            }
         out = []
         for r in page_rows:
             row = by_doc_id[r["doc_id"]]
-            d = details.get(r["doc_id"])
-            row["title"] = d["title"] if d is not None else "No Title Available"
-            row["description"] = (
-                d["description"] if d is not None else "Details not available."
+            row["title"], row["description"] = details.get(
+                r["doc_id"], ("No Title Available", "Details not available.")
             )
             out.append(row)
         return out

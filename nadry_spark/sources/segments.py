@@ -35,10 +35,11 @@ meta.json writers, so the two produce the same layout.
 One serving shape: a ``SegmentIndex`` is a family of one (``segments``
 is ``[self]``, ``excluded`` is ``[set()]``) and a ``MultiSegmentIndex``
 is the incremental family. The family methods — ``_live``,
-``df_corrections``, ``candidates_for``, ``doc_meta_df`` and
-``content_for`` — are written once, on their shared base, and every
-serving operator loops over ``index.segments`` instead of testing the
-handle type.
+``df_corrections``, ``candidates_for``, ``doc_meta_df``,
+``content_for`` and ``pinned_content`` — are written once, on their
+shared base, and every serving operator loops over ``index.segments``
+instead of testing the handle type. A family whose every member is
+``pinned`` (see ``SegmentIndex.warm``) is served on the driver.
 
 Design decisions (scale rationale):
 
@@ -74,10 +75,11 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nadry_spark.operators.codecs import bm25_tfnorm, encode_posting_block
+from nadry_spark.operators.codecs import bm25_tfnorm, delta_decode, encode_posting_block
 
 DEFAULT_BLOCK_SIZE = 128
 DEFAULT_K1 = 1.2
@@ -816,30 +818,43 @@ class _Family:
         """Per-term count of TOMBSTONED docs containing the term —
         subtract from summed df for live-exact idf. Tombstone sets are
         immutable for this handle's lifetime, so results are cached
-        per term; uncached terms are probed in ONE batched job across
-        all members with exclusions (not one collect per member per
-        query — this sits on the hot serving path). A family without
-        tombstones runs no job."""
+        per term; uncached terms are counted in ONE pass over all
+        members with exclusions: on the driver over the pinned blocks
+        when every member is pinned, else ONE batched Spark job (not
+        one collect per member per query — this sits on the hot
+        serving path). A family without tombstones counts nothing."""
         missing = [t for t in set(terms) if t not in self._df_corr]
         if missing and any(self.excluded):
-            probe = reduce(DataFrame.unionByName, [
-                seg.decoded_tf(missing).where(F.col("doc_no").isin([int(x) for x in excl]))
-                for seg, excl in zip(self.segments, self.excluded)
-                if excl
-            ])
-            # (term, doc_no) is unique WITHIN a segment's decoded_tf
-            # (postings merge fields before block encoding and a doc
-            # lives in exactly one shard), but per-segment doc_no
-            # spaces all start at 0 — distinct-by-doc_no across the
-            # union would collapse tombstoned docs from DIFFERENT
-            # segments that happen to share a doc_no. Plain count('*')
-            # counts each (segment, term, doc) probe row exactly once.
-            counts = {
-                r["term"]: int(r["c"])
-                for r in probe.groupBy("term")
-                .agg(F.count("*").alias("c"))
-                .collect()
-            }
+            if all(s.pinned for s in self.segments):
+                counts = dict.fromkeys(missing, 0)
+                for seg, excl in zip(self.segments, self.excluded):
+                    if not excl:
+                        continue
+                    dead = np.fromiter(excl, dtype=np.int64, count=len(excl))
+                    for _, blocks in seg.pinned_blocks(missing):
+                        for term, docs_bin in zip(blocks["term"], blocks["docs_bin"]):
+                            doc_nos = delta_decode(docs_bin).astype(np.int64)
+                            counts[term] += int(np.isin(doc_nos, dead).sum())
+            else:
+                probe = reduce(DataFrame.unionByName, [
+                    seg.decoded_tf(missing).where(F.col("doc_no").isin([int(x) for x in excl]))
+                    for seg, excl in zip(self.segments, self.excluded)
+                    if excl
+                ])
+                # (term, doc_no) is unique WITHIN a segment's decoded_tf
+                # (postings merge fields before block encoding and a doc
+                # lives in exactly one shard), but per-segment doc_no
+                # spaces all start at 0 — distinct-by-doc_no across the
+                # union would collapse tombstoned docs from DIFFERENT
+                # segments that happen to share a doc_no. Plain
+                # count('*') counts each (segment, term, doc) probe row
+                # exactly once.
+                counts = {
+                    r["term"]: int(r["c"])
+                    for r in probe.groupBy("term")
+                    .agg(F.count("*").alias("c"))
+                    .collect()
+                }
             self._df_corr.update({t: counts.get(t, 0) for t in missing})
         return {t: self._df_corr.get(t, 0) for t in set(terms)}
 
@@ -869,21 +884,42 @@ class _Family:
             for i, s in enumerate(self.segments)
         ])
 
+    def pinned_content(self, doc_ids) -> dict | None:
+        """``content_for`` on the driver: {doc_id: (title, content)} for
+        the live copies of ``doc_ids``, read from the warm() pins, or
+        None unless every member is pinned."""
+        if not all(s.pinned for s in self.segments):
+            return None
+        out = {}
+        for s, excl in zip(self.segments, self.excluded):
+            for doc_id in doc_ids:
+                doc_no = s._doc_nos.get(doc_id)
+                if doc_no is not None and doc_no not in excl and doc_no in s._content:
+                    out[doc_id] = (s._docmap_dict[doc_no][2], s._content[doc_no])
+        return out
+
 
 class SegmentIndex(_Family):
     """Handle over a built segment directory — the serving family of
     one: ``segments`` is ``[self]`` and ``excluded`` is ``[set()]``."""
 
     # driver-side pin gates for warm(): the term dictionary and the
-    # doc_no->(doc_id, url) map are pinned in DRIVER memory while they
-    # fit (a real serving deployment holds the dictionary in RAM) so a
-    # query costs a dict probe instead of a Spark job; past the gates
-    # serving falls back to the cached-DataFrame jobs unchanged.
+    # doc_no->(doc_id, url, title) map are pinned in DRIVER memory
+    # while they fit (a real serving deployment holds the dictionary in
+    # RAM) so a query costs a dict probe instead of a Spark job; past
+    # the gates serving falls back to the cached-DataFrame jobs
+    # unchanged.
     TERMS_DICT_MAX = 5_000_000
     DOCMAP_DICT_MAX = 1_000_000
     # serving-tier RAM budget for pinning the positions store (see
     # warm()); deliberately a byte capacity, not a core/corpus tune
     POSITIONS_CACHE_MAX_BYTES = 4 << 30
+    # driver RAM budget for serving the segment without Spark: while
+    # its on-disk postings + docs_content bytes fit (and the docmap is
+    # pinned), warm() pins the blocks per shard and the doc_no ->
+    # content map in the driver. A byte capacity read from file sizes
+    # before any table is read, at call time (tests zero it).
+    DRIVER_PIN_MAX_BYTES = 256 << 20
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -900,6 +936,12 @@ class SegmentIndex(_Family):
         self._terms_dict: dict | None = None
         self._docmap_dict: dict | None = None
         self._df_corr: dict[str, int] = {}  # df_corrections cache
+        # driver serving pins (warm(), under DRIVER_PIN_MAX_BYTES): per
+        # shard (shard, blocks sorted by term, their term column), the
+        # doc_no -> content map and the doc_id -> doc_no map
+        self._shards: list[tuple[int, pd.DataFrame, np.ndarray]] | None = None
+        self._content: dict[int, str] | None = None
+        self._doc_nos: dict[str, int] | None = None
 
     @property
     def segments(self) -> list["SegmentIndex"]:
@@ -912,8 +954,16 @@ class SegmentIndex(_Family):
     def warm(self) -> "SegmentIndex":
         """Pin the dictionary, blocks and docmap in executor memory —
         what a serving deployment does for query latency — and, while
-        they fit the driver gates above, the term dictionary and docmap
-        in driver memory too. Returns self."""
+        they fit the driver gates above, the term dictionary and the
+        docmap (doc_id, url, title) in driver memory too. While the
+        docmap is pinned and the on-disk postings + docs_content fit
+        ``DRIVER_PIN_MAX_BYTES``, the posting blocks (per shard, sorted
+        by term) and the doc_no -> content map are read once with
+        pyarrow and pinned in the driver as well: the segment is then
+        ``pinned``, and a BM25 search over a family of pinned segments
+        scores and enriches on the driver without a Spark job. The
+        Spark caches stay either way — the phrase path, the lazy
+        queryset path and ``decoded_tf`` read them. Returns self."""
         counts: dict[str, int] = {}
         names = ["terms", "blocks", "docmap"]
         # the positions store is the largest segment table — pin it
@@ -921,13 +971,7 @@ class SegmentIndex(_Family):
         # a capacity gate, not a local-core tune); past the gate the
         # phrase/field paths keep their term-pruned parquet scans,
         # which is the 100x shape (position stores live on SSD there)
-        pos_dir = os.path.join(self.path, "positions")
-        pos_bytes = sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, files in os.walk(pos_dir)
-            for f in files
-        )
-        if pos_bytes <= self.POSITIONS_CACHE_MAX_BYTES:
+        if _dir_bytes(os.path.join(self.path, "positions")) <= self.POSITIONS_CACHE_MAX_BYTES:
             names.append("positions")
         for name in names:
             df = getattr(self, name)
@@ -955,12 +999,57 @@ class SegmentIndex(_Family):
             }
         if counts["docmap"] <= self.DOCMAP_DICT_MAX:
             self._docmap_dict = {
-                r["doc_no"]: (r["doc_id"], r["url"])
+                r["doc_no"]: (r["doc_id"], r["url"], r["title"])
                 for r in self._cached["docmap"]
-                .select("doc_no", "doc_id", "url")
+                .select("doc_no", "doc_id", "url", "title")
                 .collect()
             }
+            pin_bytes = sum(
+                _dir_bytes(os.path.join(self.path, t)) for t in ("postings", "docs_content")
+            )
+            if pin_bytes <= self.DRIVER_PIN_MAX_BYTES:
+                self._pin_serving()
         return self
+
+    def _pin_serving(self) -> None:
+        """Read the posting blocks and the content once with pyarrow
+        into the driver pins (see warm())."""
+        post_dir = os.path.join(self.path, "postings")
+        shards = []
+        for name in os.listdir(post_dir):
+            if not name.startswith("shard="):
+                continue
+            blocks = (
+                pq.read_table(os.path.join(post_dir, name), columns=_PIN_COLS)
+                .to_pandas()
+                .sort_values(["term", "min_doc_no"], ignore_index=True)
+            )
+            shards.append((int(name[len("shard="):]), blocks, blocks["term"].to_numpy()))
+        content = pq.read_table(
+            os.path.join(self.path, "docs_content"), columns=["doc_no", "content"]
+        )
+        self._shards = sorted(shards, key=lambda x: x[0])
+        self._content = dict(zip(content.column("doc_no").to_pylist(),
+                                 content.column("content").to_pylist()))
+        self._doc_nos = {v[0]: doc_no for doc_no, v in self._docmap_dict.items()}
+
+    @property
+    def pinned(self) -> bool:
+        """True once warm() pinned the blocks, content and docmap in the
+        driver."""
+        return self._shards is not None
+
+    def pinned_blocks(self, terms: list[str]):
+        """(shard, blocks of ``terms``) for each pinned shard holding
+        any — the rows ``blocks.where(term in terms).groupBy("shard")``
+        hands a shard scorer, in (term, min_doc_no) order."""
+        keys = np.array(sorted(set(terms)), dtype=object)
+        for shard, blocks, shard_terms in self._shards:
+            lo = np.searchsorted(shard_terms, keys, side="left")
+            hi = np.searchsorted(shard_terms, keys, side="right")
+            rows = [np.arange(a, b) for a, b in zip(lo, hi) if b > a]
+            if rows:
+                yield shard, blocks.take(np.concatenate(rows))
 
     @property
     def blocks(self) -> DataFrame:
@@ -1084,15 +1173,15 @@ class MultiSegmentIndex(_Family):
         n_total = sum(s.meta["n_docs"] for s in self.segments)
         sum_dl = sum(s.meta["avgdl"] * s.meta["n_docs"] for s in self.segments)
         n_excl = sum(len(e) for e in self.excluded)
-        if n_excl:
-            for s, e in zip(self.segments, self.excluded):
-                if e:
-                    row = (
-                        s.docmap.where(F.col("doc_no").isin([int(x) for x in e]))
-                        .agg(F.sum("total_words").alias("dl"))
-                        .collect()[0]
-                    )
-                    sum_dl -= float(row["dl"] or 0.0)
+        for s, e in zip(self.segments, self.excluded):
+            if e:
+                # the superseded docs' lengths, read with pyarrow (no
+                # Spark job at open) and summed as exact integers
+                words = pq.read_table(
+                    os.path.join(s.path, "docmap"), columns=["total_words"],
+                    filters=[("doc_no", "in", sorted(int(x) for x in e))],
+                ).column("total_words").to_pylist()
+                sum_dl -= float(sum(w for w in words if w is not None))
         n_live = n_total - n_excl
         self.meta = {
             **m0,
@@ -1114,6 +1203,16 @@ class MultiSegmentIndex(_Family):
                 agg["df"] += st["df"]
                 agg["n_blocks"] += st["n_blocks"]
         return out
+
+
+_PIN_COLS = ["term", "min_doc_no", "max_doc_no", "docs_bin", "tfs_bin", "dls_bin", "max_tfnorm"]
+
+
+def _dir_bytes(path: str) -> int:
+    """On-disk bytes of every file under ``path`` (0 if it is missing)."""
+    return sum(
+        os.path.getsize(os.path.join(r, f)) for r, _, files in os.walk(path) for f in files
+    )
 
 
 def _tombstones(segs: list[SegmentIndex]) -> list[set[int]]:

@@ -132,10 +132,11 @@ def test_broadcast_join_on_candidates(spark, seg):
 
 
 def test_warm_serving_fast_path_matches_join_path(spark, seg):
-    """warm() pins the term dictionary and docmap in the driver; the
-    serving fast path (one scoring job + driver enrichment) must return
-    exactly the join path's rows in the same order, and term_stats must
-    match the Spark probe."""
+    """warm() pins the term dictionary, docmap and (under the byte gate)
+    the blocks and content in the driver; the serving fast path (driver
+    scoring, merge and enrichment, no Spark job) must return exactly
+    the join path's rows in the same order, and term_stats must match
+    the Spark probe."""
     from nadry_spark.sources.segments import SegmentIndex
     from nadry_spark.operators.bm25 import bm25_topk
 

@@ -1,6 +1,7 @@
 """Standalone mirror of the driver's correctness gate at a given sf."""
+import os
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 from nadry_spark.session import get_spark
 import __spark_entry__ as em

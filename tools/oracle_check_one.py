@@ -4,7 +4,7 @@ Usage: python tools/oracle_check_one.py q1 [q2 ...]"""
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 from nadry_spark.session import get_spark

@@ -4,9 +4,10 @@ iteration loop for optimization work): tools/oracle_check.py semantics
 
 Usage: python tools/oracle_check_some.py [--sf DIR] name [name ...]
 """
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 from nadry_spark.session import get_spark
