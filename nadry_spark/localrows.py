@@ -17,8 +17,10 @@ on the bench box, dominating the sub-second query latency.
 ``local_rows_df`` instead emits a parameterized ``VALUES`` query:
 values bind as literals (no string escaping, injection-safe for
 arbitrary doc ids / URLs), the optimizer folds it to a LocalRelation,
-and ``collect()`` returns WITHOUT running a job (~15 ms including the
-parse). ``empty_df`` is the zero-row equivalent (a WHERE 1=0
+and ``collect()`` returns WITHOUT running a job. It is not cheap: a
+10-row x 4-column page takes ~55 ms to build and collect (median of
+25, quartiles 42-68 ms, local[2] on a 4-core VM), most of a warmed
+driver search. ``empty_df`` is the zero-row equivalent (a WHERE 1=0
 projection) for the miss branches — cheaper than the eager
 ``createDataFrame([], ddl)`` and only built when actually needed.
 """

@@ -28,12 +28,10 @@ The core:
    (``SegmentIndex.pinned``), a driver loop calls it over the pinned
    blocks of the shards that hold a query term; otherwise Spark calls
    it under ``applyInPandas``. A family never mixes the two;
-3. finishes: scored on the driver, the per-shard top-ks merge and
-   enrich from the pinned docmaps on the driver, and the rows come
-   back as a LocalRelation (``local_rows_df``) — no Spark job at all;
-   with only the docmaps pinned, the ``(query_id, _seg, doc_no,
-   score)`` frame collects in ONE job into the same driver merge;
-   otherwise a distributed per-query top-k and a broadcast docmap join.
+3. finishes where it scored: on the driver, the per-shard top-ks
+   merge and enrich from the pinned docmaps, and the rows come back as
+   a LocalRelation (``local_rows_df``) — no Spark job at all; under
+   Spark, a distributed per-query top-k and a broadcast docmap join.
 
 The tie order comes from the entry point, not the handle: ``bm25_topk``
 and ``bm25_queryset_topk`` break score ties on ``doc_no`` ascending and
@@ -450,27 +448,15 @@ def _topk(index, queries: dict[int, list[str]], k: int, mode: str,
     frames = _score(family, index.meta, q_ids, q_terms, idf_map, k, mode, conjunctive, driver)
 
     if driver:
+        # the driver merge and enrichment from the pinned docmaps; the
+        # rows go back as a LocalRelation (local_rows_df), so the
+        # caller's collect() runs no job
         rows = [
             {"query_id": q, "_seg": i, "doc_no": d, "score": score}
             for i, f in enumerate(frames)
             for q, d, score in zip(f["query_id"].tolist(), f["doc_no"].tolist(),
                                    f["score"].tolist())
         ]
-    elif not lazy and all(s._docmap_dict is not None for s, _ in family):
-        # docmaps pinned in the driver at warm() but not the blocks: ONE
-        # Spark job collects the per-shard top-ks (<= n_segments *
-        # n_shards * k rows per query) for the driver merge — the join
-        # formulation costs a broadcast materialization job per segment
-        # per query
-        merged = reduce(DataFrame.unionByName,
-                        [f.withColumn("_seg", F.lit(i)) for i, f in enumerate(frames)])
-        rows = [r.asDict() for r in merged.collect()]
-    else:
-        rows = None
-    if rows is not None:
-        # the driver merge and enrichment from the pinned docmaps; the
-        # rows go back as a LocalRelation (local_rows_df), so the
-        # caller's collect() runs no job
         for row in rows:
             row["doc_id"], row["url"], _ = family[row["_seg"]][0]._docmap_dict[row["doc_no"]]
         rows.sort(key=lambda x: (x["query_id"], -x["score"], x[tie]))

@@ -35,6 +35,13 @@ from nadry_spark.localrows import _local_frame, collect_bounded
 DRIVER_MAX_SYM_EDGES = 2_000_000
 
 
+def _collect_edges(raw: DataFrame):
+    """The driver paths' (a, b) rows, or None past the gate or on a NULL
+    endpoint: the distributed plans' rows are the NULL contract."""
+    pdf = collect_bounded(raw, DRIVER_MAX_SYM_EDGES // 2)
+    return None if pdf is None or pdf.isna().to_numpy().any() else pdf
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -72,7 +79,7 @@ def connected_components(
     corpus-scale pair graphs) the distributed loop runs unchanged.
     """
     raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint()
-    pdf = collect_bounded(raw, DRIVER_MAX_SYM_EDGES // 2)
+    pdf = _collect_edges(raw)
     if pdf is not None:
         # symmetrize the collected RAW pair rows in numpy — duplicate
         # edges are harmless to a min-scatter, so the Spark-side
@@ -168,7 +175,7 @@ def connected_components_with_sizes(
     whole answer returns as a single driver-built frame; past the
     gate it composes the distributed pieces unchanged."""
     raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint()
-    pdf = collect_bounded(raw, DRIVER_MAX_SYM_EDGES // 2)
+    pdf = _collect_edges(raw)
     if pdf is not None:
         import numpy as np
 
@@ -224,7 +231,7 @@ def label_propagation(
     from pyspark.sql import Window
 
     raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).localCheckpoint()
-    pdf = collect_bounded(raw, DRIVER_MAX_SYM_EDGES // 2)
+    pdf = _collect_edges(raw)
     if pdf is not None:
         # raw rows collected; symmetrize + self-loop drop + DISTINCT
         # happen in numpy (LPA counts neighbours, so unlike CC the

@@ -13,7 +13,8 @@ positions against the token-offset list, normalize to the would-be
 phrase start (adj = pos - i), and count distinct offsets per
 (doc, field, adj). A group holding all n offsets is an exact match.
 This is algebraically identical and O(total postings of phrase terms)
-with a single aggregation, no n-way self-join chain.
+with a single aggregation, no n-way self-join chain. On a pinned
+segment the same count runs as one fused numpy kernel on the driver.
 """
 
 from __future__ import annotations
@@ -78,27 +79,21 @@ def positions_long(positions: DataFrame) -> DataFrame:
 def phrase_match_docs(index: SegmentIndex, tokens: list[str]) -> DataFrame:
     """doc_nos containing the exact consecutive same-field phrase.
 
-    Two physically different, row-identical shapes:
+    One match, two executors, row-identical:
 
-    * **Fused kernel** (warm serving path): when the positions store
-      is pinned by ``warm()`` its cache partitions are whole shards
-      (explicit repartition by ``shard``), and doc-range sharding
-      puts every row of a doc in exactly one shard — so the entire
-      match (decode -> adj normalization -> per-(doc, field, adj)
-      distinct-offset count == n) runs inside ONE mapInPandas pass
-      with no exchange, and per-partition distinct doc_nos are
-      globally distinct. A raw parquet scan gives no such partition
-      guarantee (split packing can place row groups of one file in
-      different tasks at scale), so the fused form is gated on the
-      cache.
-    * **Join + aggregation** (scale path, unchanged): offset join,
+    * **Fused kernel** (pinned segment, see ``SegmentIndex.warm``): the
+      driver runs ``_phrase_match_fused`` over each pinned shard's
+      phrase-term rows, sliced by term as ``pinned_blocks`` slices the
+      blocks. Doc-range sharding puts every row of a doc in exactly one
+      shard, so per-shard matches are exact and the shards' doc_nos are
+      distinct. No Spark job runs.
+    * **Join + aggregation** (otherwise, the scale path): offset join,
       groupBy (doc, field, adj), countDistinct(i) == n.
     """
     spark = index.spark
+    if index.pinned:
+        return local_rows_df(spark, "doc_no long", [(d,) for d in _pinned_matches(index, tokens)])
     n = len(tokens)
-    if "positions" in getattr(index, "_cached", {}):
-        pos = index.positions.where(F.col("term").isin(sorted(set(tokens))))
-        return _phrase_match_fused(pos, tokens)
     # LocalRelation-backed (localrows): a createDataFrame list goes
     # through parallelize, so even this tiny broadcast input costs a
     # full task set to build
@@ -118,12 +113,17 @@ def phrase_match_docs(index: SegmentIndex, tokens: list[str]) -> DataFrame:
     return starts.select("doc_no").distinct()
 
 
-def _phrase_match_fused(pos: DataFrame, tokens: list[str]) -> DataFrame:
-    """One-pass phrase match over a doc-complete-partition positions
-    frame (see phrase_match_docs): same (doc, field, adj) distinct-i
-    count as the join form, vectorized per partition."""
+def _pinned_matches(seg: SegmentIndex, tokens: list[str]) -> list[int]:
+    """The phrase's doc_nos in a pinned segment: the fused kernel per shard."""
+    return [int(d) for _, rows in seg.pinned_positions(tokens) for d in _phrase_match_fused(rows, tokens)]
+
+
+def _phrase_match_fused(pdf, tokens: list[str]):
+    """One-pass phrase match over the doc-complete positions rows
+    ``pdf`` (see phrase_match_docs): the same (doc, field, adj)
+    distinct-i count as the join form, vectorized. Returns the matched
+    doc_nos as a numpy array."""
     import numpy as np
-    import pandas as pd
 
     from nadry_spark.operators.codecs import decode_position_lists
     from nadry_spark.sources.segments import _POS_FIELDS
@@ -134,58 +134,61 @@ def _phrase_match_fused(pos: DataFrame, tokens: list[str]) -> DataFrame:
     for i, t in enumerate(tokens):
         offs_of.setdefault(t, []).append(i)
 
-    def gen(batches):
-        docs_p = []
-        field_p = []
-        adj_p = []
-        i_p = []
-        for pdf in batches:
-            terms = pdf["term"].to_numpy(dtype=object)
-            doc_nos = pdf["doc_no"].to_numpy(np.int64)
-            for f_code, (_field, ncol, bcol) in enumerate(_POS_FIELDS):
-                counts = pdf[ncol].to_numpy(dtype=np.int64)
-                if counts.sum() == 0:
-                    continue
-                posv = decode_position_lists(list(pdf[bcol]), counts).astype(
-                    np.int64
+    docs_p = []
+    field_p = []
+    adj_p = []
+    i_p = []
+    terms = pdf["term"].to_numpy(dtype=object)
+    doc_nos = pdf["doc_no"].to_numpy(np.int64)
+    for f_code, (_field, ncol, bcol) in enumerate(_POS_FIELDS):
+        counts = pdf[ncol].to_numpy(dtype=np.int64)
+        if counts.sum() == 0:
+            continue
+        posv = decode_position_lists(list(pdf[bcol]), counts).astype(
+            np.int64
+        )
+        d_rep = np.repeat(doc_nos, counts)
+        t_rep = np.repeat(terms, counts)
+        for t, offs in offs_of.items():
+            m = t_rep == t
+            if not m.any():
+                continue
+            pm, dm = posv[m], d_rep[m]
+            for i in offs:
+                docs_p.append(dm)
+                field_p.append(
+                    np.full(len(dm), f_code, dtype=np.int64)
                 )
-                d_rep = np.repeat(doc_nos, counts)
-                t_rep = np.repeat(terms, counts)
-                for t, offs in offs_of.items():
-                    m = t_rep == t
-                    if not m.any():
-                        continue
-                    pm, dm = posv[m], d_rep[m]
-                    for i in offs:
-                        docs_p.append(dm)
-                        field_p.append(
-                            np.full(len(dm), f_code, dtype=np.int64)
-                        )
-                        adj_p.append(pm - i)
-                        i_p.append(np.full(len(dm), i, dtype=np.int64))
-        if docs_p:
-            d = np.concatenate(docs_p)
-            fc = np.concatenate(field_p)
-            adj = np.concatenate(adj_p) + np.int64(n)  # >= 1
-            iv = np.concatenate(i_p)
-            m1 = int(adj.max()) + 1
-            grp = (d * nf + fc) * m1 + adj
-            # distinct (group, i) then count distinct i per group
-            per_grp = np.unique(grp * n + iv) // n
-            uniq, cnt = np.unique(per_grp, return_counts=True)
-            matched = np.unique(uniq[cnt == n] // m1 // nf)
-        else:
-            matched = np.empty(0, dtype=np.int64)
-        yield pd.DataFrame({"doc_no": matched})
-
-    return pos.mapInPandas(gen, "doc_no long")
+                adj_p.append(pm - i)
+                i_p.append(np.full(len(dm), i, dtype=np.int64))
+    if not docs_p:
+        return np.empty(0, dtype=np.int64)
+    d = np.concatenate(docs_p)
+    fc = np.concatenate(field_p)
+    adj = np.concatenate(adj_p) + np.int64(n)  # >= 1
+    iv = np.concatenate(i_p)
+    m1 = int(adj.max()) + 1
+    grp = (d * nf + fc) * m1 + adj
+    # distinct (group, i) then count distinct i per group
+    per_grp = np.unique(grp * n + iv) // n
+    uniq, cnt = np.unique(per_grp, return_counts=True)
+    return np.unique(uniq[cnt == n] // m1 // nf)
 
 
 def phrase_match_doc_ids(index, tokens: list[str]) -> DataFrame:
     """doc_ids containing the phrase, over a segment family (doc spaces
-    are segment-disjoint, so the J2 positional aggregation runs per
-    segment and the matched ids union; tombstoned re-crawls
-    excluded)."""
+    are segment-disjoint, so the J2 positional match runs per segment
+    and the matched ids union; tombstoned re-crawls excluded). On a
+    family whose every member is pinned, the driver kernel's doc_nos
+    map to doc_ids through the docmap pins, with no Spark job."""
+    family = list(zip(index.segments, index.excluded))
+    if all(seg.pinned for seg, _ in family):
+        return local_rows_df(index.spark, "doc_id string", [
+            (seg._docmap_dict[d][0],)
+            for seg, excl in family
+            for d in _pinned_matches(seg, tokens)
+            if d not in excl
+        ])
     return reduce(DataFrame.unionByName, [
         seg.docmap.join(index._live(i, phrase_match_docs(seg, tokens)), "doc_no")
         .select("doc_id")

@@ -38,8 +38,11 @@ is the incremental family. The family methods — ``_live``,
 ``df_corrections``, ``candidates_for``, ``doc_meta_df``,
 ``content_for`` and ``pinned_content`` — are written once, on their
 shared base, and every serving operator loops over ``index.segments``
-instead of testing the handle type. A family whose every member is
-``pinned`` (see ``SegmentIndex.warm``) is served on the driver.
+instead of testing the handle type. ``SegmentIndex.warm`` leaves a
+segment in one of two serving states, chosen by one byte gate: pinned
+in the driver (read once with pyarrow, no Spark job) or cached in
+Spark, never both. A family whose every member is ``pinned`` is served
+on the driver — BM25 scoring, phrase matching and enrichment.
 
 Design decisions (scale rationale):
 
@@ -75,9 +78,11 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from nadry_spark.operators.codecs import bm25_tfnorm, delta_decode, encode_posting_block
 
@@ -901,24 +906,15 @@ class _Family:
 
 class SegmentIndex(_Family):
     """Handle over a built segment directory — the serving family of
-    one: ``segments`` is ``[self]`` and ``excluded`` is ``[set()]``."""
+    one: ``segments`` is ``[self]`` and ``excluded`` is ``[set()]``.
+    Cold, it reads parquet; ``warm()`` leaves it either pinned in the
+    driver or cached in Spark."""
 
-    # driver-side pin gates for warm(): the term dictionary and the
-    # doc_no->(doc_id, url, title) map are pinned in DRIVER memory
-    # while they fit (a real serving deployment holds the dictionary in
-    # RAM) so a query costs a dict probe instead of a Spark job; past
-    # the gates serving falls back to the cached-DataFrame jobs
-    # unchanged.
-    TERMS_DICT_MAX = 5_000_000
-    DOCMAP_DICT_MAX = 1_000_000
-    # serving-tier RAM budget for pinning the positions store (see
-    # warm()); deliberately a byte capacity, not a core/corpus tune
-    POSITIONS_CACHE_MAX_BYTES = 4 << 30
-    # driver RAM budget for serving the segment without Spark: while
-    # its on-disk postings + docs_content bytes fit (and the docmap is
-    # pinned), warm() pins the blocks per shard and the doc_no ->
-    # content map in the driver. A byte capacity read from file sizes
-    # before any table is read, at call time (tests zero it).
+    # the one warm() gate, a driver RAM budget: while the on-disk bytes
+    # of the tables warm() pins (_PIN_TABLES) fit, the segment is served
+    # from driver pins; past it, from Spark caches. A byte capacity read
+    # from file sizes before any table is read, at call time (tests
+    # zero it).
     DRIVER_PIN_MAX_BYTES = 256 << 20
 
     def __init__(self, spark: SparkSession, path: str):
@@ -933,15 +929,17 @@ class SegmentIndex(_Family):
                 "blocks can be read — rebuild the segment"
             )
         self._cached: dict[str, DataFrame] = {}
+        self._df_corr: dict[str, int] = {}  # df_corrections cache
+        # driver pins (warm(), under DRIVER_PIN_MAX_BYTES): term -> stats,
+        # doc_no -> (doc_id, url, title), doc_id -> doc_no, doc_no ->
+        # content, and per shard the posting blocks (pandas) and the
+        # positions (Arrow), each as (shard, table, term run bounds)
         self._terms_dict: dict | None = None
         self._docmap_dict: dict | None = None
-        self._df_corr: dict[str, int] = {}  # df_corrections cache
-        # driver serving pins (warm(), under DRIVER_PIN_MAX_BYTES): per
-        # shard (shard, blocks sorted by term, their term column), the
-        # doc_no -> content map and the doc_id -> doc_no map
-        self._shards: list[tuple[int, pd.DataFrame, np.ndarray]] | None = None
-        self._content: dict[int, str] | None = None
         self._doc_nos: dict[str, int] | None = None
+        self._content: dict[int, str] | None = None
+        self._shards: list | None = None
+        self._positions: list | None = None
 
     @property
     def segments(self) -> list["SegmentIndex"]:
@@ -952,30 +950,20 @@ class SegmentIndex(_Family):
         return [set()]
 
     def warm(self) -> "SegmentIndex":
-        """Pin the dictionary, blocks and docmap in executor memory —
-        what a serving deployment does for query latency — and, while
-        they fit the driver gates above, the term dictionary and the
-        docmap (doc_id, url, title) in driver memory too. While the
-        docmap is pinned and the on-disk postings + docs_content fit
-        ``DRIVER_PIN_MAX_BYTES``, the posting blocks (per shard, sorted
-        by term) and the doc_no -> content map are read once with
-        pyarrow and pinned in the driver as well: the segment is then
-        ``pinned``, and a BM25 search over a family of pinned segments
-        scores and enriches on the driver without a Spark job. The
-        Spark caches stay either way — the phrase path, the lazy
-        queryset path and ``decoded_tf`` read them. Returns self."""
-        counts: dict[str, int] = {}
-        names = ["terms", "blocks", "docmap"]
-        # the positions store is the largest segment table — pin it
-        # only while it fits a serving-tier RAM budget (on-disk bytes,
-        # a capacity gate, not a local-core tune); past the gate the
-        # phrase/field paths keep their term-pruned parquet scans,
-        # which is the 100x shape (position stores live on SSD there)
-        if _dir_bytes(os.path.join(self.path, "positions")) <= self.POSITIONS_CACHE_MAX_BYTES:
-            names.append("positions")
-        for name in names:
+        """Ready the segment for serving in one of two states, chosen by
+        ``DRIVER_PIN_MAX_BYTES`` against the on-disk bytes of the five
+        tables in ``_PIN_TABLES``. **Pinned** (under the gate): pyarrow
+        reads them once into the driver pins (see ``__init__``); no
+        Spark job runs and no Spark cache is registered, and a family
+        of pinned segments scores, phrase-matches and enriches on the
+        driver. **Cached** (over the gate): terms, blocks and docmap are
+        cached in executor memory and nothing is pinned. Returns self."""
+        if sum(_dir_bytes(os.path.join(self.path, t)) for t in _PIN_TABLES) <= self.DRIVER_PIN_MAX_BYTES:
+            self._pin()
+            return self
+        for name in ("terms", "blocks", "docmap"):
             df = getattr(self, name)
-            if name in ("blocks", "positions"):
+            if name == "blocks":
                 # cache the postings pre-clustered by shard: the
                 # directory-partitioned scan caches as many small
                 # splits whose per-partition scan overhead dominates
@@ -990,90 +978,72 @@ class SegmentIndex(_Family):
                     max(1, int(self.meta.get("n_shards", 1))), "shard"
                 ).sortWithinPartitions("term")
             df = df.cache()
-            counts[name] = df.count()
+            df.count()
             self._cached[name] = df
-        if counts["terms"] <= self.TERMS_DICT_MAX:
-            self._terms_dict = {
-                r["term"]: {"df": r["df"], "n_blocks": r["n_blocks"]}
-                for r in self._cached["terms"].collect()
-            }
-        if counts["docmap"] <= self.DOCMAP_DICT_MAX:
-            self._docmap_dict = {
-                r["doc_no"]: (r["doc_id"], r["url"], r["title"])
-                for r in self._cached["docmap"]
-                .select("doc_no", "doc_id", "url", "title")
-                .collect()
-            }
-            pin_bytes = sum(
-                _dir_bytes(os.path.join(self.path, t)) for t in ("postings", "docs_content")
-            )
-            if pin_bytes <= self.DRIVER_PIN_MAX_BYTES:
-                self._pin_serving()
         return self
 
-    def _pin_serving(self) -> None:
-        """Read the posting blocks and the content once with pyarrow
-        into the driver pins (see warm())."""
-        post_dir = os.path.join(self.path, "postings")
-        shards = []
-        for name in os.listdir(post_dir):
-            if not name.startswith("shard="):
-                continue
-            blocks = (
-                pq.read_table(os.path.join(post_dir, name), columns=_PIN_COLS)
-                .to_pandas()
-                .sort_values(["term", "min_doc_no"], ignore_index=True)
-            )
-            shards.append((int(name[len("shard="):]), blocks, blocks["term"].to_numpy()))
-        content = pq.read_table(
-            os.path.join(self.path, "docs_content"), columns=["doc_no", "content"]
-        )
-        self._shards = sorted(shards, key=lambda x: x[0])
-        self._content = dict(zip(content.column("doc_no").to_pylist(),
-                                 content.column("content").to_pylist()))
-        self._doc_nos = {v[0]: doc_no for doc_no, v in self._docmap_dict.items()}
+    def _pin(self) -> None:
+        """Read the five serving tables once with pyarrow into the
+        driver pins (see warm())."""
+        def read(table, cols):
+            return pq.read_table(os.path.join(self.path, table), columns=cols).to_pydict()
+
+        terms = read("terms", ["term", "df", "n_blocks"])
+        self._terms_dict = {
+            t: {"df": df, "n_blocks": nb}
+            for t, df, nb in zip(terms["term"], terms["df"], terms["n_blocks"])
+        }
+        dm = read("docmap", ["doc_no", "doc_id", "url", "title"])
+        self._docmap_dict = dict(zip(dm["doc_no"], zip(dm["doc_id"], dm["url"], dm["title"])))
+        self._doc_nos = dict(zip(dm["doc_id"], dm["doc_no"]))
+        content = read("docs_content", ["doc_no", "content"])
+        self._content = dict(zip(content["doc_no"], content["content"]))
+        self._shards = _pin_shards(os.path.join(self.path, "postings"), _PIN_COLS,
+                                   ["term", "min_doc_no"], to_pandas=True)
+        self._positions = _pin_shards(os.path.join(self.path, "positions"), _PIN_POS_COLS, ["term"])
 
     @property
     def pinned(self) -> bool:
-        """True once warm() pinned the blocks, content and docmap in the
-        driver."""
+        """True once warm() pinned the segment in the driver."""
         return self._shards is not None
 
     def pinned_blocks(self, terms: list[str]):
         """(shard, blocks of ``terms``) for each pinned shard holding
         any — the rows ``blocks.where(term in terms).groupBy("shard")``
         hands a shard scorer, in (term, min_doc_no) order."""
-        keys = np.array(sorted(set(terms)), dtype=object)
-        for shard, blocks, shard_terms in self._shards:
-            lo = np.searchsorted(shard_terms, keys, side="left")
-            hi = np.searchsorted(shard_terms, keys, side="right")
-            rows = [np.arange(a, b) for a, b in zip(lo, hi) if b > a]
-            if rows:
-                yield shard, blocks.take(np.concatenate(rows))
+        return _term_rows(self._shards, terms)
+
+    def pinned_positions(self, terms: list[str]):
+        """(shard, positions rows of ``terms`` as pandas) for each
+        pinned shard holding any. A shard is doc-complete: every
+        positions row of a doc sits in its doc's shard."""
+        for shard, rows in _term_rows(self._positions, terms):
+            yield shard, rows.to_pandas()
+
+    def _table(self, name: str, table: str) -> DataFrame:
+        """``name``'s Spark cache in the cached state, else ``table``'s
+        parquet, its schema read from a footer on the driver (Spark's
+        own schema inference runs a job, ~100 ms a read)."""
+        if name in self._cached:
+            return self._cached[name]
+        path = os.path.join(self.path, table)
+        return self.spark.read.schema(from_arrow_schema(pq.ParquetDataset(path).schema)).parquet(path)
 
     @property
     def blocks(self) -> DataFrame:
-        if "blocks" in self._cached:
-            return self._cached["blocks"]
-        return self.spark.read.parquet(os.path.join(self.path, "postings"))
+        return self._table("blocks", "postings")
 
     @property
     def positions(self) -> DataFrame:
-        if "positions" in self._cached:
-            return self._cached["positions"]
-        return self.spark.read.parquet(os.path.join(self.path, "positions"))
+        return self._table("positions", "positions")
 
     @property
     def terms(self) -> DataFrame:
-        if "terms" in self._cached:
-            return self._cached["terms"]
-        return self.spark.read.parquet(os.path.join(self.path, "terms"))
+        return self._table("terms", "terms")
 
     @property
     def docmap(self) -> DataFrame:
-        if "docmap" in self._cached:
-            return self._cached["docmap"]
-        return self.spark.read.parquet(os.path.join(self.path, "docmap"))
+        return self._table("docmap", "docmap")
 
     @property
     def has_anchors(self) -> bool:
@@ -1089,7 +1059,7 @@ class SegmentIndex(_Family):
 
     @property
     def docs_content(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "docs_content"))
+        return self._table("docs_content", "docs_content")
 
     def term_stats(self, terms: list[str]) -> dict[str, dict]:
         if self._terms_dict is not None:
@@ -1205,7 +1175,38 @@ class MultiSegmentIndex(_Family):
         return out
 
 
+_PIN_TABLES = ("terms", "docmap", "postings", "docs_content", "positions")
 _PIN_COLS = ["term", "min_doc_no", "max_doc_no", "docs_bin", "tfs_bin", "dls_bin", "max_tfnorm"]
+_PIN_POS_COLS = ["term", "doc_no"] + [c for _, n, b in _POS_FIELDS for c in (n, b)]
+
+
+def _pin_shards(path: str, cols: list[str], order: list[str], to_pandas: bool = False) -> list:
+    """Per ``shard=S`` directory under ``path``, in shard order:
+    (S, its table sorted by ``order`` — ``term`` first — as Arrow or
+    pandas, and the row bounds of its term runs as (run terms, [0, run
+    ends...]))."""
+    out = []
+    for name in os.listdir(path):
+        if name.startswith("shard="):
+            table = pq.read_table(os.path.join(path, name), columns=cols).sort_by(
+                [(c, "ascending") for c in order])
+            runs = pc.run_end_encode(table.column("term").combine_chunks())
+            bounds = (runs.values.to_numpy(zero_copy_only=False),
+                      np.concatenate([[0], runs.run_ends.to_numpy()]))
+            out.append((int(name[len("shard="):]), table.to_pandas() if to_pandas else table, bounds))
+    return sorted(out, key=lambda x: x[0])
+
+
+def _term_rows(pins: list, terms: list[str]):
+    """(shard, rows of ``terms``) for each pinned shard holding any, in
+    the pinned order; a pin is (shard, table sorted by term, term run
+    bounds), its table pandas or Arrow."""
+    keys = np.array(sorted(set(terms)), dtype=object)
+    for shard, table, (run_terms, ends) in pins:
+        hit = [j for j, key in zip(np.searchsorted(run_terms, keys), keys)
+               if j < len(run_terms) and run_terms[j] == key]
+        if hit:
+            yield shard, table.take(np.concatenate([np.arange(ends[j], ends[j + 1]) for j in hit]))
 
 
 def _dir_bytes(path: str) -> int:

@@ -200,3 +200,27 @@ def test_fuzzy_match_equals_cross_join(spark):
         cands = sorted((d, w) for (qq, w, d) in want if qq == q)
         assert [(d, w) for _, d, w in rows] == cands[: len(rows)]
         assert [r[0] for r in rows] == list(range(1, len(rows) + 1))
+
+
+@pytest.mark.parametrize("vtype", ["string", "long"])
+@pytest.mark.parametrize(
+    "op", ["connected_components", "connected_components_with_sizes", "label_propagation"]
+)
+def test_null_endpoint_driver_equals_distributed(spark, monkeypatch, op, vtype):
+    """An edge with a NULL endpoint: the rows at the default gate equal
+    the distributed plan's (the driver rounds cannot rank a NULL, so a
+    collected NULL endpoint takes the distributed plan)."""
+    from nadry_spark.operators import components
+
+    def vid(v):
+        return v if v is None or vtype == "long" else f"v{v}"
+
+    df = spark.createDataFrame(
+        [(vid(a), vid(b)) for a, b in [(1, 2), (2, 3), (4, None)]], f"src {vtype}, dst {vtype}"
+    )
+
+    def rows():
+        return sorted(map(tuple, getattr(components, op)(df).collect()), key=repr)
+
+    got = rows()
+    assert got and got == _distributed(monkeypatch, rows)

@@ -59,18 +59,21 @@ def _handles(spark, paths):
 def pinned(spark, family_paths):
     seg, fam = _handles(spark, family_paths)
     assert seg.pinned and all(s.pinned for s in fam.segments)
+    assert not seg._cached and not any(s._cached for s in fam.segments)
     return seg, fam
 
 
 @pytest.fixture(scope="module")
 def unpinned(spark, family_paths):
-    """The same handles warmed with the driver byte gate zeroed: served
-    by the distributed path."""
+    """The same handles warmed with the driver byte gate zeroed: the
+    cached state, served by the distributed path, nothing pinned."""
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(SegmentIndex, "DRIVER_PIN_MAX_BYTES", 0)
         seg, fam = _handles(spark, family_paths)
     assert not seg.pinned and not any(s.pinned for s in fam.segments)
-    assert seg._docmap_dict is not None  # the docmap pin is its own gate
+    for s in [seg, *fam.segments]:
+        assert s._docmap_dict is None and s._terms_dict is None
+        assert sorted(s._cached) == ["blocks", "docmap", "terms"]
     return seg, fam
 
 
@@ -175,6 +178,24 @@ def test_query_engine_envelopes_driver_equal_distributed(pinned, unpinned):
     assert env["totalResults"] == 1 and "zzrecrawl" in env["data"][0]["description"]
 
 
+def test_phrase_and_exact_envelopes_pinned_equal_cached(pinned, unpinned):
+    """Phrase and exact-mode QueryEngine envelopes — doc order,
+    totalResults, title, description and scores — are identical
+    between the pinned handles and the cached ones; the re-crawled
+    page's phrase matches its new copy only."""
+    phrases = ['"news report"', '"zzrecrawl marker news"', '"news zzrecrawl"', '"report news"',
+               '"news zzznotaterm"', '"news news"']
+    for i in (0, 1):
+        for scoring, queries in (("bm25", phrases), ("exact", phrases + ["news report", "zzrecrawl"])):
+            a, b = QueryEngine(pinned[i], scoring=scoring), QueryEngine(unpinned[i], scoring=scoring)
+            for q in queries:
+                got, want = a.search(q, page_size=5), b.search(q, page_size=5)
+                assert _envelope(got) == _envelope(want), (i, scoring, q)
+        assert QueryEngine(pinned[i]).search('"news report"')["totalResults"] > 0
+    env = QueryEngine(pinned[1]).search('"zzrecrawl marker news"')
+    assert env["totalResults"] == 1 and "zzrecrawl" in env["data"][0]["description"]
+
+
 def _jobs(spark, group, fn):
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
@@ -201,14 +222,23 @@ def test_warmed_search_runs_no_job(spark, pinned, unpinned):
             unpinned[i], scoring="bm25").search("news report update")), name
 
 
+def test_pinned_warm_runs_no_job(spark, family_paths):
+    """warm() of a pinned segment and of the tombstoned family reads its
+    tables with pyarrow: no Spark job, no Spark cache."""
+    for name, idx in (("segment", SegmentIndex(spark, family_paths[0])),
+                      ("family", MultiSegmentIndex(spark, family_paths))):
+        assert _jobs(spark, f"warm-{name}", idx.warm) == [], name
+        assert all(s.pinned and not s._cached for s in idx.segments), name
+
+
 def test_gate_from_file_sizes_alone(spark, family_paths, monkeypatch):
-    """The pin gate compares the on-disk postings + docs_content bytes:
-    a gate of exactly that many bytes pins, one byte less does not, and
-    the over-gate warm reads no table with pyarrow."""
+    """The pin gate compares the on-disk bytes of the five tables warm()
+    pins: a gate of exactly that many bytes pins, one byte less does
+    not, and the over-gate warm reads no table with pyarrow."""
     path = family_paths[0]
     size = sum(
         os.path.getsize(os.path.join(r, f))
-        for t in ("postings", "docs_content")
+        for t in ("terms", "docmap", "postings", "docs_content", "positions")
         for r, _, files in os.walk(os.path.join(path, t))
         for f in files
     )

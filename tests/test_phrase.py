@@ -117,29 +117,22 @@ def test_extract_quoted_phrases():
 
 
 def test_phrase_fused_kernel_matches_join_form(spark, seg):
-    """The warm-cache fused positional-match kernel must return exactly
-    the join+aggregation form's doc set — including repeated tokens,
-     3-token phrases, and phrases with no match."""
+    """The fused positional-match kernel, run on the driver over a
+    pinned segment, must return exactly the join+aggregation form's
+    doc set — including repeated tokens, 3-token phrases, and phrases
+    with no match."""
     from nadry_spark.operators.phrase import phrase_match_docs
     from nadry_spark.sources.segments import SegmentIndex
 
     idx, o_postings, o_docs = seg
     warm = SegmentIndex(spark, idx.path).warm()
-    try:
-        assert "positions" in warm._cached  # tiny store: gate must admit it
-        phrases = _bigrams_from_corpus(o_docs, 3)
-        if phrases:
-            a, b = phrases[0]
-            phrases.append([a, b, a])  # repeated token
-            phrases.append([b, b])     # adjacent self-pair (usually empty)
-        for tokens in phrases:
-            fused = {r["doc_no"] for r in phrase_match_docs(warm, tokens).collect()}
-            join = {r["doc_no"] for r in phrase_match_docs(idx, tokens).collect()}
-            assert fused == join, tokens
-    finally:
-        # warm() caches register by PLAN in the session CacheManager, so
-        # they would also serve `seg`-path reads in LATER tests (the
-        # plan-shape assertions in test_plans.py read the same parquet)
-        # — unpersist so the shared session stays clean
-        for df in warm._cached.values():
-            df.unpersist()
+    assert warm.pinned  # tiny segment: the gate must admit it
+    phrases = _bigrams_from_corpus(o_docs, 3)
+    if phrases:
+        a, b = phrases[0]
+        phrases.append([a, b, a])  # repeated token
+        phrases.append([b, b])     # adjacent self-pair (usually empty)
+    for tokens in phrases:
+        fused = {r["doc_no"] for r in phrase_match_docs(warm, tokens).collect()}
+        join = {r["doc_no"] for r in phrase_match_docs(idx, tokens).collect()}
+        assert fused == join, tokens

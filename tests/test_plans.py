@@ -132,26 +132,20 @@ def test_broadcast_join_on_candidates(spark, seg):
 
 
 def test_warm_serving_fast_path_matches_join_path(spark, seg):
-    """warm() pins the term dictionary, docmap and (under the byte gate)
-    the blocks and content in the driver; the serving fast path (driver
-    scoring, merge and enrichment, no Spark job) must return exactly
-    the join path's rows in the same order, and term_stats must match
-    the Spark probe."""
+    """warm() pins the term dictionary, docmap, blocks and content in
+    the driver (the segment fits the byte gate); the serving fast path
+    (driver scoring, merge and enrichment, no Spark job) must return
+    exactly the join path's rows in the same order, and term_stats
+    must match the Spark probe."""
     from nadry_spark.sources.segments import SegmentIndex
     from nadry_spark.operators.bm25 import bm25_topk
 
     idx, _, _ = seg
     warm = SegmentIndex(spark, idx.path).warm()
-    try:
-        assert warm._docmap_dict is not None and warm._terms_dict is not None
-        for q in ("news report", "value sort", "zzz-missing"):
-            fast = [tuple(r) for r in bm25_topk(warm, q, k=5).collect()]
-            join = [tuple(r) for r in bm25_topk(idx, q, k=5).collect()]
-            assert fast == join, q
-            assert warm.term_stats(q.split()) == idx.term_stats(q.split())
-    finally:
-        # unpersist: the warm caches match `seg`-path reads session-wide
-        # (CacheManager keys on the plan), which would taint later
-        # plan-shape tests over the same parquet
-        for df in warm._cached.values():
-            df.unpersist()
+    assert warm.pinned and warm._docmap_dict is not None and warm._terms_dict is not None
+    assert not warm._cached  # the pinned state registers no Spark cache
+    for q in ("news report", "value sort", "zzz-missing"):
+        fast = [tuple(r) for r in bm25_topk(warm, q, k=5).collect()]
+        join = [tuple(r) for r in bm25_topk(idx, q, k=5).collect()]
+        assert fast == join, q
+        assert warm.term_stats(q.split()) == idx.term_stats(q.split())
