@@ -14,13 +14,16 @@ the caller's ``collect()`` schedules a full task set (32 tasks on
 local[32]) to read back ten rows — measured 250+ ms per serving call
 on the bench box, dominating the sub-second query latency.
 
-``local_rows_df`` instead emits a parameterized ``VALUES`` query:
-values bind as literals (no string escaping, injection-safe for
-arbitrary doc ids / URLs), the optimizer folds it to a LocalRelation,
-and ``collect()`` returns WITHOUT running a job. It is not cheap: a
-10-row x 4-column page takes ~55 ms to build and collect (median of
-25, quartiles 42-68 ms, local[2] on a 4-core VM), most of a warmed
-driver search. ``empty_df`` is the zero-row equivalent (a WHERE 1=0
+``local_rows_df`` instead emits one ``VALUES`` query as SQL text:
+every cell is a typed literal (strings as UTF-8 hex ``X'..'`` cast to
+STRING, so no value is ever parsed as SQL and arbitrary doc ids / URLs
+are injection-safe; doubles as their round-tripping ``repr`` cast to
+DOUBLE, NaN/inf/-0.0 included), the analyzer folds it to a
+LocalRelation, and ``collect()`` returns WITHOUT running a job. A
+10-row x 4-column page takes ~25-40 ms to build and collect (medians
+of 25-50 calls after warm-up, local[2] on a shared 4-core VM), against
+~55-70 ms when each cell was bound as a named parameter.
+``empty_df`` is the zero-row equivalent (a WHERE 1=0
 projection) for the miss branches — cheaper than the eager
 ``createDataFrame([], ddl)`` and only built when actually needed.
 """
@@ -91,6 +94,19 @@ def empty_df(spark: SparkSession, ddl: str) -> DataFrame:
     return spark.sql(f"SELECT {cols} WHERE 1 = 0")
 
 
+def _sql_literal(v, typ: str) -> str:
+    """One cell of ``local_rows_df`` as a typed SQL literal."""
+    if v is None:
+        return f"CAST(NULL AS {typ})"
+    if typ == "STRING":
+        return f"CAST(X'{str(v).encode('utf-8').hex()}' AS STRING)"
+    if typ in ("DOUBLE", "FLOAT"):
+        return f"CAST('{float(v)!r}' AS {typ})"
+    if typ == "BOOLEAN":
+        return "TRUE" if v else "FALSE"
+    return f"CAST({int(v)} AS {typ})"
+
+
 def local_rows_df(spark: SparkSession, ddl: str, rows: list[tuple]) -> DataFrame:
     """Small driver-side ``rows`` as a LocalRelation-backed frame with
     the given flat DDL schema (types from ``_CAST_TYPES`` only).
@@ -98,15 +114,9 @@ def local_rows_df(spark: SparkSession, ddl: str, rows: list[tuple]) -> DataFrame
     if not rows:
         return empty_df(spark, ddl)
     fields = _fields(ddl)
-    args: dict[str, object] = {}
-    tuples = []
-    for r, row in enumerate(rows):
-        cells = []
-        for c, ((_name, typ), v) in enumerate(zip(fields, row)):
-            key = f"p{r}_{c}"
-            args[key] = v
-            cells.append(f"CAST(:{key} AS {typ})")
-        tuples.append("(" + ", ".join(cells) + ")")
+    tuples = ", ".join(
+        "(" + ", ".join(_sql_literal(v, typ) for (_name, typ), v in zip(fields, row)) + ")"
+        for row in rows
+    )
     names = ", ".join(name for name, _ in fields)
-    sql = "SELECT * FROM VALUES " + ", ".join(tuples) + f" AS t({names})"
-    return spark.sql(sql, args=args)
+    return spark.sql(f"SELECT * FROM VALUES {tuples} AS t({names})")

@@ -444,7 +444,7 @@ def _topk(index, queries: dict[int, list[str]], k: int, mode: str,
         return empty_df(spark, ddl)
     # a family whose every member warm() pinned scores on the driver,
     # else under applyInPandas; never a mix of the two
-    driver = not lazy and all(seg.pinned for seg, _ in family)
+    driver = not lazy and index.pinned
     frames = _score(family, index.meta, q_ids, q_terms, idf_map, k, mode, conjunctive, driver)
 
     if driver:
@@ -458,7 +458,7 @@ def _topk(index, queries: dict[int, list[str]], k: int, mode: str,
                                    f["score"].tolist())
         ]
         for row in rows:
-            row["doc_id"], row["url"], _ = family[row["_seg"]][0]._docmap_dict[row["doc_no"]]
+            row["doc_id"], row["url"] = family[row["_seg"]][0]._docmap_dict[row["doc_no"]][:2]
         rows.sort(key=lambda x: (x["query_id"], -x["score"], x[tie]))
         top = [
             tuple(row[c] for c in cols)
@@ -572,7 +572,7 @@ def bmw_block_stats(
     if not q_ids:
         return {"n_blocks": 0, "n_decoded": 0, "skip_rate": 0.0}
     meta = index.meta
-    driver = all(seg.pinned for seg in index.segments)
+    driver = index.pinned
     frames = [
         _per_shard(
             seg, q_terms[0],

@@ -15,6 +15,14 @@ phrase start (adj = pos - i), and count distinct offsets per
 This is algebraically identical and O(total postings of phrase terms)
 with a single aggregation, no n-way self-join chain. On a pinned
 segment the same count runs as one fused numpy kernel on the driver.
+
+Ranking has the same two executors. ``phrase_ranked`` and
+``disjunctive_ranked`` build ``rank_exact``'s Spark plan; over a family
+whose every member is pinned, ``pinned_ranked`` reads the same
+candidates from the pins (phrase matches crossed with the distinct
+tokens, tf 1; or the decoded blocks of the query terms) and
+``rank_exact_local`` ranks them on the driver, bit-identical and with
+no Spark job. ``QueryEngine`` takes the driver rows when it can.
 """
 
 from __future__ import annotations
@@ -181,11 +189,10 @@ def phrase_match_doc_ids(index, tokens: list[str]) -> DataFrame:
     and the matched ids union; tombstoned re-crawls excluded). On a
     family whose every member is pinned, the driver kernel's doc_nos
     map to doc_ids through the docmap pins, with no Spark job."""
-    family = list(zip(index.segments, index.excluded))
-    if all(seg.pinned for seg, _ in family):
+    if index.pinned:
         return local_rows_df(index.spark, "doc_id string", [
             (seg._docmap_dict[d][0],)
-            for seg, excl in family
+            for seg, excl in zip(index.segments, index.excluded)
             for d in _pinned_matches(seg, tokens)
             if d not in excl
         ])
@@ -246,6 +253,56 @@ def phrase_ranked(
         with_metadata=with_metadata,
         materialize=True,
     )
+
+
+def pinned_ranked(index, tokens: list[str], phrase_mode: bool):
+    """The rows of ``phrase_ranked`` (``phrase_mode``) or
+    ``disjunctive_ranked``, both with_metadata=True, over a family whose
+    every member is pinned: the candidates come from the pins and
+    ``rank_exact_local`` ranks them on the driver. Returns its
+    ``RankedRows``; no Spark job runs."""
+    from nadry_spark.operators.ranker import rank_exact_local
+
+    cand = _pinned_candidates(index, tokens, phrase_mode)
+    return rank_exact_local(index.spark, cand, tokens, phrase_mode=phrase_mode, with_metadata=True)
+
+
+def _pinned_candidates(index, tokens: list[str], phrase_mode: bool):
+    """The joined candidate long form rank_exact ranks — (term, doc_id,
+    url, tf, total_words, popularity_score), live docs only — read
+    from a pinned family: in phrase mode every phrase-matched doc once
+    per distinct token with tf 1 (phrase_ranked's cross join), else
+    the (term, doc_no, tf) rows decoded from the pinned blocks
+    (candidates_for)."""
+    import numpy as np
+    import pandas as pd
+
+    from nadry_spark.operators.codecs import explode_tf_batches
+
+    terms = sorted(set(tokens))
+    parts = []
+    for seg, excl in zip(index.segments, index.excluded):
+        if phrase_mode:
+            docs = np.array([d for d in _pinned_matches(seg, tokens) if d not in excl], dtype=np.int64)
+            part = pd.DataFrame({
+                "term": np.repeat(np.array(terms, dtype=object), len(docs)),
+                "doc_no": np.tile(docs, len(terms)),
+                "tf": 1,
+            })
+        else:
+            decoded = list(explode_tf_batches(blocks for _, blocks in seg.pinned_blocks(terms)))
+            if not decoded:
+                continue
+            part = pd.concat(decoded, ignore_index=True)
+            part = part[~part["doc_no"].isin(excl)]
+        if part.empty:
+            continue
+        # the docmap pin: (doc_id, url, title, total_words, popularity_score)
+        doc_id, url, _, words, popularity = zip(*map(seg._docmap_dict.__getitem__, part["doc_no"].tolist()))
+        parts.append(part.assign(doc_id=doc_id, url=url, total_words=words, popularity_score=popularity))
+    if not parts:
+        return pd.DataFrame(columns=["term", "doc_no", "tf", "doc_id", "url", "total_words", "popularity_score"])
+    return pd.concat(parts, ignore_index=True)
 
 
 def phrase_search(index: SegmentIndex, phrase: str, k: int = 10) -> DataFrame:

@@ -14,7 +14,9 @@ Ranker.Rank (api/SearchWrapper.java:123-220, nadry/ranker/Ranker.java:
    size, docLength = total_words (doc) / query length (query), idf =
    log10(N / (1 + df)) (Ranker.java:77-137).
 5. A10 relevance = raw dot product (cosine normalization is commented
-   out in the reference, Ranker.java:152 — faithfully NOT applied).
+   out in the reference, Ranker.java:152 — faithfully NOT applied),
+   summed per doc in term order so its last bit does not depend on
+   how the candidate rows are partitioned.
 6. A11 max-normalizations of popularity and relevance over candidates.
    Reference quirks at the zero boundary: max popularity == 0 gives
    0/0 = NaN in Java (Ranker.java:70-71) and the blended score becomes
@@ -34,13 +36,28 @@ left to AQE: for selective queries the candidate side lands under the
 broadcast threshold and AQE converts the shuffle join to a broadcast
 at runtime; for stopword-scale candidate sets a forced broadcast would
 OOM the executors, so no static hint is applied on purpose.
+
+Two executors of the same formulas: ``rank_exact`` (the Spark plan
+above) and ``rank_exact_local`` (numpy on the driver, for a candidate
+set read from the driver pins of a warmed segment family). They agree
+bit for bit: idf is ``StrictMath.log10``, the fdlibm function Spark's
+``log10`` runs (numpy's ``log10`` differs in the last ulp on ~1 in 4
+(N, df) pairs), every other step is one IEEE double operation in the
+same order, and both sum a doc's contributions in term order. The
+driver executor costs milliseconds where the Spark plan's
+localCheckpoint and broadcast chain costs ~1 s, so it is the serving
+path whenever the candidates come from pins; the pin byte gate bounds
+the candidate set it holds.
 """
 
 from __future__ import annotations
 
 from collections import Counter
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pandas as pd
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from nadry_spark.localrows import empty_df, local_rows_df
@@ -139,7 +156,12 @@ def rank_exact(
         .agg(
             F.first("url").alias("url"),
             F.first("popularity_score").alias("popularity_raw"),
-            F.sum("contrib").alias("relevance_raw"),
+            # sum(contrib) folded in term order (rank_exact_local's order)
+            F.aggregate(
+                F.array_sort(F.collect_list(F.struct("term", "contrib"))),
+                F.lit(0.0),
+                lambda acc, x: acc + x["contrib"],
+            ).alias("relevance_raw"),
             *meta_aggs,
         )
     )
@@ -196,6 +218,119 @@ def rank_exact(
         .withColumn("score", 0.7 * F.col("relevance") + 0.3 * F.col("popularity"))
     )
     return scored.orderBy(F.desc("score"), F.asc("doc_id"))
+
+
+def strict_log10(spark: SparkSession, x: float) -> float:
+    """log10 as Spark SQL computes it (java.lang.StrictMath, fdlibm)."""
+    return spark._jvm.java.lang.StrictMath.log10(float(x))
+
+
+def rank_exact_local(
+    spark: SparkSession,
+    candidates: pd.DataFrame,
+    query_tokens: list[str],
+    phrase_mode: bool = False,
+    with_metadata: bool = False,
+) -> "RankedRows":
+    """``rank_exact`` on the driver: the same formulas over a pandas
+    candidate long form (term, doc_id, url, tf, total_words,
+    popularity_score) — the frame rank_exact ranks after its doc-stats
+    join, one row per (term, doc). Returns the rows ``rank_exact(...)
+    .collect()`` returns, in its order and bit for bit, as a
+    ``RankedRows`` sequence. No Spark job runs; idf takes one JVM
+    ``StrictMath.log10`` call per distinct (N, df)."""
+    if candidates.empty:
+        return RankedRows(np.empty(0, dtype=np.int64), None)
+    query_bag = Counter(query_tokens)
+    query_len = float(sum(query_bag.values()))
+    doc_code, docs = pd.factorize(candidates["doc_id"], sort=True)
+    term_code, terms = pd.factorize(candidates["term"], sort=True)
+    n_docs = len(docs)
+
+    # A8: N = candidate count, DF(t) = distinct candidate docs per term
+    df_of = dict(zip(terms, np.bincount(
+        np.unique(term_code * n_docs + doc_code) // n_docs, minlength=len(terms)).tolist()))
+    log10_of: dict[int, float] = {}
+
+    def idf(df: int) -> float:
+        if df not in log10_of:
+            log10_of[df] = strict_log10(spark, n_docs / (1 + df))
+        return log10_of[df]
+
+    # A9: per-row query and doc TF-IDF, A10: their product
+    qtf = np.array([query_bag[t] for t in terms], dtype=np.float64)
+    t_idf = np.array([idf(df_of[t]) for t in terms], dtype=np.float64)
+    q_tfidf = (qtf / query_len) * t_idf
+    order = np.lexsort((term_code, doc_code))  # a doc's rows, term order
+    d_of, t_of = doc_code[order], term_code[order]
+    tf = (np.ones(len(order), dtype=np.float64) if phrase_mode
+          else candidates["tf"].to_numpy(np.float64)[order])
+    words = candidates["total_words"].to_numpy(np.float64)[order]
+    d_tfidf = (tf / words) * t_idf[t_of]
+    contrib = q_tfidf[t_of] * d_tfidf
+
+    # relevance_raw: a left fold from 0.0 over each doc's rows in term
+    # order (the j-th row of every doc is added in round j)
+    starts = np.searchsorted(d_of, np.arange(n_docs))
+    rank_in_doc = np.arange(len(order)) - starts[d_of]
+    rel_raw = np.zeros(n_docs)
+    for j in range(int(rank_in_doc.max()) + 1):
+        sel = rank_in_doc == j
+        rel_raw[d_of[sel]] = rel_raw[d_of[sel]] + contrib[sel]
+    first = order[starts]
+    pop_raw = candidates["popularity_score"].to_numpy(np.float64)[first]
+
+    # A11: max-normalizations with the NaN guards; Spark's max and ">"
+    # rank NaN above every number. A12: the blend.
+    def norm(raw: np.ndarray, otherwise):
+        top = np.nan if np.isnan(raw).any() else raw.max()
+        return raw / top if np.isnan(top) or top > 0 else otherwise
+
+    relevance = norm(rel_raw, rel_raw)
+    popularity = norm(pop_raw, np.zeros(n_docs))
+    score = 0.7 * relevance + 0.3 * popularity
+    # (score desc, NaN first as in Spark, doc_id asc); the doc codes
+    # are in doc_id order
+    nan = np.isnan(score)
+    ranked = np.lexsort((np.arange(n_docs), np.where(nan, 0.0, -score), ~nan))
+
+    urls = candidates["url"].to_numpy(object)[first]
+    words_first = candidates["total_words"].to_numpy()[first]
+    tf_rows = tf.astype(np.int64)
+    q_vec = {t: (c / query_len) * idf(df_of.get(t, 0)) for t, c in query_bag.items()}
+    ends = np.append(starts[1:], len(order))
+
+    def row(d: int) -> Row:
+        out = dict(doc_id=docs[d], url=urls[d], relevance=float(relevance[d]),
+                   popularity=float(popularity[d]))
+        if with_metadata:
+            rows = range(starts[d], ends[d])
+            out.update(
+                total_words=int(words_first[d]),
+                term_frequency={terms[t_of[r]]: int(tf_rows[r]) for r in rows},
+                doc_tfidf={terms[t_of[r]]: float(d_tfidf[r]) for r in rows},
+                query_tfidf=dict(q_vec),
+            )
+        return Row(**out, score=float(score[d]))
+    return RankedRows(ranked, row)
+
+
+class RankedRows(Sequence):
+    """``rank_exact_local``'s ranked rows: ``len`` is the candidate
+    count and a row (a pyspark ``Row``, as ``collect()`` returns) is
+    built when it is read, so a page costs its own rows only."""
+
+    def __init__(self, order: np.ndarray, row):
+        self._order = order
+        self._row = row
+
+    def __len__(self) -> int:
+        return len(self._order)
+
+    def __getitem__(self, i):
+        if isinstance(i, slice):
+            return [self._row(int(d)) for d in self._order[i]]
+        return self._row(int(self._order[i]))
 
 
 def search(

@@ -9,10 +9,14 @@ Reproduces api/SearchController.java:53-111 + SearchWrapper:
    76-97 — quirk preserved: the cache stores one page's enrichment and
    ignores page/limit drift on hit);
 3. disjunctive rank (exact reference formulas) or BM25 top-k;
-4. pagination AFTER full ranking (SearchWrapper.java:649-666) — but
-   computed distributed: totalResults via count(), only the requested
-   page's rows cross the driver boundary (offset/limit), never the
-   full ranked candidate set;
+4. pagination AFTER full ranking (SearchWrapper.java:649-666). Over a
+   family whose every member warm() pinned, exact-mode and phrase
+   ranking run on the driver (``pinned_ranked``: candidates from the
+   pins, ``rank_exact_local``): totalResults is the ranked rows'
+   count and the page is a slice of them, with no Spark job.
+   Otherwise it is computed distributed: totalResults via count(),
+   only the requested page's rows cross the driver boundary
+   (offset/limit), never the full ranked candidate set;
 5. late enrichment of the current page only (J4 + F15, :500-557):
    over a family whose every member warm() pinned, title and content
    come from the driver pins and the snippet is
@@ -45,6 +49,7 @@ from nadry_spark.operators.phrase import (
     disjunctive_ranked,
     extract_quoted_phrases,
     phrase_ranked,
+    pinned_ranked,
 )
 from nadry_spark.sources.segments import MultiSegmentIndex
 
@@ -118,7 +123,14 @@ class QueryEngine:
 
             topk = bm25_topk_multi if isinstance(self.index, MultiSegmentIndex) else bm25_topk
             return topk(self.index, "", k=need, mode="taat", tokens=tokens)
+        if self.index.pinned:
+            return pinned_ranked(self.index, tokens, phrase_mode=False)
         return disjunctive_ranked(self.index, tokens, with_metadata=True)
+
+    def _rank_phrase(self, tokens: list[str]):
+        if self.index.pinned:
+            return pinned_ranked(self.index, tokens, phrase_mode=True)
+        return phrase_ranked(self.index, tokens, with_metadata=True)
 
     def search(self, query: str, page: int = 0, page_size: int = 10) -> dict:
         """Full serving path; returns the reference's result envelope."""
@@ -153,37 +165,36 @@ class QueryEngine:
                 # reference delegates to searchWithMetadata(tokens[0]),
                 # re-tokenizing the stem (SearchWrapper.java:282-284)
                 tokens = tokenize(tokens[0])
-                ranked_df = self._rank_disjunctive(tokens, need) if tokens else None
+                ranked = self._rank_disjunctive(tokens, need) if tokens else None
                 if self.scoring == "bm25":
                     topk_bound = need
             elif tokens:
-                ranked_df = phrase_ranked(self.index, tokens, with_metadata=True)
+                ranked = self._rank_phrase(tokens)
             else:
-                ranked_df = None
+                ranked = None
         else:
             tokens = meta_tokens
-            ranked_df = self._rank_disjunctive(tokens, need) if tokens else None
+            ranked = self._rank_disjunctive(tokens, need) if tokens else None
             if self.scoring == "bm25":
                 topk_bound = need
-        if not tokens or ranked_df is None:
+        if not tokens or ranked is None:
             envelope = self._envelope([], 0, page, page_size, meta_tokens, t0)
             self._attach_did_you_mean(envelope, tokens)
             self._cache_put(search_query, envelope)
             return envelope
 
-        # totalResults + one page. When the frame is KNOWN bounded —
-        # the bm25 fast path tops out at `need` rows, and count-up-to
-        # mode bounds interest at count_cap+1 — ONE collect of the
-        # bounded frame replaces persist + count job + page job (3
-        # Spark jobs -> 1; the count/page split only pays off when the
-        # frame is unbounded). totalResults/page semantics are
-        # identical: both formulations see the same deterministic
-        # (score desc, tie-break) order, and total stays
-        # min(candidates, bounds) either way. Driver residency is
-        # O(need) / O(count_cap) rows — the bound the caller opted
-        # into, not the corpus.
-        if topk_bound is not None:
-            rows = ranked_df.collect()  # <= need rows by construction
+        # totalResults + one page. Rows ranked on the driver (a pinned
+        # family's exact or phrase ranking) are taken as they are: the
+        # count is their length, the page a slice. A frame KNOWN
+        # bounded — the bm25 fast path tops out at `need` rows — is
+        # collected once, which replaces persist + count job + page job
+        # (3 Spark jobs -> 1; the count/page split only pays off when
+        # the frame is unbounded), and count-up-to mode bounds interest
+        # at count_cap+1. totalResults/page semantics are identical on
+        # every branch: each sees the same deterministic (score desc,
+        # tie-break) order, and total stays min(candidates, bounds).
+        if topk_bound is not None or not isinstance(ranked, DataFrame):
+            rows = ranked.collect() if isinstance(ranked, DataFrame) else ranked
             total = len(rows)
             if self.count_cap is not None:
                 total = min(total, self.count_cap + 1)
@@ -191,21 +202,21 @@ class QueryEngine:
         elif self.count_cap is not None:
             cap1 = self.count_cap + 1
             n_fetch = max(cap1, (page + 1) * page_size)
-            rows = ranked_df.limit(n_fetch).collect()
+            rows = ranked.limit(n_fetch).collect()
             total = min(len(rows), cap1)
             page_rows = rows[page * page_size : (page + 1) * page_size]
         else:
             # reference-exact mode needs the TRUE candidate count: keep
             # the two-job shape off one cached materialization — at no
             # point does more than page_size rows reach the driver
-            ranked_df = ranked_df.persist()
+            ranked = ranked.persist()
             try:
-                total = ranked_df.count()
+                total = ranked.count()
                 page_rows = (
-                    ranked_df.offset(page * page_size).limit(page_size).collect()
+                    ranked.offset(page * page_size).limit(page_size).collect()
                 )
             finally:
-                ranked_df.unpersist()
+                ranked.unpersist()
 
         enriched = self._enrich(page_rows, tokens)
         envelope = self._envelope(

@@ -518,7 +518,7 @@ def _write_shards(
     t0 = time.time()
     encode = _encode_blocks_stream(meta["avgdl"], meta["k1"], meta["b"], meta["block_size"])
     (
-        spark.read.parquet(pos_dir)
+        _read_parquet(spark, pos_dir)
         .where(F.col("shard").isin(shards))
         .select(
             "shard", "term", "doc_no",
@@ -534,7 +534,7 @@ def _write_shards(
     timed("postings", t0)
     # per-shard metrics -> manifest (lineage + metrics per north_rule)
     stats = (
-        spark.read.parquet(post_dir)
+        _read_parquet(spark, post_dir)
         .where(F.col("shard").isin(shards))
         .groupBy("shard")
         .agg(
@@ -564,7 +564,7 @@ def _write_shards(
 def _write_terms(spark: SparkSession, out_dir: str) -> None:
     """The terms dictionary (term, df, n_blocks) over all postings."""
     (
-        spark.read.parquet(os.path.join(out_dir, "postings"))
+        _read_parquet(spark, os.path.join(out_dir, "postings"))
         .groupBy("term")
         .agg(F.sum("n_docs").alias("df"), F.count("*").alias("n_blocks"))
         .repartitionByRange(4, "term")
@@ -689,7 +689,7 @@ def build_segments(
         _write_meta(out_dir, meta)
         manifest = read_manifest(out_dir)
 
-    docs_tokens = spark.read.parquet(os.path.join(out_dir, "docs_tokens"))
+    docs_tokens = _read_parquet(spark, os.path.join(out_dir, "docs_tokens"))
 
     # ---- shard groups (resumable unit) ----
     # The index build is SHUFFLE-FREE per shard: docs are already
@@ -803,6 +803,15 @@ def _merge_segments(
 # ---------------------------------------------------------------------------
 
 
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """A segment table (or any parquet dir this module wrote) with its
+    schema read from one parquet footer on the driver: Spark's own
+    schema inference runs a job on every read (~100 ms each on a
+    1000-page segment, local[2]), and the build and the serving
+    handles read their own tables many times."""
+    return spark.read.schema(from_arrow_schema(pq.ParquetDataset(path).schema)).parquet(path)
+
+
 class _Family:
     """The serving API of a segment family, written once: ``segments``
     (ordered oldest first) and ``excluded`` (per member, the doc_nos a
@@ -811,6 +820,12 @@ class _Family:
     the incremental family. Doc spaces are disjoint per member (each
     live doc_id exists in exactly one live member), so the unions below
     have no duplicates."""
+
+    @property
+    def pinned(self) -> bool:
+        """True when warm() pinned every member: the family is served
+        on the driver."""
+        return all(s.pinned for s in self.segments)
 
     def _live(self, i: int, df: DataFrame) -> DataFrame:
         """Drop member i's tombstoned doc_nos from a frame."""
@@ -830,7 +845,7 @@ class _Family:
         serving path). A family without tombstones counts nothing."""
         missing = [t for t in set(terms) if t not in self._df_corr]
         if missing and any(self.excluded):
-            if all(s.pinned for s in self.segments):
+            if self.pinned:
                 counts = dict.fromkeys(missing, 0)
                 for seg, excl in zip(self.segments, self.excluded):
                     if not excl:
@@ -893,7 +908,7 @@ class _Family:
         """``content_for`` on the driver: {doc_id: (title, content)} for
         the live copies of ``doc_ids``, read from the warm() pins, or
         None unless every member is pinned."""
-        if not all(s.pinned for s in self.segments):
+        if not self.pinned:
             return None
         out = {}
         for s, excl in zip(self.segments, self.excluded):
@@ -931,7 +946,8 @@ class SegmentIndex(_Family):
         self._cached: dict[str, DataFrame] = {}
         self._df_corr: dict[str, int] = {}  # df_corrections cache
         # driver pins (warm(), under DRIVER_PIN_MAX_BYTES): term -> stats,
-        # doc_no -> (doc_id, url, title), doc_id -> doc_no, doc_no ->
+        # doc_no -> (doc_id, url, title, total_words, popularity_score)
+        # (_PIN_DOCMAP_COLS), doc_id -> doc_no, doc_no ->
         # content, and per shard the posting blocks (pandas) and the
         # positions (Arrow), each as (shard, table, term run bounds)
         self._terms_dict: dict | None = None
@@ -993,8 +1009,8 @@ class SegmentIndex(_Family):
             t: {"df": df, "n_blocks": nb}
             for t, df, nb in zip(terms["term"], terms["df"], terms["n_blocks"])
         }
-        dm = read("docmap", ["doc_no", "doc_id", "url", "title"])
-        self._docmap_dict = dict(zip(dm["doc_no"], zip(dm["doc_id"], dm["url"], dm["title"])))
+        dm = read("docmap", list(("doc_no",) + _PIN_DOCMAP_COLS))
+        self._docmap_dict = dict(zip(dm["doc_no"], zip(*(dm[c] for c in _PIN_DOCMAP_COLS))))
         self._doc_nos = dict(zip(dm["doc_id"], dm["doc_no"]))
         content = read("docs_content", ["doc_no", "content"])
         self._content = dict(zip(content["doc_no"], content["content"]))
@@ -1022,12 +1038,10 @@ class SegmentIndex(_Family):
 
     def _table(self, name: str, table: str) -> DataFrame:
         """``name``'s Spark cache in the cached state, else ``table``'s
-        parquet, its schema read from a footer on the driver (Spark's
-        own schema inference runs a job, ~100 ms a read)."""
+        parquet (``_read_parquet``)."""
         if name in self._cached:
             return self._cached[name]
-        path = os.path.join(self.path, table)
-        return self.spark.read.schema(from_arrow_schema(pq.ParquetDataset(path).schema)).parquet(path)
+        return _read_parquet(self.spark, os.path.join(self.path, table))
 
     @property
     def blocks(self) -> DataFrame:
@@ -1055,7 +1069,7 @@ class SegmentIndex(_Family):
     def anchors(self) -> DataFrame:
         """(doc_no, term, tf, n_srcs) inbound-anchor terms in the
         index vocabulary (jobs/anchors.py backfill)."""
-        return self.spark.read.parquet(os.path.join(self.path, "anchors"))
+        return _read_parquet(self.spark, os.path.join(self.path, "anchors"))
 
     @property
     def docs_content(self) -> DataFrame:
@@ -1176,6 +1190,8 @@ class MultiSegmentIndex(_Family):
 
 
 _PIN_TABLES = ("terms", "docmap", "postings", "docs_content", "positions")
+# the docmap pin's value per doc_no, in this order
+_PIN_DOCMAP_COLS = ("doc_id", "url", "title", "total_words", "popularity_score")
 _PIN_COLS = ["term", "min_doc_no", "max_doc_no", "docs_bin", "tfs_bin", "dls_bin", "max_tfnorm"]
 _PIN_POS_COLS = ["term", "doc_no"] + [c for _, n, b in _POS_FIELDS for c in (n, b)]
 

@@ -286,3 +286,131 @@ def test_one_over_gate_member_serves_whole_family_distributed(spark, family_path
     assert fam.df_corrections(["news"]) == want_corr
     assert fam.pinned_content(["x"]) is None
     assert _jobs(spark, "mixed-family", lambda: QueryEngine(fam, scoring="bm25").search("news report"))
+
+
+# phrases the family holds (the re-crawled page's among them), next to
+# random 2-3 token ones from TERMS (repeated tokens and the missing term
+# included)
+PHRASES = st.one_of(
+    st.lists(st.sampled_from(TERMS), min_size=2, max_size=3),
+    st.sampled_from([["news", "report"], ["zzrecrawl", "marker", "news"], ["news", "zzrecrawl"],
+                     ["news", "news"], ["news", "zzznotaterm"]]),
+)
+
+
+@settings(max_examples=20, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    words=st.one_of(PHRASES.map(lambda w: f'"{" ".join(w)}"'),
+                    st.lists(st.sampled_from(TERMS), min_size=1, max_size=4).map(" ".join)),
+    page=st.integers(min_value=0, max_value=1),
+    i=st.sampled_from([0, 1]),
+)
+def test_phrase_and_exact_envelopes_identity(pinned, unpinned, words, page, i):
+    """Phrase and exact-mode envelopes of the driver ranking (pinned)
+    equal the Spark plan's (cached), whole envelopes, no tolerance."""
+    got = QueryEngine(pinned[i]).search(words, page=page, page_size=4)
+    want = QueryEngine(unpinned[i]).search(words, page=page, page_size=4)
+    assert _envelope(got) == _envelope(want), (i, words, page)
+
+
+def test_warmed_phrase_and_exact_search_run_no_job(spark, pinned):
+    """A warmed phrase search and a warmed exact-mode search rank on the
+    driver: 0 Spark jobs on a segment and on the tombstoned family."""
+    for i, name in ((0, "segment"), (1, "family")):
+        for scoring, q in (("bm25", '"news report"'), ("exact", '"news report"'),
+                           ("exact", "news report update")):
+            env = {}
+            jobs = _jobs(spark, f"rank-{name}-{scoring}-{len(q)}", lambda: env.update(
+                QueryEngine(pinned[i], scoring=scoring).search(q)))
+            assert env["totalResults"] > 0 and env["data"][0]["description"], (name, q)
+            assert jobs == [], (name, scoring, q)
+
+
+def _rank_both(spark, cand, tokens, phrase_mode=False, with_metadata=True):
+    """rank_exact (Spark) and rank_exact_local (driver) over the same
+    joined candidate rows (term, doc_id, url, tf, total_words,
+    popularity_score)."""
+    import pandas as pd
+
+    from nadry_spark.operators.ranker import rank_exact, rank_exact_local
+
+    cols = ["term", "doc_id", "url", "tf", "total_words", "popularity_score"]
+    pdf = pd.DataFrame(cand, columns=cols)
+
+    def rows(c):  # tuples, not pandas: a pandas NaN would reach Spark as NULL
+        return list(pdf[c].drop_duplicates().itertuples(index=False, name=None))
+
+    cand_df = spark.createDataFrame(rows(cols[:4]), "term string, doc_id string, url string, tf int")
+    stats = spark.createDataFrame(rows(cols[1:2] + cols[4:]),
+                                  "doc_id string, total_words long, popularity_score double")
+    want = rank_exact(spark, cand_df, stats, tokens, phrase_mode=phrase_mode,
+                      with_metadata=with_metadata).collect()
+    got = list(rank_exact_local(spark, pdf, tokens, phrase_mode=phrase_mode, with_metadata=with_metadata))
+    return got, want
+
+
+def test_nan_guards_all_zero_popularity_and_zero_relevance(spark):
+    """max popularity 0 pins popularity to 0.0; max relevance 0 (every
+    idf log10(1) = 0) passes relevance_raw through; both executors."""
+    # N = 4 and df = 3 for both terms
+    words = {"d1": 10, "d2": 5, "d3": 7, "d4": 9}
+    cand = [(t, d, f"u{d}", 2, words[d], 0.0)
+            for t, d in (("a", "d1"), ("a", "d2"), ("b", "d2"), ("a", "d3"), ("b", "d3"), ("b", "d4"))]
+    for meta in (False, True):
+        got, want = _rank_both(spark, cand, ["a", "b"], with_metadata=meta)
+        assert got == want
+        assert all(r["popularity"] == 0.0 and r["relevance"] == 0.0 and r["score"] == 0.0 for r in got)
+        assert [r["doc_id"] for r in got] == ["d1", "d2", "d3", "d4"]  # doc_id ties
+
+
+def test_nan_guards_single_candidate(spark):
+    """One candidate: N = 1, the max-normalizations divide by the doc's
+    own values (relevance 1.0), or pin popularity 0.0 when it is 0."""
+    for pop, want_pop in ((0.0, 0.0), (0.25, 1.0)):
+        for phrase in (False, True):
+            cand = [("a", "d1", "u1", 3, 11, pop), ("b", "d1", "u1", 1, 11, pop)]
+            got, want = _rank_both(spark, cand, ["a", "b", "a"], phrase_mode=phrase)
+            assert got == want
+            assert [(r["relevance"], r["popularity"]) for r in got] == [(1.0, want_pop)]
+
+
+def test_nan_popularity_orders_like_spark(spark):
+    """Spark's max and ">" rank NaN above every number: one NaN
+    popularity makes every score NaN, and the rows fall back to doc_id
+    order; the driver executor does the same."""
+    cand = [("a", "d2", "u2", 1, 5, float("nan")), ("a", "d1", "u1", 2, 5, 0.5), ("b", "d1", "u1", 1, 5, 0.5)]
+    got, want = _rank_both(spark, cand, ["a", "b"], with_metadata=False)
+    assert repr(got) == repr(want)  # NaN != NaN, so compare the reprs
+    assert [r["doc_id"] for r in got] == ["d1", "d2"] and all(r["score"] != r["score"] for r in got)
+
+
+def test_rank_exact_local_equals_spark_over_many_terms(spark):
+    """Many candidates, 4 terms (3+-term sums), popularity and total
+    words spread: rows equal, order and every double included."""
+    import random
+
+    rnd = random.Random(7)
+    cand = []
+    for d in range(60):
+        words, pop = rnd.randint(3, 400), rnd.choice([0.0, rnd.random()])
+        for t in rnd.sample(["a", "b", "c", "d"], rnd.randint(1, 4)):
+            cand.append((t, f"d{d:03d}", f"u{d}", rnd.randint(1, 9), words, pop))
+    for meta in (False, True):
+        got, want = _rank_both(spark, cand, ["a", "b", "c", "d", "b", "zz"], with_metadata=meta)
+        assert got == want and len(got) == 60
+
+
+def test_driver_idf_is_spark_log10_bit_for_bit(spark):
+    """The driver idf (StrictMath.log10) equals Spark SQL's log10 over a
+    grid of (N, df) — and numpy's log10 does not, on this grid."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from nadry_spark.operators.ranker import strict_log10
+
+    grid = [(n, df) for n in range(1, 121) for df in range(0, n + 1)]
+    sdf = spark.createDataFrame(grid, "n long, df long")
+    want = [r[0] for r in sdf.select(F.log10(F.col("n") / (1 + F.col("df")))).collect()]
+    got = [strict_log10(spark, n / (1 + df)) for n, df in grid]
+    assert got == want
+    assert any(np.log10(n / (1 + df)) != w for (n, df), w in zip(grid, want))
